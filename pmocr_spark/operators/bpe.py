@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import reliable_checkpoint
 from .graph import iter_checkpoint
 
 #: end-of-word marker appended as a standalone symbol (Sennrich '16
@@ -184,11 +185,7 @@ def learn_bpe(
     if vocab_partitions is not None:
         sy = sy.coalesce(vocab_partitions)
     if reliable is None:
-        import os as _os
-
-        reliable = _os.environ.get("PMOCR_RELIABLE_CHECKPOINT", "").lower() in (
-            "1", "true", "yes",
-        )
+        reliable = reliable_checkpoint()
     # round 6: LAZY localCheckpoint per merge (eager=False) — the next
     # iteration's argmax collect is the materializing action, so the
     # old eager materialization job per merge was pure scheduling

@@ -21,10 +21,10 @@ is a training-data-pipeline operator per the build brief.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import reliable_checkpoint
 
 
 def iter_checkpoint(df: DataFrame, reliable: bool | None = None) -> DataFrame:
@@ -49,11 +49,7 @@ def iter_checkpoint(df: DataFrame, reliable: bool | None = None) -> DataFrame:
     copies on HDFS/S3.
     """
     if reliable is None:
-        reliable = os.environ.get("PMOCR_RELIABLE_CHECKPOINT", "").lower() in (
-            "1",
-            "true",
-            "yes",
-        )
+        reliable = reliable_checkpoint()
     return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
 
 
@@ -118,9 +114,7 @@ def connected_components(
     together with sparkContext.setCheckpointDir.
     """
     if reliable is None:
-        reliable = os.environ.get("PMOCR_RELIABLE_CHECKPOINT", "").lower() in (
-            "1", "true", "yes",
-        )
+        reliable = reliable_checkpoint()
     base = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .filter(F.col("src") != F.col("dst"))

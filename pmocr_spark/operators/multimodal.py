@@ -482,11 +482,13 @@ def banded_hamming_pairs(
     key becomes (band, key, block_i, block_j): pair (a, b) meets in
     exactly one cell (block_i = g(a), block_j = g(b)), so the candidate
     set is IDENTICAL to the unsplit join (pinned by test) while the
-    per-task work drops to ~CAP². Cold buckets (the overwhelming
-    majority) take the original single-shuffle path via a broadcast
-    anti-join on the (tiny, frequency-capped-by-definition) hot-key
-    set; the only added cost is one map-side-combined (band, key) count
-    whose shuffle rows are 16-byte keys + counts."""
+    per-task work drops to ~CAP². Each bucket's member count n comes
+    from a count window partitioned by (band, key), which rides the
+    shuffle the self-join needs anyway: no separate count aggregate, no
+    join back to it, and the hash computes once. Cold buckets (n <= CAP,
+    the overwhelming majority) are filtered off that window and take the
+    original single-shuffle self-join; only hot-bucket rows pay the
+    extra 4-key block repartition."""
     width = 64 // bands
     mask = (1 << width) - 1
     bandcol = F.explode(

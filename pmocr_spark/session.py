@@ -74,6 +74,18 @@ def get_spark(
     return b.getOrCreate()
 
 
+def reliable_checkpoint() -> bool:
+    """Whether PMOCR_RELIABLE_CHECKPOINT is on (1/true/yes).
+
+    Iterative operators (connected components, BPE merges, PageRank) cut
+    their lineage every round. Off, they use executor-local
+    localCheckpoint, which a lost executor takes with it. On, they use
+    fault-tolerant DataFrame.checkpoint() into the directory set with
+    sparkContext.setCheckpointDir (HDFS/S3). Set it on every cluster run.
+    """
+    return os.environ.get("PMOCR_RELIABLE_CHECKPOINT", "").lower() in ("1", "true", "yes")
+
+
 def _parse_cores(master: str) -> int:
     if master.startswith("local["):
         inner = master[6:-1]

@@ -195,6 +195,22 @@ def test_cli_text_index_lifecycle(spark, docs_df, tmp_path):
     # query 0 = "quick fox": doc 0 (both terms) first
     assert min(by_q[0], key=lambda r: r["rk"])["doc_id"] == 0
     assert all(len(v) <= 3 for v in by_q.values())
+    # --append-text-index: build over one half, append the other half;
+    # --search-text then answers exactly like the index over all docs
+    h1, h2 = str(tmp_path / "h1.parquet"), str(tmp_path / "h2.parquet")
+    docs_df.filter("doc_id < 3").write.parquet(h1)
+    docs_df.filter("doc_id >= 3").write.parquet(h2)
+    grown = str(tmp_path / "cli_tix_grown")
+    cli.main(["--build-text-index", grown, "--input", h1, "--master", "local[2]"])
+    cli.main(["--append-text-index", grown, "--input", h2, "--master", "local[2]"])
+    out2 = str(tmp_path / "hits_grown")
+    cli.main([
+        "--search-text", grown, "--query", "quick fox, brown honey",
+        "--output", out2, "--search-topk", "3", "--master", "local[2]",
+    ])
+    assert {tuple(r) for r in spark.read.parquet(out2).collect()} == {
+        tuple(r) for r in hits
+    }
     # validation: search knobs outside --search-text fail fast
     import pytest as _pytest
     with _pytest.raises(SystemExit):
