@@ -89,6 +89,15 @@ def checkpoint_rows(
     )
 
 
+def _fs(spark: SparkSession, path: str, *more: str) -> tuple:
+    """(Hadoop FileSystem of `path`, Path(path), Path(m) for m in more):
+    scheme-agnostic file access (file:, hdfs://, s3a://, ...) through the
+    session's Hadoop config. A scheme Hadoop cannot resolve raises here,
+    never reads as empty."""
+    hps = [spark._jvm.org.apache.hadoop.fs.Path(p) for p in (path, *more)]  # noqa: SLF001
+    return (hps[0].getFileSystem(spark._jsc.hadoopConfiguration()), *hps)  # noqa: SLF001
+
+
 def read_checkpoint(spark: SparkSession, path: str) -> DataFrame | None:
     """Load the checkpoint table, or None on first run.
 
@@ -112,16 +121,8 @@ def read_checkpoint(spark: SparkSession, path: str) -> DataFrame | None:
             # treating that as 'first run' would silently reprocess the
             # whole corpus and drop all retry/quarantine history
             bak = f"{path}.compact.bak"
-            try:
-                jvm = spark._jvm  # noqa: SLF001
-                hp = jvm.org.apache.hadoop.fs.Path(bak)
-                fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
-                bak_exists = bool(fs.exists(hp))
-            except Exception:  # noqa: BLE001 — non-JVM-resolvable scheme
-                import os
-
-                bak_exists = os.path.exists(bak)
-            if bak_exists:
+            fs, hp = _fs(spark, bak)
+            if fs.exists(hp):
                 raise RuntimeError(
                     f"lineage table {path!r} is missing but {bak!r} exists — "
                     "a compaction was interrupted between its two renames. "
@@ -247,26 +248,23 @@ def replace_dir(spark: SparkSession, df: DataFrame, path: str, tag: str = ".swap
     happens BEFORE the (expensive) tmp write, and the tmp is removed on
     every failure path so no run leaves both artifacts behind."""
     tmp, bak = f"{path}{tag}.tmp", f"{path}{tag}.bak"
-    jvm = spark._jvm  # noqa: SLF001
-    conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
-    hp = jvm.org.apache.hadoop.fs.Path
-    fs = hp(path).getFileSystem(conf)
-    if fs.exists(hp(bak)):
+    fs, hp, htmp, hbak = _fs(spark, path, tmp, bak)
+    if fs.exists(hbak):
         raise RuntimeError(
             f"{bak} exists — a previous swap did not finish; "
             "restore or remove it before retrying"
         )
-    if fs.exists(hp(tmp)):
-        fs.delete(hp(tmp), True)  # orphan from a crashed run
+    if fs.exists(htmp):
+        fs.delete(htmp, True)  # orphan from a crashed run
     df.write.mode("overwrite").parquet(tmp)
-    if not fs.rename(hp(path), hp(bak)):
-        fs.delete(hp(tmp), True)
+    if not fs.rename(hp, hbak):
+        fs.delete(htmp, True)
         raise RuntimeError(f"could not move {path} aside to {bak}")
-    if not fs.rename(hp(tmp), hp(path)):
-        fs.rename(hp(bak), hp(path))  # roll back
-        fs.delete(hp(tmp), True)
+    if not fs.rename(htmp, hp):
+        fs.rename(hbak, hp)  # roll back
+        fs.delete(htmp, True)
         raise RuntimeError(f"could not move new table into {path}")
-    fs.delete(hp(bak), True)
+    fs.delete(hbak, True)
 
 
 def write_sidecar(spark: SparkSession, path: str, name: str, meta: dict) -> None:
@@ -277,9 +275,7 @@ def write_sidecar(spark: SparkSession, path: str, name: str, meta: dict) -> None
     parameters are part of its identity stores them this way."""
     import json
 
-    jvm = spark._jvm  # noqa: SLF001
-    hp = jvm.org.apache.hadoop.fs.Path(f"{path}/{name}")
-    fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
+    fs, hp = _fs(spark, f"{path}/{name}")
     out = fs.create(hp, True)
     try:
         out.write(bytearray(json.dumps(meta).encode()))
@@ -293,14 +289,12 @@ def read_sidecar(spark: SparkSession, path: str, name: str) -> dict | None:
     degrade into 'no params recorded')."""
     import json
 
-    jvm = spark._jvm  # noqa: SLF001
-    hp = jvm.org.apache.hadoop.fs.Path(f"{path}/{name}")
-    fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
+    fs, hp = _fs(spark, f"{path}/{name}")
     if not fs.exists(hp):
         return None
     stream = fs.open(hp)
     try:
-        raw = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+        raw = bytes(spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))  # noqa: SLF001
     finally:
         stream.close()
     return json.loads(raw.decode())
@@ -311,9 +305,7 @@ def dir_has_data(spark: SparkSession, path: str) -> bool:
     sidecars)? The explicit-probe replacement for try/except around a
     read — a bare except turns ANY read failure (corrupt footer,
     transient FS error, permissions) into 'nothing persisted yet'."""
-    jvm = spark._jvm  # noqa: SLF001
-    hp = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
+    fs, hp = _fs(spark, path)
     if not fs.exists(hp):
         return False
     for st in fs.listStatus(hp):

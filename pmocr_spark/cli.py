@@ -335,17 +335,17 @@ def build_parser() -> argparse.ArgumentParser:
         "--transcribe-audio", action="store_true",
         help="maintenance mode (standalone): full audio decode over the --blobs table "
         "(operators/multimodal.audio_transcribe: synthetic codec with frame/parity "
-        "validation; a real ASR engine slots into decode_audio_real) — writing (media_ref, "
-        "text, sample_rate, duration_sec, error) to --output; corrupted blobs land in the "
-        "error column, never fail the run",
+        "validation; a real decoder plugs into the pipeline through engines.register_engine) "
+        "— writing (media_ref, text, sample_rate, duration_sec, error) to --output; corrupted "
+        "blobs land in the error column, never fail the run",
     )
     p.add_argument(
         "--transcribe-video", action="store_true",
         help="maintenance mode (standalone): full video decode over the --blobs table "
         "(operators/multimodal.video_transcribe: per-frame OCR + held-scene collapse; a real "
-        "captioning engine slots into decode_video_real) — writing (media_ref, text, fps, "
-        "n_frames, duration_sec, error) to --output; corrupted blobs land in the error "
-        "column, never fail the run",
+        "decoder plugs into the pipeline through engines.register_engine) — writing "
+        "(media_ref, text, fps, n_frames, duration_sec, error) to --output; corrupted blobs "
+        "land in the error column, never fail the run",
     )
     p.add_argument(
         "--train-quality", action="store_true",
@@ -1627,7 +1627,7 @@ def _transcribe(spark, args, what: str) -> None:
     """--transcribe-audio / --transcribe-video: decode every --blobs row."""
     from .operators import multimodal
 
-    decode = getattr(multimodal, f"{what}_transcribe")
+    decode = {"audio": multimodal.audio_transcribe, "video": multimodal.video_transcribe}[what]
     blobs = spark.read.parquet(args.blobs)
     out = blobs.select("media_ref", decode(F.col("content")).alias("t")).select(
         "media_ref", "t.*"
@@ -2407,19 +2407,19 @@ def _optimize_layout(spark, args) -> None:
 
 def _compact_output(spark, args) -> None:
     import math
-    import os
-    from urllib.parse import urlparse
+
+    from .partitioning import input_size
 
     df = spark.read.option("recursiveFileLookup", "true").parquet(args.input)
-    in_files = df.inputFiles()
     # size the output from the INPUT bytes (compression ratio is
-    # preserved by a rewrite of the same rows); at cluster scale
-    # the FS listing already carries sizes — locally, stat them
-    total = 0
-    for f in in_files:
-        p = urlparse(f).path
-        if os.path.exists(p):
-            total += os.path.getsize(p)
+    # preserved by a rewrite of the same rows)
+    size = input_size(df)
+    if size is None:
+        raise SystemExit(
+            f"pmocr-spark: --compact-output cannot size the input files under {args.input} "
+            "(it stats them on the local file system)"
+        )
+    total = size.bytes
     target_mb = args.target_file_mb if args.target_file_mb is not None else 128
     n_files = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
     # deterministic row->file assignment: hash-repartition + sort
@@ -2429,7 +2429,7 @@ def _compact_output(spark, args) -> None:
     out = df.repartition(n_files, F.col(key)).sortWithinPartitions(key)
     n = _write(spark, out, args.output).count()
     print(
-        f"pmocr-spark: compacted {len(in_files)} files "
+        f"pmocr-spark: compacted {size.files} files "
         f"({total / 1048576:.1f} MB) into {n_files} at {args.output} "
         f"({n} rows, key={key})"
     )

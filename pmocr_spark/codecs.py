@@ -29,7 +29,6 @@ from __future__ import annotations
 
 import struct
 import zlib
-from dataclasses import dataclass
 
 import numpy as np
 
@@ -59,9 +58,9 @@ IMAGE_KINDS = tuple(k for k in MEDIA_KINDS if k != "pdf")
 # routed through the same fused decode UDF by container magic. ONLY the
 # kind this engine can actually decode is allow-listed — admitting
 # 'mp3'/'flac' here would flip such docs from done-with-skipped-span to
-# failed (decode_blob has no path for them; real containers belong to
-# the guarded multimodal.decode_audio_real hook, and a deployment that
-# installs it should extend this tuple alongside).
+# failed (decode_blob has no path for them; a deployment that registers
+# a real decoder with engines.register_engine should extend this tuple
+# alongside).
 AUDIO_KINDS = ("wav",)
 
 
@@ -292,9 +291,7 @@ def encode_corrupt(seed_text: str) -> bytes:
 # hallucinated through). Every byte derives from a PRNG seeded on the
 # payload text — encode/decode round-trips are reproducible on any
 # executor. Container: AUDIO_MAGIC + <IQ (sample_rate, n_samples) +
-# n_samples little-endian int16 samples. A header with n_samples but no
-# payload is still parseable METADATA (multimodal.audio_metadata reads
-# headers only — cheap at scan time), while decode_audio validates the
+# n_samples little-endian int16 samples; decode_audio validates the
 # full payload.
 
 AUDIO_MAGIC = b"PMAU"
@@ -370,19 +367,17 @@ def decode_audio(blob: bytes) -> tuple[str, int, int]:
 # — the static-scene shape that makes frame sampling and transcription
 # meaningful. Container: VIDEO_MAGIC + <II (fps, n_frames) + per frame
 # <I length + an IMG-container payload (so frames decode through the
-# SAME M1→M3 chain as pages, and frame_sample can emit stored frames
-# without re-encoding). The 12-byte header alone is parseable METADATA
-# (multimodal.video_metadata — scan-time pass); decode_video validates
-# every frame; transcription collapses consecutive duplicate frames
+# SAME M1→M3 chain as pages). decode_video validates every frame;
+# transcription collapses consecutive duplicate frames
 # (the held scene transcribes once). Corruption inside any frame fails
 # loudly through the glyph parity checks — error-as-data upstream.
 
 VIDEO_MAGIC = b"PMVI"
 VIDEO_FPS = 24
 #: the one video container the engine decodes natively (the synthetic
-#: codec); mp4/mkv belong to the guarded real-lib hook
-#: (multimodal.decode_video_real) and are NOT allow-listed — routing
-#: them here would flip docs from done-with-skipped-span to failed.
+#: codec); mp4/mkv need a real decoder (engines.register_engine) and
+#: are NOT allow-listed — routing them here would flip docs from
+#: done-with-skipped-span to failed.
 VIDEO_KINDS = ("avi",)
 
 
@@ -446,34 +441,6 @@ def transcribe_video(blob: bytes) -> tuple[str, int, int]:
     texts, fps, n = decode_video(blob)
     caps = [t for i, t in enumerate(texts) if i == 0 or t != texts[i - 1]]
     return "\n".join(caps), fps, n
-
-
-def video_frames(blob: bytes) -> tuple[list[bytes], int]:
-    """Split a video container into its stored frame payloads (each an
-    IMG container, emitted WITHOUT re-encoding) -> (frames, fps). Used
-    by multimodal.frame_sample; validates structure but does not decode
-    pixels — sampling 1-in-N frames at 100 TB must not pay N decodes."""
-    b = bytes(blob)
-    if b[:4] != VIDEO_MAGIC:
-        raise CodecError("bad video magic")
-    if len(b) < 12:
-        raise CodecError("truncated video header")
-    fps, n = struct.unpack("<II", b[4:12])
-    off = 12
-    frames: list[bytes] = []
-    for _ in range(n):
-        if off + 4 > len(b):
-            raise CodecError("truncated video frame table")
-        (flen,) = struct.unpack("<I", b[off : off + 4])
-        off += 4
-        frame = b[off : off + flen]
-        off += flen
-        if len(frame) != flen:
-            raise CodecError("truncated video frame")
-        frames.append(frame)
-    if off != len(b):
-        raise CodecError("trailing bytes after video frames")
-    return frames, int(fps)
 
 
 # ---------------------------------------------------------------- decode stages
@@ -763,13 +730,6 @@ def recognize_block(bands: list[np.ndarray]) -> list[str]:
     return out
 
 
-def recognize_line(band: np.ndarray) -> str:
-    """M3b — decode one GLYPH_H-row band back to characters (the
-    single-line view of recognize_block)."""
-    out = recognize_block([band])
-    return out[0] if out else ""
-
-
 def recognize_words(blob: bytes) -> list[tuple[int, int, str, int, int, int, int]]:
     """M3c — hOCR-style word geometry: decode a media blob and report
     every word with its bounding box in integer pixel coordinates.
@@ -1046,13 +1006,3 @@ def csv_hack(text: str) -> str:
 
     return re.sub("  +", ";", text)
 
-
-# ---------------------------------------------------------------- dataclass
-
-
-@dataclass(frozen=True)
-class DecodedSpan:
-    order: int
-    kind: str            # always 'text' post-OCR
-    text: str
-    media_ref: str | None  # provenance for OCRed spans, None for passthrough

@@ -1,7 +1,9 @@
-"""Scalar/string function library (SURVEY.md §2.4 X1-X10).
+"""Scalar/string function library (SURVEY.md §2.4).
 
-Each pmOCR helper re-expressed as a Catalyst Column expression (JVM-side,
-codegen'd — never a Python UDF). Citations are to /root/reference/.
+Catalyst Column expressions (JVM-side, codegen'd — never a Python UDF,
+nfc_normalize excepted). Of pmOCR's generic ofunctions.sh helpers only
+the ones the engine calls are carried (X1 csv_hack, F7 output_name),
+the way pmOCR's merge.sh ships only the library functions its core uses.
 """
 
 from __future__ import annotations
@@ -14,83 +16,6 @@ def csv_hack(col) -> Column:
     """X1 — runs of >=2 spaces -> ';' (pmocr.sh:2017/2031; the sed regex
     `s/   */;/g` matches 2+, not the comment's claimed 4+)."""
     return F.regexp_replace(col, "  +", ";")
-
-
-def strip_quotes(col) -> Column:
-    """X2 — StripSingleQuotes/StripDoubleQuotes/StripQuotes
-    (pmocr.sh:1240-1275): remove leading/trailing single or double quotes."""
-    return F.regexp_replace(col, "^['\"]|['\"]$", "")
-
-
-def escape_spaces(col) -> Column:
-    """X2 — EscapeSpaces (pmocr.sh:1260): backslash-escape spaces."""
-    return F.regexp_replace(col, " ", r"\\ ")
-
-
-def url_encode(col) -> Column:
-    """X3 — UrlEncode (pmocr.sh:1347-1358)."""
-    return F.url_encode(col)
-
-
-def url_decode(col) -> Column:
-    """X3 — UrlDecode (pmocr.sh:1360-1370)."""
-    return F.url_decode(col)
-
-
-def join_string(arr_col, sep: str = ",") -> Column:
-    """X4 — joinString (pmocr.sh:142-144): array -> delimited string."""
-    return F.array_join(arr_col, sep)
-
-
-def is_integer(col) -> Column:
-    """X5 — IsInteger (pmocr.sh:305-322): strict integer predicate."""
-    return col.rlike("^-?[0-9]+$")
-
-
-def is_numeric(col) -> Column:
-    """X5 — IsNumeric (pmocr.sh:1278-1301): decimal predicate."""
-    return col.rlike(r"^-?[0-9]+(\.[0-9]+)?$")
-
-
-def human_to_numeric(col) -> Column:
-    """X6 — HumanToNumeric (pmocr.sh:1305-1332): '5G' -> kilobytes.
-
-    Supports K/M/G/T/P suffixes (binary multiples of 1024, result in KB,
-    like the reference's awk table)."""
-    num = F.regexp_extract(col, r"^([0-9]+(?:\.[0-9]+)?)", 1).cast("double")
-    suffix = F.upper(F.regexp_extract(col, r"([KMGTP])B?$", 1))
-    mult = (
-        F.when(suffix == "K", F.lit(1.0))
-        .when(suffix == "M", F.lit(1024.0))
-        .when(suffix == "G", F.lit(1024.0**2))
-        .when(suffix == "T", F.lit(1024.0**3))
-        .when(suffix == "P", F.lit(1024.0**4))
-        .otherwise(F.lit(1.0 / 1024.0))  # bare bytes -> KB
-    )
-    return (num * mult).alias("kb")
-
-
-def ver_comp(a, b) -> Column:
-    """X7 — VerComp (pmocr.sh:1502-1542): dotted version compare.
-
-    Returns 0 if equal, 1 if a > b, 2 if a < b (the reference's exact
-    return convention). Compares up to 6 dot components numerically by
-    zero-padding each component to 9 digits and comparing the
-    concatenation lexicographically."""
-
-    def norm(c):
-        padded = F.transform(
-            F.split(c, r"\."), lambda x: F.lpad(F.regexp_replace(x, "[^0-9]", ""), 9, "0")
-        )
-        return F.rpad(F.array_join(padded, ""), 54, "0")
-
-    na, nb = norm(a), norm(b)
-    return F.when(na == nb, 0).when(na > nb, 1).otherwise(2)
-
-
-def check_rfc822(col) -> Column:
-    """X8 — CheckRFC822 (pmocr.sh:1335-1344): email shape predicate."""
-    return col.rlike(r"^[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}$")
 
 
 #: query parameters dropped by canonical_url — click-tracking noise that
@@ -262,11 +187,6 @@ def nfc_normalize(col) -> Column:
         "string",
     )
     return _nfc(F.col(col) if isinstance(col, str) else col)
-
-
-def array_contains(arr_col, needle) -> Column:
-    """X9 — ArrayContains (pmocr.sh:1374-1389)."""
-    return F.array_contains(arr_col, needle)
 
 
 def output_name(

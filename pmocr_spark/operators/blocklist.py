@@ -24,6 +24,8 @@ dot-separated labels (~5), so the match is
   matches back; matched categories are collected per doc. At 10^12
   docs the explode is bounded x5 and the join is map-side; the one
   shuffle keys on the same doc_id the pipeline already partitions by.
+  No engine path calls it yet; the tests use it to cross-check the
+  literal regime.
 """
 
 from __future__ import annotations

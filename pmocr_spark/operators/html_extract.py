@@ -546,52 +546,3 @@ def extract_links(doc: str) -> list[str]:
     c.close()
     return c.links
 
-
-class _AnchorCollector(HTMLParser):
-    """Collect (href, anchor_text) pairs in document order — the raw
-    material of the anchor-text table (how the web describes a page;
-    the classic off-page relevance signal search stacks aggregate per
-    target). Same href admission rules as _LinkCollector; text is the
-    whitespace-normalized character data between <a> and </a> (nested
-    markup contributes its text; an unclosed <a> closes at EOF)."""
-
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.anchors: list[tuple[str, str]] = []
-        self._href: str | None = None
-        self._buf: list[str] = []
-
-    def _flush(self) -> None:
-        if self._href is not None:
-            self.anchors.append((self._href, " ".join("".join(self._buf).split())))
-        self._href, self._buf = None, []
-
-    def handle_starttag(self, tag, attrs):
-        if tag != "a":
-            return
-        self._flush()  # nested/unclosed <a>: close the previous one
-        href = next((v for k, v in attrs if k == "href" and v), None)
-        if not href or href.startswith("#") or href.lower().startswith("javascript:"):
-            return
-        self._href = href
-
-    def handle_endtag(self, tag):
-        if tag == "a":
-            self._flush()
-
-    def handle_data(self, data):
-        if self._href is not None:
-            self._buf.append(data)
-
-    def close(self):
-        super().close()
-        self._flush()
-
-
-def extract_anchors(doc: str) -> list[tuple[str, str]]:
-    """All (href, anchor_text) pairs of an HTML document, in document
-    order — feeds operators/linkgraph.anchors_from_html."""
-    c = _AnchorCollector()
-    c.feed(doc or "")
-    c.close()
-    return c.anchors

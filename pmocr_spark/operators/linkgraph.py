@@ -99,62 +99,6 @@ def edges_from_html(
     )
 
 
-def anchors_from_html(
-    blobs: DataFrame,
-    src_host_col: str = "media_ref",
-    content_col: str = "content",
-) -> DataFrame:
-    """html blobs -> (src, dst, anchor) rows: one per outlink, anchor =
-    the link's whitespace-normalized text (html_extract.extract_anchors).
-    The edges_from_html shape with the text payload kept — the raw
-    material of the anchor-text table. Empty anchors (image links,
-    icon links) are dropped; self-links are kept here (a site's own
-    nav text still describes the target page) — filter on src != dst
-    at the call site when only cross-host signal is wanted."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from .html_extract import extract_anchors, sniff_html
-
-    out_t = T.ArrayType(
-        T.StructType(
-            [
-                T.StructField("href", T.StringType()),
-                T.StructField("anchor", T.StringType()),
-            ]
-        )
-    )
-
-    @F.pandas_udf(out_t)
-    def anchors(content):
-        out = []
-        for blob in content:
-            b = bytes(blob) if blob is not None else b""
-            if not sniff_html(b):
-                out.append([])
-                continue
-            try:
-                out.append(extract_anchors(b.decode("utf-8", "replace")))
-            except Exception:  # noqa: BLE001 — error-as-data: no anchors
-                out.append([])
-        return pd.Series(out, dtype=object)
-
-    src = F.when(
-        F.col(src_host_col).rlike("^[a-zA-Z][a-zA-Z0-9+.-]*://"),
-        _host(F.col(src_host_col)),
-    ).otherwise(F.lower(F.col(src_host_col)))
-    a = F.col("a")
-    return (
-        blobs.select(src.alias("src"), F.explode(anchors(F.col(content_col))).alias("a"))
-        .select("src", _host(a["href"]).alias("dst"), a["anchor"].alias("anchor"))
-        .filter(
-            (F.col("dst") != "")
-            & F.col("dst").isNotNull()
-            & (F.col("anchor") != "")
-        )
-    )
-
-
 def anchor_topk(anchors: DataFrame, k: int = 3, dst: str = "dst", anchor: str = "anchor") -> DataFrame:
     """(dst, anchor, cnt, rk): the k most frequent anchor texts per
     target host — the aggregated how-the-web-names-this-page table

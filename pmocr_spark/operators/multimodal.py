@@ -1,15 +1,11 @@
-"""Multimodal column operators: image/audio/video as opaque binary
-columns with typed metadata.
+"""Multimodal column operators over image/audio/video binary columns:
+transcription and content near-dup (pHash, acoustic fingerprint, SRP).
 
-All three modalities have REAL decode paths on the deterministic
-synthetic codecs (pmocr_spark.codecs: PMIMG/PMPDF image, PMAU audio,
-PMVI video — each with loud poison-pill validation), and the Spark-side
-plumbing (schemas, Arrow batch shapes, mapInPandas iterators,
-partitioning) is identical to what real container libraries would use.
-Real-library hooks (decode_audio_real / decode_video_real) are guarded
-imports in the engines.py style: they resolve loudly when librosa/cv2
-are absent instead of mis-decoding, and swap in without touching the
-Spark plumbing when installed.
+All three modalities decode on the deterministic synthetic codecs
+(pmocr_spark.codecs: PMIMG/PMPDF image, PMAU audio, PMVI video — each
+with loud poison-pill validation). Real container decoders plug into
+the pipeline through engines.register_engine; the Spark-side plumbing
+(schemas, Arrow batch shapes, partitioning) does not change.
 """
 
 from __future__ import annotations
@@ -23,154 +19,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import codecs
-
-IMAGE_META_TYPE = T.StructType(
-    [
-        T.StructField("format", T.StringType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("n_pages", T.IntegerType()),
-        T.StructField("error", T.StringType()),
-    ]
-)
-
-
-@F.pandas_udf(IMAGE_META_TYPE)
-def image_metadata(content: pd.Series) -> pd.DataFrame:
-    """Typed metadata extraction from image/pdf blobs (vectorized)."""
-    out = {k: [] for k in ("format", "height", "width", "n_pages", "error")}
-    for blob in content:
-        try:
-            pages = codecs.rasterize(bytes(blob))
-            fmt = "pdf" if bytes(blob[:6]) == codecs.PDF_MAGIC else "img"
-            h, w = pages[0].shape if pages else (0, 0)
-            out["format"].append(fmt)
-            out["height"].append(int(h))
-            out["width"].append(int(w))
-            out["n_pages"].append(len(pages))
-            out["error"].append(None)
-        except Exception as e:  # noqa: BLE001
-            out["format"].append(None)
-            out["height"].append(None)
-            out["width"].append(None)
-            out["n_pages"].append(None)
-            out["error"].append(f"{type(e).__name__}: {e}")
-    return pd.DataFrame(out)
-
-
-@F.pandas_udf(T.BinaryType())
-def image_resize_half(content: pd.Series) -> pd.Series:
-    """Image transform op: 2x downsample (real numpy work on the
-    synthetic codec's raster; with PIL/opencv installed this slot is
-    where a true resize goes — the Spark plumbing is identical)."""
-    out = []
-    for blob in content:
-        try:
-            pages = codecs.rasterize(bytes(blob))
-            img = pages[0][::2, ::2]
-            kind_b = b"img\x00"
-            out.append(
-                codecs.IMG_MAGIC + kind_b + struct.pack("<II", *img.shape) + img.tobytes()
-            )
-        except Exception:  # noqa: BLE001
-            out.append(None)
-    return pd.Series(out, dtype=object)
-
-
-EMBED_DIM = 64
-
-
-@F.pandas_udf(T.ArrayType(T.FloatType()))
-def image_feature_embed(content: pd.Series) -> pd.Series:
-    """Feature extraction: deterministic 64-dim embedding from raster
-    statistics (row/col ink densities). A real vision encoder would slot
-    in here unchanged — same signature, same Arrow batch shape."""
-    out = []
-    for blob in content:
-        try:
-            pages = codecs.rasterize(bytes(blob))
-            img = pages[0].astype(np.float32) / 255.0
-            rows = img.mean(axis=1)
-            cols = img.mean(axis=0)
-            vec = np.zeros(EMBED_DIM, dtype=np.float32)
-            half = EMBED_DIM // 2
-            r = np.resize(rows, half)
-            c = np.resize(cols, half)
-            vec[:half] = r
-            vec[half:] = c
-            out.append([float(x) for x in vec])
-        except Exception:  # noqa: BLE001
-            out.append(None)
-    return pd.Series(out, dtype=object)
-
-
-# ---------------------------------------------------------------- audio/video
-
-try:  # real decode libs (librosa / av / cv2) are NOT in this container
-    import librosa  # type: ignore  # noqa: F401
-
-    _HAVE_AUDIO = True
-except ImportError:
-    _HAVE_AUDIO = False
-
-
-def decode_audio_real(blob: bytes):
-    """Real-library audio decode (wav/mp3/... containers), guarded the
-    way engines.py guards tesseract: resolves loudly when the library
-    is absent instead of mis-decoding. The DEFAULT engine for this
-    build's audio columns is the deterministic synthetic codec
-    (codecs.decode_audio) — this hook exists so installing librosa
-    swaps in real containers without touching the Spark plumbing."""
-    if not _HAVE_AUDIO:
-        raise RuntimeError(
-            "real audio decode requires librosa/soundfile, not installed in "
-            "this container — synthetic PMAU blobs decode via "
-            "codecs.decode_audio (the default engine)"
-        )
-    import io  # pragma: no cover - container lacks librosa
-
-    return librosa.load(io.BytesIO(bytes(blob)), sr=None)  # pragma: no cover
-
-
-AUDIO_META_TYPE = T.StructType(
-    [
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("duration_sec", T.DoubleType()),
-        T.StructField("error", T.StringType()),
-    ]
-)
-
-
-def audio_metadata_udf():
-    """Audio metadata over a binary column: header-only parse of the
-    synthetic codec's container (codecs.AUDIO_MAGIC + rate + n_samples)
-    — metadata never touches the sample payload, so a 100 TB metadata
-    pass reads 16 bytes per blob, the scan-time/decode-time split real
-    audio pipelines use. Poison blobs land in the error column."""
-
-    @F.pandas_udf(AUDIO_META_TYPE)
-    def audio_metadata(content: pd.Series) -> pd.DataFrame:
-        out = {k: [] for k in ("sample_rate", "n_samples", "duration_sec", "error")}
-        for blob in content:
-            try:
-                b = bytes(blob)
-                if b[:4] != codecs.AUDIO_MAGIC:
-                    raise codecs.CodecError("bad audio magic")
-                rate, n = struct.unpack("<IQ", b[4:16])
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(n)
-                out["duration_sec"].append(round(n / rate, 6))
-                out["error"].append(None)
-            except Exception as e:  # noqa: BLE001
-                out["sample_rate"].append(None)
-                out["n_samples"].append(None)
-                out["duration_sec"].append(None)
-                out["error"].append(f"{type(e).__name__}: {e}")
-        return pd.DataFrame(out)
-
-    return audio_metadata
-
 
 AUDIO_TEXT_TYPE = T.StructType(
     [
@@ -187,10 +35,8 @@ def audio_transcribe(content: pd.Series) -> pd.DataFrame:
     """Full audio decode ('transcription'): synthetic blobs decode
     through codecs.decode_audio (frame/parity validation included —
     corrupted audio fails into the error column, the M4 error-as-data
-    discipline); a real ASR engine slots into decode_audio_real with
-    the same signature and Arrow batch shape. Round 5: this retires the
-    audio stub — the decode path is real, tested end-to-end against
-    encode_audio."""
+    discipline). Round 5: this retires the audio stub — the decode path
+    is real, tested end-to-end against encode_audio."""
     out = {k: [] for k in ("text", "sample_rate", "duration_sec", "error")}
     for blob in content:
         try:
@@ -205,72 +51,6 @@ def audio_transcribe(content: pd.Series) -> pd.DataFrame:
             out["duration_sec"].append(None)
             out["error"].append(f"{type(e).__name__}: {e}")
     return pd.DataFrame(out)
-
-
-try:  # real video decode libs (cv2 / av) are NOT in this container
-    import cv2  # type: ignore  # noqa: F401
-
-    _HAVE_VIDEO = True
-except ImportError:
-    _HAVE_VIDEO = False
-
-
-def decode_video_real(blob: bytes):
-    """Real-library video decode (mp4/mkv/... containers), guarded the
-    way engines.py guards tesseract: resolves loudly when the library
-    is absent instead of mis-decoding. The DEFAULT engine for this
-    build's video columns is the deterministic synthetic codec
-    (codecs.decode_video) — this hook exists so installing cv2/av
-    swaps in real containers without touching the Spark plumbing."""
-    if not _HAVE_VIDEO:
-        raise RuntimeError(
-            "real video decode requires cv2/av, not installed in this "
-            "container — synthetic PMVI blobs decode via "
-            "codecs.decode_video (the default engine)"
-        )
-    raise NotImplementedError  # pragma: no cover - container lacks cv2
-
-
-VIDEO_META_TYPE = T.StructType(
-    [
-        T.StructField("fps", T.IntegerType()),
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("duration_sec", T.DoubleType()),
-        T.StructField("error", T.StringType()),
-    ]
-)
-
-
-def video_metadata_udf():
-    """Video metadata over a binary column: header-only parse of the
-    synthetic container (codecs.VIDEO_MAGIC + fps + n_frames) — a
-    100 TB metadata pass reads 12 bytes per blob, never the frames
-    (the same scan-time/decode-time split as audio_metadata). Poison
-    blobs land in the error column."""
-
-    @F.pandas_udf(VIDEO_META_TYPE)
-    def video_metadata(content: pd.Series) -> pd.DataFrame:
-        out = {k: [] for k in ("fps", "n_frames", "duration_sec", "error")}
-        for blob in content:
-            try:
-                b = bytes(blob)
-                if b[:4] != codecs.VIDEO_MAGIC:
-                    raise codecs.CodecError("bad video magic")
-                if len(b) < 12:
-                    raise codecs.CodecError("truncated video header")
-                fps, n = struct.unpack("<II", b[4:12])
-                out["fps"].append(fps)
-                out["n_frames"].append(n)
-                out["duration_sec"].append(round(n / fps, 6) if fps else None)
-                out["error"].append(None)
-            except Exception as e:  # noqa: BLE001
-                out["fps"].append(None)
-                out["n_frames"].append(None)
-                out["duration_sec"].append(None)
-                out["error"].append(f"{type(e).__name__}: {e}")
-        return pd.DataFrame(out)
-
-    return video_metadata
 
 
 VIDEO_TEXT_TYPE = T.StructType(
@@ -289,9 +69,7 @@ def video_transcribe(content: pd.Series) -> pd.DataFrame:
     """Full video decode ('transcription'): every frame through the OCR
     chain, consecutive duplicate frames collapsed (a held static scene
     transcribes once) — codecs.transcribe_video. Frame corruption fails
-    into the error column (M4 error-as-data); a real ASR/captioning
-    engine slots into decode_video_real with the same signature and
-    Arrow batch shape."""
+    into the error column (M4 error-as-data)."""
     out = {k: [] for k in ("text", "fps", "n_frames", "duration_sec", "error")}
     for blob in content:
         try:
@@ -308,55 +86,6 @@ def video_transcribe(content: pd.Series) -> pd.DataFrame:
             out["duration_sec"].append(None)
             out["error"].append(f"{type(e).__name__}: {e}")
     return pd.DataFrame(out)
-
-
-def frame_sample(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling plumbing: emit every n-th frame as its own
-    row via mapInPandas (iterator API — constant memory regardless of
-    frames per video). PMVI containers (round 5) emit their STORED
-    frame payloads without decoding pixels — sampling 1-in-N at 100 TB
-    must not pay N decodes; multi-page blobs (the PDF container
-    doubling as a frame sequence) keep the rasterize path."""
-    schema = T.StructType(
-        [
-            T.StructField("media_ref", T.StringType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("frame", T.BinaryType()),
-        ]
-    )
-
-    def sample(batches):
-        for pdf in batches:
-            refs, idxs, frames = [], [], []
-            for ref, blob in zip(pdf["media_ref"], pdf["content"]):
-                b = bytes(blob)
-                if b[:4] == codecs.VIDEO_MAGIC:
-                    try:
-                        stored, _fps = codecs.video_frames(b)
-                    except Exception:  # noqa: BLE001
-                        continue
-                    for i in range(0, len(stored), every_n):
-                        refs.append(ref)
-                        idxs.append(i)
-                        frames.append(stored[i])
-                    continue
-                try:
-                    pages = codecs.rasterize(b)
-                except Exception:  # noqa: BLE001
-                    continue
-                for i in range(0, len(pages), every_n):
-                    img = pages[i]
-                    refs.append(ref)
-                    idxs.append(i)
-                    frames.append(
-                        codecs.IMG_MAGIC
-                        + b"img\x00"
-                        + struct.pack("<II", *img.shape)
-                        + img.tobytes()
-                    )
-            yield pd.DataFrame({"media_ref": refs, "frame_idx": idxs, "frame": frames})
-
-    return df.select("media_ref", "content").mapInPandas(sample, schema)
 
 
 # ---------------------------------------------------------------------

@@ -83,18 +83,6 @@ def _sub(vec, m: int):
     return F.slice(vec, m * D_SUB + 1, D_SUB)
 
 
-def _d_int(sub, csub):
-    """Squared-L2 distance between two sub-vectors as BIGINT micro-units
-    (double arithmetic in identical left-to-right order on both engines,
-    then one round -> integer; see module docstring)."""
-    d = F.aggregate(
-        F.zip_with(sub, csub, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return F.round(d * _MICRO, 0).cast("long")
-
-
 def pq_codebook(v: DataFrame) -> DataFrame:
     """One-row packed codebook: `cs` = array of (cent_id, ce) structs,
     sorted by cent_id (collect_list order is NOT deterministic; the
@@ -134,11 +122,12 @@ def pq_encode(
 
 
 def _d_int_sql(m: int, vec: str = "en", cvec: str = "c.ce") -> str:
-    """SQL text of _d_int(_sub(vec, m), _sub(cvec, m)) — one F.expr
-    parse instead of ~30 py4j lambda round trips per subspace (round 6:
-    q21's pq-code construction alone was ~3 s of driver chatter);
-    resolves to the identical expression tree, so codes/distances are
-    bit-for-bit unchanged."""
+    """SQL text of the squared-L2 distance between subspace m of `vec`
+    and of `cvec`, as BIGINT micro-units (double arithmetic in identical
+    left-to-right order on both engines, then one round -> integer; see
+    module docstring). One F.expr parse instead of ~30 py4j lambda round
+    trips per subspace (round 6: q21's pq-code construction alone was
+    ~3 s of driver chatter)."""
     a = m * D_SUB + 1
     return (
         f"cast(round(aggregate(zip_with(slice({vec}, {a}, {D_SUB}), "

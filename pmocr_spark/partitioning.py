@@ -24,51 +24,46 @@ needed columns first) wherever the full row is wide.
 
 from __future__ import annotations
 
+import os
+from typing import NamedTuple
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import DataFrame
 
 
-def _split_estimate(df: DataFrame) -> int | None:
-    """Upper bound on the scan partition count from the frame's input
-    files: per-file ceil(bytes / maxPartitionBytes), summed — Spark's
-    split math minus openCost packing (which only lowers the count).
-    One py4j call (inputFiles) + local stat; the exact probe
-    (df.rdd.getNumPartitions()) plans the scan through the JVM and
-    costs ~1.6 s per call on this driver. None = undecidable (remote
-    fs, no file-based source)."""
-    import math
-    import os
+class InputSize(NamedTuple):
+    files: int
+    splits: int
+    bytes: int
 
+
+def input_size(df: DataFrame) -> InputSize | None:
+    """The frame's input files from ONE listing (inputFiles) plus a
+    local stat: their count, total bytes, and the split estimate — an
+    upper bound on the scan partition count, per-file ceil(bytes /
+    maxPartitionBytes) summed: Spark's split math minus openCost
+    packing (which only lowers the count). The exact probe
+    (df.rdd.getNumPartitions()) plans the scan through the JVM and
+    costs ~1.6 s per call on this driver. None = undecidable (no
+    file-based source, a non-local file system, a file gone)."""
     try:
         files = df.inputFiles()
     except Exception:  # noqa: BLE001
         return None
     if not files:
         return None
-    raw = (
-        df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-        .strip()
-        .lower()
-    )
-    mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
-    try:
-        digits = raw.rstrip("ib" + "".join(mult))
-        mpb = int(digits) * mult.get(
-            raw[len(digits)] if len(raw) > len(digits) else "", 1
-        )
-    except (ValueError, IndexError):
-        mpb = 128 << 20
-    total = 0
+    sizes = []
     for uri in files:
-        path = uri[7:] if uri.startswith("file://") else uri
-        if path.startswith("file:"):
-            path = path[5:]
-        if not os.path.isabs(path):
-            return None  # non-local scheme: undecidable here
+        u = urlparse(uri)
+        path = unquote(u.path)
+        if u.scheme not in ("", "file") or not os.path.isabs(path):
+            return None
         try:
-            total += max(1, math.ceil(os.path.getsize(path) / mpb))
+            sizes.append(os.path.getsize(path))
         except OSError:
             return None
-    return total
+    mpb = df.sparkSession._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return InputSize(len(sizes), sum(max(1, -(-n // mpb)) for n in sizes), sum(sizes))
 
 
 #: bytes of INPUT per task when spreading expression/explode workloads.
@@ -92,29 +87,6 @@ def _spread_width(total_bytes: int, cores: int, heavy: bool) -> int:
     return max(1, min(cores, -(-total_bytes // per)))
 
 
-def _input_bytes(df: DataFrame) -> int | None:
-    import os
-
-    try:
-        files = df.inputFiles()
-    except Exception:  # noqa: BLE001
-        return None
-    if not files:
-        return None
-    total = 0
-    for uri in files:
-        path = uri[7:] if uri.startswith("file://") else uri
-        if path.startswith("file:"):
-            path = path[5:]
-        if not os.path.isabs(path):
-            return None
-        try:
-            total += os.path.getsize(path)
-        except OSError:
-            return None
-    return total
-
-
 def spread(df: DataFrame, heavy: bool = False) -> DataFrame:
     """Repartition `df` to a work-proportional width iff its scan is
     narrower than that — the single-row-group-input fix; a no-op on
@@ -126,16 +98,17 @@ def spread(df: DataFrame, heavy: bool = False) -> DataFrame:
         return df
     spark = df.sparkSession
     n = spark.sparkContext.defaultParallelism
-    cur = _split_estimate(df)
-    if cur is None:
+    size = input_size(df)
+    if size is None:
         try:
             cur = df.rdd.getNumPartitions()
         except Exception:  # noqa: BLE001 — probe must never fail a query
             return df
+    else:
+        cur = size.splits
     if cur >= n:
         return df
-    bts = _input_bytes(df)
-    target = n if bts is None else _spread_width(bts, n, heavy)
+    target = n if size is None else _spread_width(size.bytes, n, heavy)
     if cur >= target:
         return df
     return df.repartition(target)

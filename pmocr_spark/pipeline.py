@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import functions as fx
 from .codecs import AUDIO_KINDS, MEDIA_KINDS, VIDEO_KINDS
 from .operators.html_extract import HTML_KINDS
 from .udfs import ocr_extract
@@ -42,12 +43,6 @@ def normalize_text_col(col):
     t = F.regexp_replace(t, "[ \t]+\n", "\n")
     t = F.regexp_replace(t, "[ \t]+$", "")
     return F.regexp_replace(t, "\n+$", "")
-
-
-def csv_hack_col(col):
-    """X1 CSV rewrite: runs of >=2 spaces -> ';' (pmocr.sh:2017/2031 —
-    the sed regex `s/   */;/g` matches 2+ spaces, not the comment's 4+)."""
-    return F.regexp_replace(col, "  +", ";")
 
 
 def salted_repartition(df: DataFrame, num_partitions: int, *key_cols: str) -> DataFrame:
@@ -289,7 +284,7 @@ def reassemble(span_results: DataFrame) -> DataFrame:
         ).alias("txt"),
     ).select(
         "*",
-        csv_hack_col(F.col("txt")).alias("csv"),
+        fx.csv_hack(F.col("txt")).alias("csv"),
         # status: failed beats skipped beats done; a doc whose spans are
         # ALL disallowed-kind is 'skipped' — terminal in lineage (pmOCR
         # simply never picks such a file up; marking it keeps resume from
@@ -312,7 +307,6 @@ def project_targets(
     monitor: output_name column (F7) + per-target columns, one OCR pass.
     The pdf target is a REAL container blob (udfs.encode_pdf_pages);
     decode(pdf) == txt round-trips."""
-    from . import functions as fx
     from . import udfs
 
     out = results.withColumn(

@@ -23,6 +23,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from pmocr_spark.partitioning import InputSize, _spread_width, input_size
+
 QUERY_FNS: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
@@ -45,9 +47,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-#: memoized scan partition count per (app, sf_dir, table) — the spread
-#: decision probes the physical scan once per session, not per query
-_SCAN_PARTS: dict[tuple, int] = {}
+#: memoized partitioning.input_size per (app, sf_dir, table) — the
+#: spread decision sizes the scan once per session, not per query
+_SCAN_SIZE: dict[tuple, InputSize | None] = {}
 
 
 def _ts(spark: SparkSession, sf_dir: str, name: str, heavy: bool = False) -> DataFrame:
@@ -63,73 +65,21 @@ def _ts(spark: SparkSession, sf_dir: str, name: str, heavy: bool = False) -> Dat
     is a no-op and adds no exchange. Measured round 6: full-width
     spread of a 584 KB scan DOUBLED q24/q44 (hundreds of ~40 ms tasks
     under host throttle) while the proportional width keeps the
-    single-task map fix without the task flood."""
-    from .partitioning import _spread_width
-
+    single-task map fix without the task flood. An input that cannot
+    be sized locally (partitioning.input_size is None) is taken as
+    wide: misjudging skips an optimization, never breaks a plan."""
     df = _t(spark, sf_dir, name)
     sc = spark.sparkContext
     key = (sc.applicationId, sf_dir, name)
-    got = _SCAN_PARTS.get(key)
-    if got is None:
-        import os as _os
-
-        p = f"{sf_dir}/{name}.parquet"
-        try:
-            if _os.path.isdir(p):
-                bts = sum(
-                    e.stat().st_size
-                    for e in _os.scandir(p)
-                    if e.is_file() and not e.name.startswith(("_", "."))
-                )
-            else:
-                bts = _os.path.getsize(p)
-        except OSError:
-            bts = None
-        got = _SCAN_PARTS[key] = (
-            _scan_parts_upper(spark, p),
-            bts,
-        )
-    n_parts, bts = got
-    cores = sc.defaultParallelism
-    target = cores if bts is None else _spread_width(bts, cores, heavy)
-    if n_parts < target:
+    if key not in _SCAN_SIZE:
+        _SCAN_SIZE[key] = input_size(df)
+    size = _SCAN_SIZE[key]
+    if size is None:
+        return df
+    target = _spread_width(size.bytes, sc.defaultParallelism, heavy)
+    if size.splits < target:
         return df.repartition(target)
     return df
-
-
-def _scan_parts_upper(spark, path: str) -> int:
-    """Cheap UPPER bound on a parquet scan's partition count: per-file
-    ceil(bytes / maxPartitionBytes), summed (mirrors Spark's split math
-    minus the openCost packing, which only LOWERS the count). Local-fs
-    stat only — no py4j: the exact probe (`df.rdd.getNumPartitions()`)
-    plans the whole scan through the JVM and measured ~1.6 s per table
-    on this driver. Non-local paths fall back to 'wide' (no spread):
-    misjudging skips an optimization, never breaks a plan."""
-    import math as _math
-    import os as _os
-
-    try:
-        if _os.path.isdir(path):
-            files = [
-                e.path
-                for e in _os.scandir(path)
-                if e.is_file() and not e.name.startswith(("_", "."))
-            ]
-        else:
-            files = [path]
-        if not files:
-            return 1 << 30
-        raw = spark.conf.get(
-            "spark.sql.files.maxPartitionBytes", "134217728"
-        ).strip().lower()
-        mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
-        digits = raw.rstrip("ib" + "".join(mult))
-        mpb = int(digits) * mult.get(raw[len(digits)] if len(raw) > len(digits) else "", 1)
-        return sum(
-            max(1, _math.ceil(_os.path.getsize(f) / mpb)) for f in files
-        )
-    except (OSError, ValueError, IndexError):
-        return 1 << 30
 
 
 # =====================================================================
@@ -242,8 +192,10 @@ def q04_semi_join(spark, sf_dir):
 )
 def q05_csv_hack(spark, sf_dir):
     """X1 CSV rewrite: >=2 spaces -> ';' (pmocr.sh:2017/2031)."""
+    from pmocr_spark.functions import csv_hack
+
     d = _t(spark, sf_dir, "documents")
-    return d.select("doc_id", F.regexp_replace("text", "  +", ";").alias("csv"))
+    return d.select("doc_id", csv_hack("text").alias("csv"))
 
 
 @query(
@@ -7374,8 +7326,7 @@ def q44_bigram_lm_topk(spark, sf_dir):
     # gives the anchor; the aggregation routes through the REAL
     # operator (linkgraph.anchor_topk: map-side-combined (dst, anchor)
     # count + per-host top-k window over the already-aggregated,
-    # Heaps-law-small table). The HTML side (extract_anchors /
-    # anchors_from_html) is pinned by tests/test_linkgraph.py.
+    # Heaps-law-small table).
     from .operators.linkgraph import anchor_topk
 
     anc = d.select(

@@ -53,18 +53,9 @@ DOCUMENTS_SCHEMA = T.StructType(
 def _has_committed_offsets(spark: SparkSession, checkpoint_dir: str) -> bool:
     """True when the streaming offsets checkpoint has committed batches
     (i.e. a restart would CONTINUE epoch ids rather than restart at 0).
-    Probes through the Hadoop FS API so hdfs://, s3a://, ... work; falls
-    back to a driver-local os.path probe."""
-    try:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(f"{checkpoint_dir}/offsets")
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        return bool(fs.exists(jpath)) and len(fs.listStatus(jpath)) > 0
-    except Exception:  # noqa: BLE001 — non-JVM-resolvable path scheme
-        import os
-
-        d = os.path.join(checkpoint_dir, "offsets")
-        return os.path.isdir(d) and bool(os.listdir(d))
+    Probes through the Hadoop FS API so hdfs://, s3a://, ... work."""
+    fs, hp = ckpt._fs(spark, f"{checkpoint_dir}/offsets")
+    return bool(fs.exists(hp)) and len(fs.listStatus(hp)) > 0
 
 
 def _index_has_epoch_dirs(spark, path: str) -> bool:
@@ -73,25 +64,13 @@ def _index_has_epoch_dirs(spark, path: str) -> bool:
     layouts — CLI-built or flattened by the compact modes — return
     False: their rows read as seed rows visible to every epoch, so a
     fresh-checkpoint restart cannot hide or overwrite them."""
-    try:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(jpath):
-            return False
-        return any(
-            st.isDirectory() and st.getPath().getName().startswith("epoch-")
-            for st in fs.listStatus(jpath)
-        )
-    except Exception:  # noqa: BLE001 — non-JVM-resolvable path scheme
-        import os
-
-        if not os.path.isdir(path):
-            return False
-        return any(
-            e.startswith("epoch-") and os.path.isdir(os.path.join(path, e))
-            for e in os.listdir(path)
-        )
+    fs, hp = ckpt._fs(spark, path)
+    if not fs.exists(hp):
+        return False
+    return any(
+        st.isDirectory() and st.getPath().getName().startswith("epoch-")
+        for st in fs.listStatus(hp)
+    )
 
 
 def _epoch_dedup(spark, results: DataFrame, index_dir: str, epoch_id: int) -> DataFrame:
@@ -523,73 +502,3 @@ def monitor(
     writer = writer.trigger(**trigger)
     return writer.start()
 
-
-def hourly_event_counts(events_stream: DataFrame) -> DataFrame:
-    """Windowed streaming agg with watermark (late-data handling, W6
-    analog): tumbling 1h counts per event_type."""
-    # parquet stores NTZ timestamps; watermarks require TimestampType —
-    # cast is exact under the session's pinned UTC timezone
-    events_stream = events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return (
-        events_stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
-        .select(
-            F.unix_timestamp(F.col("window.start")).cast("long").alias("hour_epoch"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
-
-
-def dedup_across_batches(
-    spans_stream: DataFrame,
-    output_mode: str = "update",
-):
-    """Custom stateful streaming operator: cross-batch exact dedup by
-    content hash via applyInPandasWithState (SURVEY §2.8; the engine's
-    analog of a streaming `seen` set — pmOCR's poller snapshot diff W2
-    generalized to content identity instead of path identity).
-
-    Input: a stream of (doc_id, text). Emits each (hash, doc_id) the
-    FIRST time a given text hash is seen across all micro-batches;
-    subsequent duplicates update nothing. State per hash group: the
-    keeper doc_id + duplicate count.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState
-
-    keyed = spans_stream.select(
-        F.md5(F.col("text").cast("binary")).alias("h"), "doc_id"
-    )
-
-    def dedup_fn(key, pdfs, state: GroupState):
-        (h,) = key
-        if state.exists:
-            keeper, dups = state.get
-        else:
-            keeper, dups = None, 0
-        new_ids = []
-        for pdf in pdfs:
-            new_ids.extend(pdf["doc_id"].tolist())
-        new_ids.sort()
-        first_seen = keeper is None
-        if first_seen and new_ids:
-            keeper = new_ids[0]
-            dups += len(new_ids) - 1
-        else:
-            dups += len(new_ids)
-        state.update((keeper, dups))
-        if first_seen and keeper is not None:
-            yield pd.DataFrame({"h": [h], "keep_id": [keeper], "dup_count": [dups]})
-        else:
-            yield pd.DataFrame({"h": [], "keep_id": [], "dup_count": []})
-
-    return keyed.groupBy("h").applyInPandasWithState(
-        dedup_fn,
-        outputStructType="h string, keep_id string, dup_count long",
-        stateStructType="keeper string, dups long",
-        outputMode=output_mode,
-        timeoutConf="NoTimeout",
-    )

@@ -167,14 +167,3 @@ def encode_pdf_pages(doc_id: pd.Series, page_texts: pd.Series) -> pd.Series:
         out.append(codecs.encode_pdf(list(pages), salt=str(did)))
     return pd.Series(out)
 
-
-@F.pandas_udf(T.IntegerType())
-def page_count(content: pd.Series) -> pd.Series:
-    """Cheap content probe: number of pages in a blob (pdffonts analog F5)."""
-    out = []
-    for blob in content:
-        try:
-            out.append(len(codecs.rasterize(blob)) if blob is not None else 0)
-        except Exception:  # noqa: BLE001
-            out.append(-1)
-    return pd.Series(out, dtype="int32")

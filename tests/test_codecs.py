@@ -203,16 +203,6 @@ def test_video_decode_blob_dispatch():
     assert codecs.decode_blob(blob) == "scene one\nscene two"
 
 
-def test_video_frames_emits_stored_img_containers():
-    blob = codecs.encode_video(["a b c"], hold=3)
-    frames, fps = codecs.video_frames(blob)
-    assert fps == codecs.VIDEO_FPS and len(frames) == 3
-    # held frames are byte-identical; each is a decodable IMG container
-    assert frames[0] == frames[1] == frames[2]
-    assert frames[0][:6] == codecs.IMG_MAGIC
-    assert codecs.decode_blob(frames[0]) == "a b c"
-
-
 def test_video_poison_paths():
     blob = codecs.encode_video(["ok"], hold=1)
     for bad, msg in [

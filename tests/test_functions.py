@@ -16,62 +16,6 @@ def test_csv_hack(spark):
     assert _one(spark, X.csv_hack, "a  b   c d") == "a;b;c d"
 
 
-def test_strip_quotes(spark):
-    assert _one(spark, X.strip_quotes, "'hello'") == "hello"
-    assert _one(spark, X.strip_quotes, '"hi"') == "hi"
-    assert _one(spark, X.strip_quotes, "no quotes") == "no quotes"
-
-
-def test_is_integer(spark):
-    df = spark.createDataFrame([("42",), ("-7",), ("4.2",), ("x",)], "v string")
-    got = [r["r"] for r in df.select(X.is_integer(F.col("v")).alias("r")).collect()]
-    assert got == [True, True, False, False]
-
-
-def test_is_numeric(spark):
-    df = spark.createDataFrame([("42",), ("-7.5",), ("x",)], "v string")
-    got = [r["r"] for r in df.select(X.is_numeric(F.col("v")).alias("r")).collect()]
-    assert got == [True, True, False]
-
-
-def test_human_to_numeric(spark):
-    # reference semantics: value expressed in kilobytes (pmocr.sh:1305-1332)
-    df = spark.createDataFrame([("5G",), ("2M",), ("1024",)], "v string")
-    got = [r["r"] for r in df.select(X.human_to_numeric(F.col("v")).alias("r")).collect()]
-    assert got[0] == 5 * 1024 * 1024  # 5G in KB
-    assert got[1] == 2 * 1024  # 2M in KB
-    assert got[2] == 1.0  # 1024 bytes -> 1 KB
-
-
-def test_ver_comp(spark):
-    # reference convention: 0 equal, 1 first greater, 2 second greater
-    df = spark.createDataFrame(
-        [("1.2.3", "1.2.3"), ("4.0", "3.9.9"), ("3.02", "3.3"), ("1.10", "1.9")],
-        "a string, b string",
-    )
-    got = [r["r"] for r in df.select(X.ver_comp(F.col("a"), F.col("b")).alias("r")).collect()]
-    assert got == [0, 1, 2, 1]
-
-
-def test_check_rfc822(spark):
-    df = spark.createDataFrame([("a@b.co",), ("bad@",), ("x y@z.com",)], "v string")
-    got = [r["r"] for r in df.select(X.check_rfc822(F.col("v")).alias("r")).collect()]
-    assert got == [True, False, False]
-
-
-def test_url_encode_decode(spark):
-    df = spark.createDataFrame([("a b/c?d",)], "v string")
-    enc = df.select(X.url_encode(F.col("v")).alias("e"))
-    roundtrip = enc.select(X.url_decode(F.col("e")).alias("r")).collect()[0]["r"]
-    assert roundtrip == "a b/c?d"
-
-
-def test_join_string_and_array_contains(spark):
-    df = spark.createDataFrame([(["a", "b", "c"],)], "v array<string>")
-    assert df.select(X.join_string(F.col("v"), ";").alias("r")).collect()[0]["r"] == "a;b;c"
-    assert df.select(X.array_contains(F.col("v"), "b").alias("r")).collect()[0]["r"] is True
-
-
 def test_output_name(spark):
     df = spark.createDataFrame([("report",)], "v string")
     got = df.select(

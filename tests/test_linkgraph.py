@@ -141,49 +141,8 @@ def test_cli_extract_links_then_pagerank(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# anchor-text extraction + aggregation (round 5, eighth pass)
+# anchor-text aggregation (round 5, eighth pass)
 # ---------------------------------------------------------------------------
-
-
-def test_extract_anchors_parser():
-    from pmocr_spark.operators.html_extract import extract_anchors
-
-    html = (
-        "<html><body>"
-        "<a href='http://b.example/x'>Plain  link</a>"
-        "<a href='/rel'>rel <b>nested</b> text</a>"
-        "<a href='#frag'>skipped</a>"
-        "<a href='javascript:void(0)'>skipped too</a>"
-        "<a href='http://c.example/'><img src='i.png'></a>"
-        "<a href='http://d.example/'>unclosed tail"
-    )
-    assert extract_anchors(html) == [
-        ("http://b.example/x", "Plain link"),      # whitespace normalized
-        ("/rel", "rel nested text"),                # nested markup text kept
-        ("http://c.example/", ""),                  # image-only: empty anchor
-        ("http://d.example/", "unclosed tail"),     # closes at EOF
-    ]
-
-
-def test_anchors_from_html(spark):
-    html = (
-        b"<html><body>"
-        b"<a href='http://b.example/x'>Beta Page</a>"
-        b"<a href='http://b.example/y'>Beta Page</a>"
-        b"<a href='http://c.example/'><img src='i.png'></a>"  # empty: dropped
-        b"</body></html>"
-    )
-    blobs = spark.createDataFrame(
-        [("a.example", bytearray(html)), ("z.example", bytearray(b"not html"))],
-        "media_ref string, content binary",
-    )
-    rows = {(r["src"], r["dst"], r["anchor"])
-            for r in lg.anchors_from_html(blobs).collect()}
-    assert rows == {("a.example", "b.example", "Beta Page"),
-                    ("a.example", "b.example", "Beta Page")} or rows == {
-        ("a.example", "b.example", "Beta Page")}
-    # two rows collapse to one only in the set; check the real count
-    assert lg.anchors_from_html(blobs).count() == 2
 
 
 def test_anchor_topk_counts_and_ties(spark):

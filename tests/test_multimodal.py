@@ -1,99 +1,14 @@
-"""Multimodal column operators: metadata, resize, embed, frame-sample,
-audio stub — real Spark plumbing over binary columns."""
+"""Multimodal column operators: audio/video transcription and content
+near-dup (pHash, acoustic fingerprint, SRP) — real Spark plumbing over
+binary columns."""
 
 from __future__ import annotations
-
-import struct
 
 import pytest
 from pyspark.sql import functions as F
 
 from pmocr_spark import codecs
 from pmocr_spark.operators import multimodal as mm
-
-
-@pytest.fixture(scope="module")
-def blob_df(spark):
-    rows = [
-        ("img1", codecs.encode_image("hello world", "png", salt="a")),
-        ("img2", codecs.encode_image("line one\nline two", "tiff", salt="b")),
-        ("pdf1", codecs.encode_pdf(["page one", "page two", "page three"], salt="c")),
-        ("bad1", codecs.encode_corrupt("x")),
-    ]
-    return spark.createDataFrame(rows, "media_ref string, content binary")
-
-
-def test_image_metadata(spark, blob_df):
-    got = {
-        r["media_ref"]: r.asDict()
-        for r in blob_df.select("media_ref", mm.image_metadata("content").alias("m"))
-        .select("media_ref", "m.*")
-        .collect()
-    }
-    assert got["img1"]["format"] == "img" and got["img1"]["n_pages"] == 1
-    assert got["pdf1"]["format"] == "pdf" and got["pdf1"]["n_pages"] == 3
-    assert got["img2"]["height"] == 2 * codecs.GLYPH_H + 1 + 2 * codecs.BORDER
-    assert got["bad1"]["error"] is not None and got["bad1"]["format"] is None
-
-
-def test_image_resize_half(spark, blob_df):
-    out = {
-        r["media_ref"]: r["small"]
-        for r in blob_df.select(
-            "media_ref", mm.image_resize_half("content").alias("small")
-        ).collect()
-    }
-    assert out["bad1"] is None
-    h, w = struct.unpack("<II", bytes(out["img1"][10:18]))
-    orig = codecs.rasterize(codecs.encode_image("hello world", "png", salt="a"))[0]
-    assert (h, w) == ((orig.shape[0] + 1) // 2, (orig.shape[1] + 1) // 2)
-
-
-def test_image_feature_embed(spark, blob_df):
-    rows = blob_df.select("media_ref", mm.image_feature_embed("content").alias("v")).collect()
-    vecs = {r["media_ref"]: r["v"] for r in rows}
-    assert vecs["bad1"] is None
-    assert len(vecs["img1"]) == mm.EMBED_DIM
-    # deterministic
-    rows2 = blob_df.select(mm.image_feature_embed("content").alias("v")).collect()
-    assert [r["v"] for r in rows2][0] == vecs["img1"]
-
-
-def test_frame_sample(spark):
-    frames_blob = codecs.encode_pdf([f"frame {i}" for i in range(25)], salt="v")
-    df = spark.createDataFrame([("vid1", frames_blob)], "media_ref string, content binary")
-    out = mm.frame_sample(df, every_n=10).collect()
-    assert [(r["media_ref"], r["frame_idx"]) for r in out] == [
-        ("vid1", 0),
-        ("vid1", 10),
-        ("vid1", 20),
-    ]
-    # each emitted frame is itself a decodable single-page image
-    assert codecs.decode_blob(bytes(out[1]["frame"])) == "frame 10"
-
-
-def test_audio_metadata_stub(spark):
-    good = b"PMAU" + struct.pack("<IQ", 16000, 32000)
-    df = spark.createDataFrame(
-        [("a1", good), ("a2", b"JUNK----")], "media_ref string, content binary"
-    )
-    udf = mm.audio_metadata_udf()
-    got = {
-        r["media_ref"]: r.asDict()
-        for r in df.select("media_ref", udf("content").alias("m")).select("media_ref", "m.*").collect()
-    }
-    assert got["a1"]["sample_rate"] == 16000 and got["a1"]["duration_sec"] == 2.0
-    assert got["a2"]["error"] is not None
-
-
-def test_audio_real_decode_guarded():
-    """The real-library hook resolves LOUDLY when librosa is absent
-    (engines.py's tesseract discipline) — never a silent mis-decode.
-    The default engine is the synthetic codec, tested below."""
-    if mm._HAVE_AUDIO:
-        pytest.skip("librosa installed: guarded path is live")
-    with pytest.raises(RuntimeError, match="librosa"):
-        mm.decode_audio_real(b"")
 
 
 def test_audio_transcribe_roundtrip(spark):
@@ -121,19 +36,6 @@ def test_audio_transcribe_roundtrip(spark):
     # duration is derived from the REAL frame count
     n = len("hello audio world") * codecs.SAMPLES_PER_CHAR
     assert got["a1"]["duration_sec"] == round(n / codecs.AUDIO_RATE, 6)
-
-
-def test_audio_metadata_on_real_codec_blob(spark):
-    """audio_metadata parses the synthetic codec's actual container
-    header (not a hand-built fake): rate/duration must agree with what
-    decode_audio reports for the same blob."""
-    blob = codecs.encode_audio("sample text", salt="m")
-    df = spark.createDataFrame([("x", blob)], "media_ref string, content binary")
-    udf = mm.audio_metadata_udf()
-    meta = df.select(udf("content").alias("m")).select("m.*").collect()[0]
-    text, rate, n = codecs.decode_audio(blob)
-    assert meta["sample_rate"] == rate and meta["n_samples"] == n
-    assert meta["duration_sec"] == round(n / rate, 6) and meta["error"] is None
 
 
 def test_phash_near_dup_pairs(spark):
@@ -272,38 +174,6 @@ def test_transcribe_audio_cli(spark, tmp_path):
                         "--output", out])
 
 
-def test_video_real_decode_guarded():
-    """The real-library hook resolves LOUDLY when cv2 is absent
-    (engines.py's tesseract discipline) — never a silent mis-decode."""
-    if mm._HAVE_VIDEO:
-        pytest.skip("cv2 installed: guarded path is live")
-    with pytest.raises(RuntimeError, match="cv2"):
-        mm.decode_video_real(b"")
-
-
-def test_video_metadata_header_only(spark):
-    """video_metadata parses the 12-byte header (scan-time pass) —
-    duration from the REAL frame count, poison into the error column.
-    A header with no frame payload is still valid METADATA."""
-    blob = codecs.encode_video(["one", "two"], hold=3, salt="vm")
-    header_only = b"PMVI" + struct.pack("<II", 30, 90)
-    df = spark.createDataFrame(
-        [("v1", blob), ("v2", header_only), ("bad", b"JUNK----")],
-        "media_ref string, content binary",
-    )
-    udf = mm.video_metadata_udf()
-    got = {
-        r["media_ref"]: r.asDict()
-        for r in df.select("media_ref", udf("content").alias("m"))
-        .select("media_ref", "m.*")
-        .collect()
-    }
-    assert got["v1"]["fps"] == codecs.VIDEO_FPS and got["v1"]["n_frames"] == 6
-    assert got["v1"]["duration_sec"] == round(6 / codecs.VIDEO_FPS, 6)
-    assert got["v2"]["fps"] == 30 and got["v2"]["duration_sec"] == 3.0
-    assert got["bad"]["error"] is not None
-
-
 def test_video_transcribe_roundtrip(spark):
     """transcribe(encode(captions)) == captions through the REAL Spark
     path (Arrow batches, struct column): held scenes collapse, poison
@@ -326,19 +196,6 @@ def test_video_transcribe_roundtrip(spark):
     assert got["v2"]["text"] == "solo\nline"
     assert got["bad"]["text"] is None and "magic" in got["bad"]["error"]
     assert got["trunc"]["text"] is None and got["trunc"]["error"] is not None
-
-
-def test_frame_sample_on_video_container(spark):
-    """PMVI blobs sample their STORED frames (no pixel decode, no
-    re-encode): every 2nd frame of a 6-frame video -> indices 0,2,4,
-    each an IMG container that decodes to its scene's caption."""
-    blob = codecs.encode_video(["aa", "bb", "cc"], hold=2, salt="fs")
-    df = spark.createDataFrame([("v", blob)], "media_ref string, content binary")
-    out = sorted(
-        mm.frame_sample(df, every_n=2).collect(), key=lambda r: r["frame_idx"]
-    )
-    assert [r["frame_idx"] for r in out] == [0, 2, 4]
-    assert [codecs.decode_blob(bytes(r["frame"])) for r in out] == ["aa", "bb", "cc"]
 
 
 def test_transcribe_video_cli(spark, tmp_path):

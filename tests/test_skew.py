@@ -80,3 +80,16 @@ def test_end_to_end_correct_under_skew(spark, skewed, tmp_path_factory):
     for doc_id, e in exp.items():
         got = [(s["order"], s["kind"], s["text"], s["media_ref"]) for s in rows[doc_id]["spans"]]
         assert got == e["spans"], doc_id
+
+
+def test_input_size_reads_percent_encoded_paths(spark, tmp_path):
+    """inputFiles() returns percent-encoded URIs: a table under a dir
+    whose name holds a space must still be sized from its real files."""
+    from pmocr_spark.partitioning import input_size
+
+    d = tmp_path / "a b"
+    spark.range(1000).repartition(3).write.parquet(str(d))
+    files = [f for f in d.iterdir() if f.name.endswith(".parquet")]
+    size = input_size(spark.read.parquet(str(d)))
+    assert size is not None
+    assert (size.files, size.bytes) == (len(files), sum(f.stat().st_size for f in files))

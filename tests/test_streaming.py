@@ -154,96 +154,6 @@ def test_streaming_retry_on_epoch_clock(spark, dirs, tmp_path):
     assert len(out) == 1 and out[0]["txt"] == "recovered text"
 
 
-def test_streaming_windowed_agg(spark, tmp_path):
-    """Watermarked tumbling-window agg over a file stream matches the
-    batch equivalent (pyspark_guide Streaming smoke pattern)."""
-    path = "/root/testdata/sf0.001/events.parquet"
-    stream_dir = str(tmp_path / "events_landing")
-    os.makedirs(stream_dir)
-    shutil.copy(path, f"{stream_dir}/events.parquet")  # file source needs a dir
-    schema = spark.read.parquet(path).schema
-    agg = streaming.hourly_event_counts(spark.readStream.schema(schema).parquet(stream_dir))
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("hourly_counts")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT count(*) AS n FROM hourly_counts").collect()[0]["n"]
-    batch = (
-        spark.read.parquet(path)
-        .groupBy(F.date_trunc("hour", "ts"), "event_type")
-        .count()
-        .count()
-    )
-    assert got == batch
-
-
-def test_stateful_dedup_across_batches(spark, tmp_path):
-    """applyInPandasWithState: a text hash seen in batch 1 must NOT be
-    re-emitted when the same content arrives in batch 2."""
-    import os
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    land = tmp_path / "dedup_land"
-    os.makedirs(land)
-    schema = pa.schema([("doc_id", pa.string()), ("text", pa.string())])
-    pq.write_table(
-        pa.Table.from_pylist(
-            [
-                {"doc_id": "a1", "text": "alpha"},
-                {"doc_id": "a2", "text": "alpha"},  # dup within batch
-                {"doc_id": "b1", "text": "beta"},
-            ],
-            schema=schema,
-        ),
-        f"{land}/b1.parquet",
-    )
-    sschema = "doc_id string, text string"
-    stream = spark.readStream.schema(sschema).parquet(str(land))
-    out = streaming.dedup_across_batches(stream)
-    sink = str(tmp_path / "dedup_sink")
-
-    def to_sink(batch_df, _epoch):
-        batch_df.write.mode("append").parquet(sink)
-
-    def run_once():
-        q = (
-            out.writeStream.outputMode("update")
-            .foreachBatch(to_sink)
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_once()
-    rows1 = spark.read.parquet(sink).collect()
-    assert len(rows1) == 2
-    assert {r["keep_id"] for r in rows1} == {"a1", "b1"}
-
-    # batch 2: another 'alpha' dup + a new text; state must survive the
-    # query restart via the checkpoint
-    pq.write_table(
-        pa.Table.from_pylist(
-            [
-                {"doc_id": "a3", "text": "alpha"},
-                {"doc_id": "c1", "text": "gamma"},
-            ],
-            schema=schema,
-        ),
-        f"{land}/b2.parquet",
-    )
-    run_once()
-    rows2 = spark.read.parquet(sink).collect()
-    # only gamma is newly emitted; alpha's duplicate updates state silently
-    assert len(rows2) == 3
-    assert {r["keep_id"] for r in rows2} == {"a1", "b1", "c1"}
-
-
 def test_fresh_checkpoint_foreign_lineage_refused(spark, dirs, tmp_path):
     """Replay-safety guard: a FRESH offsets checkpoint restarts epoch ids
     at 0; against a lineage dir holding ANOTHER stream identity's epoch
@@ -282,6 +192,19 @@ def test_fresh_checkpoint_foreign_lineage_refused(spark, dirs, tmp_path):
         os.path.join(dirs["stream_ckpt"], "..", "fresh_ckpt2"),
         allow_lineage_takeover=True,
     )
+
+
+def test_unknown_scheme_path_raises(spark, dirs):
+    """A lineage (or index) path on a scheme Hadoop cannot resolve fails
+    loudly at monitor() instead of reading as an empty first run."""
+    blobs = spark.createDataFrame([], "media_ref string, content binary")
+    for kw in ({"lineage_dir": "nosuchfs://h/lineage"},
+               {"lineage_dir": dirs["lineage"], "dedup_index_dir": "nosuchfs://h/idx"}):
+        with pytest.raises(Exception, match="nosuchfs"):
+            streaming.monitor(
+                spark, dirs["landing"], blobs, dirs["output"], dirs["stream_ckpt"],
+                trigger={"availableNow": True}, **kw,
+            )
 
 
 def test_alert_row_has_docs_total(spark, dirs, tmp_path):
