@@ -141,7 +141,8 @@ def append_checkpoint(rows: DataFrame, path: str) -> None:
     `path` (the resume anti-join), materialize/write all other outputs
     of that plan BEFORE calling this — Spark re-reads the directory on
     any cache-miss recompute, and the freshly appended rows would
-    anti-join the batch's own docs away.
+    anti-join the batch's own docs away. pipeline.run_job enforces this
+    order for the batch CLI and every service epoch.
     """
     rows.write.mode("append").parquet(path)
 

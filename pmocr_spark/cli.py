@@ -867,16 +867,25 @@ _STRAY = (
     (("probe_broadcast",), "--probe-broadcast only applies to --probe-dedup-index"),
     (("text_col",), "--text-col only applies to --search-phrase/--fix-text/--spell-fix/"
      "--keywords/--collocations/--kwic/--eval-extraction"),
+    (("engine",), "--engine only applies to --batch/--service"),
+    (("monitor",), "--monitor requires --service (pmOCR's per-dir OCR_service)"),
+    (("once",), "--once is a service-mode reconciliation pass (W4); use with --service"),
+    (("dedup_index",), "--dedup-index is the service-mode cross-epoch near-dup pass; "
+     "batch runs use the standalone --build/--probe-dedup-index modes"),
+    (("dedup_substrings_index",), "--dedup-substrings-index is the service-mode cross-epoch "
+     "substring pass; batch corpora use the standalone --dedup-substrings mode"),
+    (("raw",), "--raw is batch-only (no binaryFile streaming source); "
+     "service mode consumes parquet document drops"),
 )
 
 _PIPELINES = ("--batch", "--service")
 
 
 def _is_set(parser: argparse.ArgumentParser, args, dest: str) -> bool:
-    """An option is set when it differs from its parser default; a
-    store_true flag when it is true."""
+    """An option is set when it differs from its built-in default
+    (_DEFAULTS, else the parser's); a store_true flag when it is true."""
     v = getattr(args, dest)
-    return v is not False and v != parser.get_default(dest)
+    return v is not False and v != _DEFAULTS.get(dest, parser.get_default(dest))
 
 
 def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
@@ -952,26 +961,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
             "LIVE stream's lineage loses retry history on crash-replay "
             "of an old epoch — stop the stream, then run "
             "--compact-lineage --lineage DIR standalone"
-        )
-    if args.monitor and not args.service:
-        parser.error("--monitor requires --service (pmOCR's per-dir OCR_service)")
-    if args.once and not args.service:
-        parser.error("--once is a service-mode reconciliation pass (W4); use with --service")
-    if args.dedup_index and not args.service:
-        parser.error(
-            "--dedup-index is the service-mode cross-epoch near-dup pass; "
-            "batch runs use the standalone --build/--probe-dedup-index modes"
-        )
-    if args.dedup_substrings_index and not args.service:
-        parser.error(
-            "--dedup-substrings-index is the service-mode cross-epoch "
-            "substring pass; batch corpora use the standalone "
-            "--dedup-substrings mode"
-        )
-    if args.raw and args.service:
-        parser.error(
-            "--raw is batch-only (no binaryFile streaming source); "
-            "service mode consumes parquet document drops"
         )
     if args.raw and (args.input or args.blobs):
         parser.error("--raw replaces --input/--blobs; give one or the other")
@@ -1108,7 +1097,18 @@ def _read_tables(spark, args, docs: bool = True):
     )
 
 
+def _ocr_udf(args):
+    """--engine as the pipeline's decode UDF ('codec' is None: the
+    env-driven default); an unknown or missing engine raises here."""
+    if args.engine == "codec":
+        return None
+    from . import engines
+
+    return engines.ocr_udf_for(args.engine)
+
+
 def _run_service(spark, args) -> None:
+    ocr_udf = _ocr_udf(args)
     job_ts = args.job_ts.replace("T", " ").replace("Z", "")
     suffix = "" if args.no_suffix else args.suffix
     _, blobs = _read_tables(spark, args, docs=False)
@@ -1116,9 +1116,7 @@ def _run_service(spark, args) -> None:
     # default.conf:33); --once: W4 reconciliation pass that drains
     # the landing dir(s) and terminates
     trigger = {"availableNow": True} if args.once else {"processingTime": "30 seconds"}
-    queries = launch_monitors(
-        spark, args, blobs, job_ts, suffix, trigger=trigger, ocr_udf=args.ocr_udf
-    )
+    queries = launch_monitors(spark, args, blobs, job_ts, suffix, trigger=trigger, ocr_udf=ocr_udf)
     # all queries run concurrently; blocking on each in turn = block
     # until every monitor stops (pmOCR parks in its sleep loop while
     # the per-dir OCR_service subshells run, pmocr.sh:2540-2544)
@@ -1133,13 +1131,11 @@ def _run_batch(spark, args) -> None:
     from . import checkpoint as ckpt
     from . import pipeline
 
+    ocr_udf = _ocr_udf(args)
     job_ts = args.job_ts.replace("T", " ").replace("Z", "")
-    suffix = "" if args.no_suffix else args.suffix
     docs, blobs = _read_tables(spark, args)
     lineage = ckpt.read_checkpoint(spark, args.lineage)
     if lineage is not None:
-        # one scan for the warning + resume filter + retry-count lookup
-        lineage = lineage.persist()
         # P2 retry runs on the deterministic job clock: if --job-ts does
         # not advance past the last run's, failed docs stay postponed
         # forever and retry-with-postponement silently never fires
@@ -1155,71 +1151,55 @@ def _run_batch(spark, args) -> None:
                 "postponed — pass a later --job-ts to retry them",
                 file=sys.stderr,
             )
-    results = pipeline.run_batch(
-        spark,
-        docs,
-        blobs,
-        checkpoint=lineage,
-        num_partitions=args.num_partitions,
-        broadcast_spans=(args.span_join != "shuffle"),
-        job_ts=job_ts,
-        ocr_udf=args.ocr_udf,
-    )
-    cached = results.persist()
-    # F7 output-name projection + Q1 multi-target fan-out (doc_id is
-    # unique, so F8 collision resolution is a no-op here; q06 exercises
-    # the windowed variant)
-    out = pipeline.project_targets(
-        cached, args.target_list, job_ts, suffix=suffix, addition=args.filename_addition
-    )
-    pcols = []
-    if args.partition_by:
-        pcols = [c.strip() for c in args.partition_by.split(",") if c.strip()]
-        missing = [c for c in pcols if c not in out.columns]
-        if missing:
-            raise SystemExit(
-                f"pmocr-spark: error: --partition-by column(s) {missing} not in "
-                f"the results table; available: {', '.join(out.columns)}"
-            )
-    if args.output_format == "wet":
-        from .sources.warc import write_wet
 
-        if pcols:
-            raise SystemExit(
-                "pmocr-spark: --partition-by does not compose with "
-                "--output-format wet (shard layout is the format)"
-            )
-        if "txt" not in out.columns:
-            raise SystemExit(
-                "pmocr-spark: --output-format wet needs the txt target; "
-                "add txt to --targets"
-            )
-        # WET is the extracted-text artifact: done docs only (failures
-        # and skips live in lineage, exactly like CommonCrawl's WET
-        # files carry successful conversions only)
-        write_wet(out.filter(F.col("status") == "done"), args.output, job_ts=job_ts)
-    elif args.output_format == "jsonl":
-        from .sources.jsonl import write_jsonl
+    def write_output(_results, out):
+        pcols = []
+        if args.partition_by:
+            pcols = [c.strip() for c in args.partition_by.split(",") if c.strip()]
+            missing = [c for c in pcols if c not in out.columns]
+            if missing:
+                raise SystemExit(
+                    f"pmocr-spark: error: --partition-by column(s) {missing} not in "
+                    f"the results table; available: {', '.join(out.columns)}"
+                )
+        if args.output_format == "wet":
+            from .sources.warc import write_wet
 
-        write_jsonl(out, args.output, partition_by=pcols or None)
-    else:
-        writer = out.write.mode("append")
-        if pcols:
-            writer = writer.partitionBy(*pcols)
-        if args.output_format == "orc":
-            writer.orc(args.output)
+            if pcols:
+                raise SystemExit(
+                    "pmocr-spark: --partition-by does not compose with "
+                    "--output-format wet (shard layout is the format)"
+                )
+            if "txt" not in out.columns:
+                raise SystemExit(
+                    "pmocr-spark: --output-format wet needs the txt target; "
+                    "add txt to --targets"
+                )
+            # WET is the extracted-text artifact: done docs only (failures
+            # and skips live in lineage, exactly like CommonCrawl's WET
+            # files carry successful conversions only)
+            write_wet(out.filter(F.col("status") == "done"), args.output, job_ts=job_ts)
+        elif args.output_format == "jsonl":
+            from .sources.jsonl import write_jsonl
+
+            write_jsonl(out, args.output, partition_by=pcols or None)
         else:
-            writer.parquet(args.output)
-    rows = ckpt.checkpoint_rows(cached, run_id=args.run_id, job_ts=job_ts, prior=lineage)
-    ckpt.append_checkpoint(rows, args.lineage)
-    cached.unpersist()
-    if lineage is not None:
-        lineage.unpersist()
-    if args.metrics:
-        # re-read AFTER the append so the report covers this run too;
-        # overwrite — the report is a derived view of the lineage table
-        full = ckpt.read_checkpoint(spark, args.lineage)
-        ckpt.partition_metrics(full).write.mode("overwrite").parquet(args.metrics)
+            writer = out.write.mode("append")
+            if pcols:
+                writer = writer.partitionBy(*pcols)
+            if args.output_format == "orc":
+                writer.orc(args.output)
+            else:
+                writer.parquet(args.output)
+
+    pipeline.run_job(
+        spark, docs, blobs, lineage, run_id=args.run_id, job_ts=job_ts,
+        targets=args.target_list, write_output=write_output,
+        write_lineage=lambda rows: ckpt.append_checkpoint(rows, args.lineage),
+        suffix="" if args.no_suffix else args.suffix, addition=args.filename_addition,
+        metrics_dir=args.metrics, num_partitions=args.num_partitions,
+        broadcast_spans=(args.span_join != "shuffle"), ocr_udf=ocr_udf,
+    )
     if args.compact_lineage:
         # after metrics: the per-run partition report needs the full
         # history; compaction keeps only each doc's winning row
@@ -2550,8 +2530,9 @@ MODES = {
         Mode("--compact-output", _compact_output, _IO,
              (_at_least("target_file_mb", 1, "--target-file-mb must be >= 1"),),
              ("target_file_mb",)),
-        Mode("--batch", _run_batch),
-        Mode("--service", _run_service),
+        Mode("--batch", _run_batch, owns=("engine", "raw")),
+        Mode("--service", _run_service,
+             owns=("engine", "once", "monitor", "dedup_index", "dedup_substrings_index")),
     )
 }
 
@@ -2562,15 +2543,6 @@ def main(argv: list[str] | None = None) -> None:
         # pure driver-side arithmetic: no Spark session, instant
         _lsh_plan(None, args)
         return
-    # resolve the engine BEFORE any Spark work: a missing tesseract
-    # install (or an unknown name) fails fast at the CLI, not deep in an
-    # executor task. 'codec' resolves to None = the env-driven default
-    # UDF instance (identical behavior/plan to pre---engine builds).
-    args.ocr_udf = None
-    if args.engine != "codec":
-        from . import engines
-
-        args.ocr_udf = engines.ocr_udf_for(args.engine)
     from .session import get_spark
 
     spark = get_spark(app="pmocr_spark_job", master=args.master)

@@ -15,6 +15,9 @@ declarative DataFrame plan:
     -> per-target projections txt / csv (X1) / pdf  (Q1 fan-out, one OCR pass)
     -> results + checkpoint/lineage rows (S4-S6)
 
+run_job wraps that plan in the job both modes run: the batch CLI once,
+the service once per epoch.
+
 Catalyst gives predicate pushdown / column pruning / AQE for free; the
 only hand-enforced plan shapes are (a) cheap filters upstream of the
 pandas UDF, (b) the salted span-level repartition, (c) error-as-data
@@ -350,3 +353,56 @@ def run_batch(
         job_ts=job_ts, ocr_udf=ocr_udf,
     )
     return reassemble(span_results)
+
+
+def run_job(
+    spark: SparkSession,
+    documents: DataFrame,
+    media_blobs: DataFrame,
+    prior: DataFrame | None,
+    *,
+    run_id: str,
+    job_ts: str,
+    targets: list[str],
+    write_output,
+    write_lineage,
+    suffix: str = "_OCR",
+    addition: str | None = None,
+    metrics_dir: str | None = None,
+    **plan,
+) -> None:
+    """One OCR job: the batch CLI's run and every service epoch (pmOCR's
+    OCR_Dispatch, pmocr.sh:2111, which both modes call).
+
+    Commit order: run_batch (results persisted) -> project_targets ->
+    write_output(results, out), the caller's sinks -> checkpoint_rows ->
+    write_lineage(rows), after every output (the ORDERING HAZARD of
+    checkpoint.append_checkpoint) -> with metrics_dir, partition_metrics
+    of prior ∪ rows (the whole lineage after this job), overwritten.
+
+    `prior` is the lineage as of the resume read (None on a first run),
+    persisted here so resume, retry counts and metrics share one scan.
+    `plan` (num_partitions, broadcast_spans, ocr_udf) goes to run_batch.
+    The results and `prior` are unpersisted on every exit, so a job that
+    raises leaves no cache behind."""
+    from . import checkpoint as ckpt
+
+    if prior is not None:
+        prior = prior.persist()
+    results = None
+    try:
+        results = run_batch(
+            spark, documents, media_blobs, checkpoint=prior, job_ts=job_ts, **plan
+        ).persist()
+        write_output(
+            results, project_targets(results, targets, job_ts, suffix=suffix, addition=addition)
+        )
+        rows = ckpt.checkpoint_rows(results, run_id=run_id, job_ts=job_ts, prior=prior)
+        write_lineage(rows)
+        if metrics_dir is not None:
+            full = rows if prior is None else prior.unionByName(rows)
+            ckpt.partition_metrics(full).write.mode("overwrite").parquet(metrics_dir)
+    finally:
+        for df in (results, prior):
+            if df is not None:
+                df.unpersist()

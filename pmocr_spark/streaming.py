@@ -15,10 +15,11 @@ subsumed by Structured Streaming micro-batches:
                               shared session (cli.launch_monitors,
                               repeatable --monitor DIR=TARGETS)
 
-The per-batch transform is EXACTLY the batch plan (pipeline.extract_spans
-/ reassemble) applied inside foreachBatch — identical semantics, one
-code path, per pmOCR where service mode calls the same OCR_Dispatch
-(pmocr.sh:2195-2224).
+Each micro-batch runs pipeline.run_job inside foreachBatch, the same job
+body the batch CLI runs — identical semantics, one code path, per pmOCR
+where service mode calls the same OCR_Dispatch (pmocr.sh:2195-2224). An
+epoch adds only its clock, the replay filter, the dedup annotations and
+its epoch-N overwrites.
 """
 
 from __future__ import annotations
@@ -250,9 +251,7 @@ def monitor(
     run_id: str = "stream",
     job_ts: str = "2024-01-01T00:00:00Z",
     trigger: dict | None = None,
-    max_files_per_trigger: int | None = None,
     alerts_dir: str | None = None,
-    alert_threshold: int = 1,
     epoch_ts_step_s: int = 30,
     targets: list[str] | None = None,
     suffix: str = "_OCR",
@@ -287,7 +286,7 @@ def monitor(
       epoch re-stamps the identical ts). After MAX_RETRIES re-admissions
       the doc is never reprocessed (S6).
     - alert sink (S7, pmOCR SendAlert pmocr.sh:428-480): when a batch has
-      >= alert_threshold failed docs and alerts_dir is set, one alert row
+      at least one failed doc and alerts_dir is set, one alert row
       (run_id, epoch_id, failed_docs, docs, first_error, ts) is written —
       idempotent per epoch, same overwrite scheme.
     - cross-epoch near-dup suppression (round 4): with dedup_index_dir
@@ -376,8 +375,6 @@ def monitor(
                 )
 
     reader = spark.readStream.schema(DOCUMENTS_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     if input_format == "jsonl":
         # web-pipeline interchange drops (sources/jsonl.py): same
         # explicit span schema — streaming schema inference is doubly
@@ -413,87 +410,47 @@ def monitor(
             # with a different --run-id while epoch E sat uncommitted
             # would otherwise keep the crashed attempt's rows, exclude
             # every doc, and overwrite epoch E with empty tables.
-            # persist: the resume filter AND checkpoint_rows' retry-count
-            # lookup each aggregate this ever-growing table — one scan,
-            # not two per epoch.
-            lineage = lineage.filter(~F.col("run_id").rlike(f"#e{epoch_id}$")).persist()
-        results = pipeline.run_batch(
-            spark,
-            batch_df,
-            media_blobs,
-            checkpoint=lineage,
-            num_partitions=num_partitions,
-            broadcast_spans=broadcast_spans,
-            job_ts=epoch_ts,
-            ocr_udf=ocr_udf,
-        )
-        results.persist()
-        dup_map = None
-        clean_map = None
-        try:
-            out = pipeline.project_targets(
-                results,
-                list(targets) if targets else ["txt", "csv"],
-                epoch_ts,
-                suffix=suffix,
-                addition=filename_addition,
-            )
+            lineage = lineage.filter(~F.col("run_id").rlike(f"#e{epoch_id}$"))
+
+        def write_output(results: DataFrame, out: DataFrame) -> None:
             if dedup_index_dir is not None:
-                dup_map = _epoch_dedup(
-                    spark, results, dedup_index_dir, epoch_id
-                )
+                dup_map = _epoch_dedup(spark, results, dedup_index_dir, epoch_id)
                 out = out.join(dup_map, "doc_id", "left")
             if substr_index_dir is not None:
-                clean_map = _epoch_substr_dedup(
-                    spark, results, substr_index_dir, epoch_id
-                )
+                clean_map = _epoch_substr_dedup(spark, results, substr_index_dir, epoch_id)
                 out = out.join(clean_map, "doc_id", "left")
             out.write.mode("overwrite").parquet(f"{output_dir}/epoch-{epoch_id}")
-            rows = ckpt.checkpoint_rows(results, run_id=epoch_run, job_ts=epoch_ts, prior=lineage)
-            rows.write.mode("overwrite").parquet(f"{lineage_dir}/epoch-{epoch_id}")
-            if alerts_dir is not None:
-                # the batch's TOTAL drop count (the S7 contract), not the
-                # post-resume-filter result count — '1 of 6 dropped files
-                # failed' must not read as '100% of a 1-doc batch failed'
-                n_docs = batch_df.count()
-                n_failed = results.filter(F.col("status") == "failed").count()
-                if n_failed >= alert_threshold:  # no empty epoch-N dirs
-                    alert = (
-                        results.filter(F.col("status") == "failed")
-                        .agg(
-                            F.count("*").alias("failed_docs"),
-                            F.min_by("error", "doc_id").alias("first_error"),
-                        )
-                        .select(
-                            F.lit(run_id).alias("run_id"),
-                            F.lit(epoch_id).cast("long").alias("epoch_id"),
-                            "failed_docs",
-                            F.lit(n_docs).cast("long").alias("docs"),
-                            "first_error",
-                            F.lit(epoch_ts).cast("timestamp").alias("ts"),
-                        )
-                    )
-                    alert.write.mode("overwrite").parquet(f"{alerts_dir}/epoch-{epoch_id}")
-            if metrics_dir is not None:
-                # per-partition skew report over the full lineage (incl.
-                # this epoch) — the north-rule observability story for
-                # the long-running mode; overwrite: it is a derived view.
-                # Reuse the ALREADY-READ prior lineage (persisted above,
-                # replay-filtered) + this epoch's rows instead of
-                # re-reading the whole table — the re-read was an
-                # O(total history) scan per epoch, the same unbounded
-                # growth the checkpoint_rows semi-join avoids (round-3
-                # ADVICE).
-                full = rows if lineage is None else lineage.unionByName(rows)
-                ckpt.partition_metrics(full).write.mode("overwrite").parquet(metrics_dir)
-        finally:
-            results.unpersist()
-            if dup_map is not None:
-                dup_map.unpersist()
-            if clean_map is not None:
-                clean_map.unpersist()
-            if lineage is not None:
-                lineage.unpersist()
+            if alerts_dir is None:
+                return
+            # the batch's TOTAL drop count (the S7 contract), not the
+            # post-resume-filter result count — '1 of 6 dropped files
+            # failed' must not read as '100% of a 1-doc batch failed'
+            n_docs = batch_df.count()
+            failed = results.filter(F.col("status") == "failed")
+            if failed.count() > 0:  # no empty epoch-N dirs
+                alert = failed.agg(
+                    F.count("*").alias("failed_docs"),
+                    F.min_by("error", "doc_id").alias("first_error"),
+                ).select(
+                    F.lit(run_id).alias("run_id"),
+                    F.lit(epoch_id).cast("long").alias("epoch_id"),
+                    "failed_docs",
+                    F.lit(n_docs).cast("long").alias("docs"),
+                    "first_error",
+                    F.lit(epoch_ts).cast("timestamp").alias("ts"),
+                )
+                alert.write.mode("overwrite").parquet(f"{alerts_dir}/epoch-{epoch_id}")
+
+        pipeline.run_job(
+            spark, batch_df, media_blobs, lineage, run_id=epoch_run,
+            job_ts=epoch_ts, targets=list(targets) if targets else ["txt", "csv"],
+            write_output=write_output,
+            write_lineage=lambda rows: rows.write.mode("overwrite").parquet(
+                f"{lineage_dir}/epoch-{epoch_id}"
+            ),
+            suffix=suffix, addition=filename_addition, metrics_dir=metrics_dir,
+            num_partitions=num_partitions, broadcast_spans=broadcast_spans, ocr_udf=ocr_udf,
+        )
 
     writer = stream.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_dir

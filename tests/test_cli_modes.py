@@ -160,6 +160,20 @@ def test_required_with_error(capsys, argv, groups):
          "--phash-max-hamming must be in 0..64"),
         (["--phash-dedup", "--blobs", "b", "--output", "o", "--phash-max-hamming", "65"],
          "--phash-max-hamming must be in [0, 64]"),
+        (["--keywords", "3", "--input", "i", "--output", "o", "--once"],
+         "--once is a service-mode reconciliation pass (W4); use with --service"),
+        (["--keywords", "3", "--input", "i", "--output", "o", "--monitor", "d=txt"],
+         "--monitor requires --service (pmOCR's per-dir OCR_service)"),
+        (["--compact-lineage", "--lineage", "l", "--dedup-index", "d"],
+         "--dedup-index is the service-mode cross-epoch near-dup pass; "
+         "batch runs use the standalone --build/--probe-dedup-index modes"),
+        (["--compact-lineage", "--lineage", "l", "--dedup-substrings-index", "d"],
+         "--dedup-substrings-index is the service-mode cross-epoch substring pass; "
+         "batch corpora use the standalone --dedup-substrings mode"),
+        (["--service", "--input", "i", "--blobs", "b", "--output", "o", "--lineage", "l",
+          "--raw", "r"],
+         "--raw is batch-only (no binaryFile streaming source); "
+         "service mode consumes parquet document drops"),
     ],
 )
 def test_other_errors(capsys, argv, msg):
@@ -196,6 +210,7 @@ _PHRASE = ["--search-phrase", "a b", "--input", "i", "--output", "o"]
         _BATCH + ["--phash-max-hamming", "3"],
         _BATCH + ["--probe-broadcast", "force"],
         _BATCH + ["--text-col", "txt"],
+        _KEYWORDS + ["--engine", "tesseract"],
     ],
     ids=lambda argv: " ".join(argv[:1] + argv[-2:]),
 )
