@@ -142,7 +142,8 @@ def append_checkpoint(rows: DataFrame, path: str) -> None:
     of that plan BEFORE calling this — Spark re-reads the directory on
     any cache-miss recompute, and the freshly appended rows would
     anti-join the batch's own docs away. pipeline.run_job enforces this
-    order for the batch CLI and every service epoch.
+    order for the batch CLI and every service epoch: its sinks and the
+    --metrics report are written before the lineage.
     """
     rows.write.mode("append").parquet(path)
 

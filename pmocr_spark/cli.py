@@ -933,6 +933,8 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
         parser.error(f"{' and '.join(m.flag for m in maint)} are separate maintenance modes")
     args.mode = maint[0].flag if maint else ("--service" if args.service else "--batch")
     mode = MODES[args.mode]
+    if not maint and args.batch and args.service:
+        parser.error("--batch and --service are mutually exclusive")
     for dests, msg in _STRAY:
         if any(d not in mode.owns and _is_set(parser, args, d) for d in dests):
             parser.error(msg)
@@ -953,8 +955,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
         return args
     if not (args.batch or args.service):
         parser.error("one of --batch / --service is required (flag or config)")
-    if args.batch and args.service:
-        parser.error("--batch and --service are mutually exclusive")
     if args.service and args.compact_lineage:
         parser.error(
             "--compact-lineage cannot run under --service: compacting a "
@@ -1097,18 +1097,7 @@ def _read_tables(spark, args, docs: bool = True):
     )
 
 
-def _ocr_udf(args):
-    """--engine as the pipeline's decode UDF ('codec' is None: the
-    env-driven default); an unknown or missing engine raises here."""
-    if args.engine == "codec":
-        return None
-    from . import engines
-
-    return engines.ocr_udf_for(args.engine)
-
-
 def _run_service(spark, args) -> None:
-    ocr_udf = _ocr_udf(args)
     job_ts = args.job_ts.replace("T", " ").replace("Z", "")
     suffix = "" if args.no_suffix else args.suffix
     _, blobs = _read_tables(spark, args, docs=False)
@@ -1116,7 +1105,9 @@ def _run_service(spark, args) -> None:
     # default.conf:33); --once: W4 reconciliation pass that drains
     # the landing dir(s) and terminates
     trigger = {"availableNow": True} if args.once else {"processingTime": "30 seconds"}
-    queries = launch_monitors(spark, args, blobs, job_ts, suffix, trigger=trigger, ocr_udf=ocr_udf)
+    queries = launch_monitors(
+        spark, args, blobs, job_ts, suffix, trigger=trigger, ocr_udf=args.ocr_udf
+    )
     # all queries run concurrently; blocking on each in turn = block
     # until every monitor stops (pmOCR parks in its sleep loop while
     # the per-dir OCR_service subshells run, pmocr.sh:2540-2544)
@@ -1131,11 +1122,13 @@ def _run_batch(spark, args) -> None:
     from . import checkpoint as ckpt
     from . import pipeline
 
-    ocr_udf = _ocr_udf(args)
     job_ts = args.job_ts.replace("T", " ").replace("Z", "")
     docs, blobs = _read_tables(spark, args)
     lineage = ckpt.read_checkpoint(spark, args.lineage)
     if lineage is not None:
+        # one scan for the warning + resume filter + retry-count lookup
+        # (run_job unpersists it)
+        lineage = lineage.persist()
         # P2 retry runs on the deterministic job clock: if --job-ts does
         # not advance past the last run's, failed docs stay postponed
         # forever and retry-with-postponement silently never fires
@@ -1198,7 +1191,7 @@ def _run_batch(spark, args) -> None:
         write_lineage=lambda rows: ckpt.append_checkpoint(rows, args.lineage),
         suffix="" if args.no_suffix else args.suffix, addition=args.filename_addition,
         metrics_dir=args.metrics, num_partitions=args.num_partitions,
-        broadcast_spans=(args.span_join != "shuffle"), ocr_udf=ocr_udf,
+        broadcast_spans=(args.span_join != "shuffle"), ocr_udf=args.ocr_udf,
     )
     if args.compact_lineage:
         # after metrics: the per-run partition report needs the full
@@ -2543,6 +2536,15 @@ def main(argv: list[str] | None = None) -> None:
         # pure driver-side arithmetic: no Spark session, instant
         _lsh_plan(None, args)
         return
+    # the pipelines resolve --engine BEFORE any Spark work: a missing
+    # tesseract install (or an unknown name) fails fast at the CLI, not
+    # deep in an executor task. 'codec' resolves to None = the env-driven
+    # default UDF instance (identical behavior/plan to pre---engine builds).
+    args.ocr_udf = None
+    if args.mode in _PIPELINES and args.engine != "codec":
+        from . import engines
+
+        args.ocr_udf = engines.ocr_udf_for(args.engine)
     from .session import get_spark
 
     spark = get_spark(app="pmocr_spark_job", master=args.master)

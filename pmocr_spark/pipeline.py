@@ -366,9 +366,9 @@ def run_job(
     targets: list[str],
     write_output,
     write_lineage,
-    suffix: str = "_OCR",
-    addition: str | None = None,
-    metrics_dir: str | None = None,
+    suffix: str,
+    addition: str | None,
+    metrics_dir: str | None,
     **plan,
 ) -> None:
     """One OCR job: the batch CLI's run and every service epoch (pmOCR's
@@ -376,18 +376,20 @@ def run_job(
 
     Commit order: run_batch (results persisted) -> project_targets ->
     write_output(results, out), the caller's sinks -> checkpoint_rows ->
-    write_lineage(rows), after every output (the ORDERING HAZARD of
-    checkpoint.append_checkpoint) -> with metrics_dir, partition_metrics
-    of prior ∪ rows (the whole lineage after this job), overwritten.
+    with metrics_dir, partition_metrics of prior ∪ rows (the whole
+    lineage after this job), overwritten -> write_lineage(rows), last:
+    every other output of the plan is written before the lineage commit
+    (the ORDERING HAZARD of checkpoint.append_checkpoint).
 
     `prior` is the lineage as of the resume read (None on a first run),
-    persisted here so resume, retry counts and metrics share one scan.
-    `plan` (num_partitions, broadcast_spans, ocr_udf) goes to run_batch.
-    The results and `prior` are unpersisted on every exit, so a job that
-    raises leaves no cache behind."""
+    persisted here unless the caller already has, so resume, retry
+    counts and metrics share one scan. `plan` (num_partitions,
+    broadcast_spans, ocr_udf) goes to run_batch. The results and `prior`
+    are unpersisted on every exit, so a job that raises leaves no cache
+    behind."""
     from . import checkpoint as ckpt
 
-    if prior is not None:
+    if prior is not None and not prior.is_cached:
         prior = prior.persist()
     results = None
     try:
@@ -398,10 +400,10 @@ def run_job(
             results, project_targets(results, targets, job_ts, suffix=suffix, addition=addition)
         )
         rows = ckpt.checkpoint_rows(results, run_id=run_id, job_ts=job_ts, prior=prior)
-        write_lineage(rows)
         if metrics_dir is not None:
             full = rows if prior is None else prior.unionByName(rows)
             ckpt.partition_metrics(full).write.mode("overwrite").parquet(metrics_dir)
+        write_lineage(rows)
     finally:
         for df in (results, prior):
             if df is not None:

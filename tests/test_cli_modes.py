@@ -170,6 +170,7 @@ def test_required_with_error(capsys, argv, groups):
         (["--compact-lineage", "--lineage", "l", "--dedup-substrings-index", "d"],
          "--dedup-substrings-index is the service-mode cross-epoch substring pass; "
          "batch corpora use the standalone --dedup-substrings mode"),
+        (["--monitor", "d=txt"], "--monitor requires --service (pmOCR's per-dir OCR_service)"),
         (["--service", "--input", "i", "--blobs", "b", "--output", "o", "--lineage", "l",
           "--raw", "r"],
          "--raw is batch-only (no binaryFile streaming source); "
