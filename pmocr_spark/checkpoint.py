@@ -1,4 +1,6 @@
-"""Checkpoint / lineage table IO (resume + metrics contract, FIXTURES.md §3).
+"""Checkpoint / lineage table IO (resume + metrics contract, FIXTURES.md §3),
+and the one commit protocol of every persisted index and model
+(commit_artifact / open_artifact, below).
 
 pmOCR encodes row state in filenames (`*_OCR.*` done, `*_OCR_ERR.*`
 failed, /root/reference/pmocr.sh:2088-2096, 2002-2010); here state lives
@@ -14,6 +16,9 @@ pmocr.sh:1154-1193); pre-retry tables read as NULL -> treated as 0.
 """
 
 from __future__ import annotations
+
+import json
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -231,25 +236,26 @@ def compact_checkpoint(spark: SparkSession, path: str) -> int:
         return 0
     compacted = compact_rows(full).persist()
     n = compacted.count()  # materialize BEFORE touching `path` (read is lazy)
-    replace_dir(spark, compacted, path, tag=".compact")
+    replace_dir(spark, compacted, path)
     compacted.unpersist()
     return n
 
 
-def replace_dir(spark: SparkSession, df: DataFrame, path: str, tag: str = ".swap") -> None:
-    """Replace the table dir at `path` with `df` via write-aside + rename
-    (scheme-agnostic through the Hadoop FS API; ATOMIC only where dir
-    rename is — HDFS/local, not object stores, see compact_checkpoint).
+def replace_dir(spark: SparkSession, df: DataFrame, path: str) -> None:
+    """Replace the lineage table dir at `path` with `df` via write-aside +
+    rename (scheme-agnostic through the Hadoop FS API; ATOMIC only where
+    dir rename is — HDFS/local, not object stores, see
+    compact_checkpoint).
 
     IMPORTANT: `df` must already be materialized (persisted + counted,
     or read from elsewhere) — it is written BEFORE `path` is touched,
     but a lazy plan still scanning `path` would race its own rename.
 
-    Orphan hygiene (round-3 ADVICE): a stale <path><tag>.tmp from a
+    Orphan hygiene (round-3 ADVICE): a stale <path>.compact.tmp from a
     crashed earlier run is deleted up front, the bak-exists refusal
     happens BEFORE the (expensive) tmp write, and the tmp is removed on
     every failure path so no run leaves both artifacts behind."""
-    tmp, bak = f"{path}{tag}.tmp", f"{path}{tag}.bak"
+    tmp, bak = f"{path}.compact.tmp", f"{path}.compact.bak"
     fs, hp, htmp, hbak = _fs(spark, path, tmp, bak)
     if fs.exists(hbak):
         raise RuntimeError(
@@ -269,52 +275,175 @@ def replace_dir(spark: SparkSession, df: DataFrame, path: str, tag: str = ".swap
     fs.delete(hbak, True)
 
 
-def write_sidecar(spark: SparkSession, path: str, name: str, meta: dict) -> None:
-    """Write/refresh an underscore-prefixed JSON params sidecar inside a
-    parquet table dir (invisible to Spark readers; via Hadoop FS so it
-    works on any scheme the table does). The generic version of the
-    dedup-index sidecar pattern — any persisted operator state whose
-    parameters are part of its identity stores them this way."""
-    import json
+# ------------------------------------------------- persisted artifacts
+#
+# Every persisted index and model commits the same way (pmOCR's
+# rename-as-commit, pmocr.sh:2067-2096): its frames go to a new
+# generation dir <path>/<gen>/<name>, then its sidecar — kind,
+# format_version, the committed generations, the kind's params — is
+# written to a hidden temp file and renamed to the next unused
+# <path>/<stem>.<n>.json. The newest sidecar wins and readers open only
+# the generations it lists, so a crash at any step leaves the previous
+# commit readable and a retry lands exactly once. What the new sidecar
+# does not list is deleted after the rename. The lineage table above is
+# not such an artifact: Spark's job commit appends it, the stream
+# replays it.
 
-    fs, hp = _fs(spark, f"{path}/{name}")
-    out = fs.create(hp, True)
-    try:
-        out.write(bytearray(json.dumps(meta).encode()))
-    finally:
-        out.close()
+#: the artifact format this build writes and reads
+FORMAT_VERSION = 1
+
+#: kind -> (sidecar stem, what it is, the mode that rebuilds it). The
+#: format before format_version kept one unversioned <stem>.json.
+ARTIFACT_KINDS = {
+    "text_index": ("_TEXT_INDEX_META", "text index", "--build-text-index"),
+    "bloom_index": ("_bloom_meta", "Bloom index", "--build-bloom-index"),
+    "pq_index": ("_pq_index_meta", "PQ index", "--build-pq-index"),
+    "dedup_index": ("_dedup_index_meta", "dedup index", "--build-dedup-index"),
+    "substr_index": ("_substr_index_meta", "gram index", "--dedup-substrings-index"),
+    "bpe_model": ("_bpe_model", "BPE model", "--train-bpe"),
+    "unigram_model": ("_unigram_model", "unigram model", "--train-unigram"),
+    "quality_model": ("_lr_model", "quality model", "--train-quality"),
+}
+_KIND_OF_STEM = {stem: kind for kind, (stem, _l, _m) in ARTIFACT_KINDS.items()}
+_SIDECAR = re.compile(r"(_\w+?)(?:\.(\d+))?\.json\Z")
+#: generation dir names: gen-<commit> for builds, epoch-<E> for stream epochs
+_GENERATION = re.compile(r"(gen|epoch)-\d+\Z")
 
 
-def read_sidecar(spark: SparkSession, path: str, name: str) -> dict | None:
-    """Read a params sidecar written by write_sidecar; None if absent.
-    Read errors on an EXISTING sidecar propagate (corruption must not
-    degrade into 'no params recorded')."""
-    import json
+def _scan(fs, hp):
+    """One listing of an artifact dir: ({kind: newest commit n}, {kinds
+    with an unversioned sidecar}, [top-level data entries])."""
+    newest, unversioned, data = {}, set(), []
+    for st in fs.listStatus(hp) if fs.exists(hp) else []:
+        name = st.getPath().getName()
+        m = _SIDECAR.match(name)
+        if m and m[1] in _KIND_OF_STEM:
+            kind = _KIND_OF_STEM[m[1]]
+            if m[2] is None:
+                unversioned.add(kind)
+            else:
+                newest[kind] = max(newest.get(kind, 0), int(m[2]))
+        elif not name.startswith(("_", ".")) and not _GENERATION.match(name):
+            data.append(name)
+    return newest, unversioned, data
 
-    fs, hp = _fs(spark, f"{path}/{name}")
-    if not fs.exists(hp):
+
+def _committed(spark, fs, path: str, kind: str, scan, op: str) -> dict | None:
+    """The newest sidecar of `kind` at `path`, None when nothing was
+    committed there; raises on any layout this build cannot read."""
+    newest, unversioned, data = scan
+    stem, label, rebuild = ARTIFACT_KINDS[kind]
+    other = next((k for k in (*newest, *unversioned) if k != kind), None)
+    if kind not in newest and other is not None:
+        raise ValueError(f"cannot {op} {path}: it holds a {ARTIFACT_KINDS[other][1]}")
+    if kind not in newest and (kind in unversioned or data):
+        raise ValueError(
+            f"cannot {op} {path}: no {stem} sidecar with a format_version, so it is "
+            f"not a {label} dir this build reads; rebuild it with {rebuild}"
+        )
+    if kind not in newest:
         return None
-    stream = fs.open(hp)
+    stream = fs.open(_fs(spark, f"{path}/{stem}.{newest[kind]}.json")[1])
     try:
         raw = bytes(spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))  # noqa: SLF001
     finally:
         stream.close()
-    return json.loads(raw.decode())
+    doc = json.loads(raw.decode())
+    if doc.get("format_version") != FORMAT_VERSION:
+        raise ValueError(
+            f"cannot {op} {path}: format_version {doc.get('format_version')} is unknown "
+            f"to this build; rebuild the {label} with {rebuild}"
+        )
+    return doc
 
 
-def dir_has_data(spark: SparkSession, path: str) -> bool:
-    """Does `path` hold any non-hidden entries (real table data beyond
-    sidecars)? The explicit-probe replacement for try/except around a
-    read — a bare except turns ANY read failure (corrupt footer,
-    transient FS error, permissions) into 'nothing persisted yet'."""
+def open_artifact(
+    spark: SparkSession, path: str, kind: str, required: str | None = None
+) -> tuple[dict, dict[str, list[str]]] | None:
+    """Open the committed state of a persisted artifact: (params, {frame
+    name: [committed generation paths]}), or None when nothing was
+    committed at `path` (no dir, an empty dir, or generation dirs an
+    interrupted first commit left behind). With `required` (the
+    operation, e.g. 'read' or 'append to') an absent artifact raises.
+
+    Always raises on a layout this build cannot read: top-level data
+    with no sidecar, another kind's sidecar, and any format_version but
+    FORMAT_VERSION — which includes every unversioned sidecar written
+    before it; the message names the mode that rebuilds the artifact."""
     fs, hp = _fs(spark, path)
-    if not fs.exists(hp):
-        return False
+    doc = _committed(spark, fs, path, kind, _scan(fs, hp), required or "open")
+    if doc is None and required:
+        stem, label, rebuild = ARTIFACT_KINDS[kind]
+        raise ValueError(
+            f"cannot {required} {path}: no {stem} sidecar, so it is not a {label} "
+            f"dir; build one with {rebuild}"
+        )
+    return doc and (
+        doc["params"],
+        {n: [f"{path}/{g}/{n}" for g in doc["generations"]] for n in doc["frames"]},
+    )
+
+
+def _publish(fs, src, dst) -> None:
+    """The commit point: rename the fully written sidecar temp file to
+    its not-yet-taken final name."""
+    if not fs.rename(src, dst):
+        raise RuntimeError(f"could not commit {dst}")
+
+
+def commit_artifact(
+    spark: SparkSession,
+    path: str,
+    kind: str,
+    meta: dict,
+    frames: dict[str, DataFrame] | None = None,
+    *,
+    mode: str,
+    generation: str | None = None,
+) -> None:
+    """Commit `frames` (name -> DataFrame) as one new generation of the
+    artifact at `path`, with `meta` as its params, sidecar last.
+
+    mode='overwrite' (build, merge, compact) commits a generation list
+    holding only the new generation; mode='append' adds it to the
+    committed list, and refuses what open_artifact refuses. `generation`
+    names it (default gen-<commit>); the stream commits epoch-<E>, so a
+    replay rewrites its own generation. With no frames only the params
+    change. The replaced generations are deleted after the commit, so
+    the frames must not still read them lazily."""
+    if mode not in ("overwrite", "append"):
+        raise ValueError(f"unknown commit mode {mode!r}")
+    fs, hp = _fs(spark, path)
+    scan = _scan(fs, hp)
+    n = scan[0].get(kind, 0) + 1
+    doc = _committed(spark, fs, path, kind, scan, "append to") if mode == "append" else None
+    gens, names = (doc["generations"], doc["frames"]) if doc else ([], [])
+    if frames:
+        gen = generation or f"gen-{n}"
+        for name, df in frames.items():
+            df.write.mode("overwrite").parquet(f"{path}/{gen}/{name}")
+        gens, names = (gens if gen in gens else [*gens, gen]), sorted(frames)
+    side = f"{ARTIFACT_KINDS[kind][0]}.{n}.json"
+    _fs_, htmp, hside = _fs(spark, f"{path}/.{side}.tmp", f"{path}/{side}")
+    out = fs.create(htmp, True)
+    try:
+        out.write(bytearray(json.dumps({
+            "kind": kind, "format_version": FORMAT_VERSION,
+            "generations": gens, "frames": names, "params": meta,
+        }).encode()))
+    finally:
+        out.close()
+    _publish(fs, htmp, hside)
+    # sweep the sidecars and generations this commit does not list;
+    # files the format does not own are left alone
     for st in fs.listStatus(hp):
         name = st.getPath().getName()
-        if not name.startswith(("_", ".")):
-            return True
-    return False
+        m = _SIDECAR.match(name.lstrip(".").removesuffix(".tmp"))
+        owned = _GENERATION.match(name) or (m and m[1] in _KIND_OF_STEM)
+        if owned and name not in (*gens, side):
+            fs.delete(st.getPath(), True)
+    # a replayed generation rewrites part files some cached listing may hold
+    spark.catalog.refreshByPath(path)
 
 
 def partition_metrics(checkpoint: DataFrame) -> DataFrame:

@@ -165,13 +165,13 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--build-dedup-index", metavar="DIR",
         help="maintenance mode (standalone, like --compact-lineage): build the banded-MinHash "
-        "dedup index over --input documents and persist it (with its params sidecar) at DIR "
+        "dedup index over --input documents and commit it with its banding params at DIR "
         "(operators/dedup_index.build_index/write_index)",
     )
     p.add_argument(
         "--probe-dedup-index", metavar="DIR",
-        help="maintenance mode: probe the --input batch against the persisted index at DIR (params "
-        "from its sidecar) and write (doc_id, dup_of, n_bands) hits to --output",
+        help="maintenance mode: probe the --input batch against the persisted index at DIR (its "
+        "committed params) and write (doc_id, dup_of, n_bands) hits to --output",
     )
     p.add_argument(
         "--merge-dedup-index", metavar="DIR",
@@ -187,15 +187,15 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--build-pq-index", metavar="DIR",
         help="maintenance mode: PQ-encode the --input embeddings table (vec_id, embedding) and "
-        "persist codes + codebook sidecar at DIR (operators/pq.write_pq_index; 32x "
+        "commit codes + codebook at DIR (operators/pq.write_pq_index; 32x "
         "compression — the encode pass reads every raw vector ONCE, then searches probe the "
         "8-byte codes)",
     )
     p.add_argument(
         "--append-pq-index", metavar="DIR",
-        help="maintenance mode: encode the --input batch against the index's SIDECAR codebook and "
-        "append its codes to DIR — per-vector codes are independent, so growth is pure append "
-        "(no merge/compaction pass; vec_ids must be new)",
+        help="maintenance mode: encode the --input batch against the index's COMMITTED codebook "
+        "and append its codes to DIR — per-vector codes are independent, so growth is one more "
+        "generation (no merge/compaction pass; vec_ids must be new)",
     )
     p.add_argument(
         "--probe-pq-index", metavar="DIR",
@@ -219,7 +219,7 @@ def build_parser() -> argparse.ArgumentParser:
         "--train-codebook", type=int, nargs="?", const=2, metavar="ITERS",
         help="--build-pq-index: refine the deterministic seed codebook with ITERS per-subspace "
         "Lloyd iterations (default 2) before encoding — the PQ recall lever (distortion drops "
-        "~25%% on the test corpus); the trained codebook persists in the sidecar, so appends "
+        "~25%% on the test corpus); the trained codebook is committed with the index, so appends "
         "and probes need no flag. At 10^12 vectors train on a sample of --input, not the full "
         "corpus",
     )
@@ -235,14 +235,14 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--build-bloom-index", metavar="DIR",
         help="maintenance mode: build the Bloom membership pre-filter over the --input table's "
-        "--bloom-key-col content hashes and persist set-bit positions + (m,k) geometry "
-        "sidecar at DIR (operators/bloom; the cheap first tier of incremental dedup — probe "
+        "--bloom-key-col content hashes and commit set-bit positions + (m,k) geometry "
+        "at DIR (operators/bloom; the cheap first tier of incremental dedup — probe "
         "answers 'definitely new' with zero shuffle)",
     )
     p.add_argument(
         "--append-bloom-index", metavar="DIR",
         help="maintenance mode: add the --input batch's positions to the filter at DIR (Bloom OR "
-        "== pure append of position rows; geometry comes from the sidecar and a mismatch is "
+        "== one more generation of position rows; geometry is the committed one, a mismatch is "
         "refused). Run --compact-bloom-index periodically to drop duplicates",
     )
     p.add_argument(
@@ -274,14 +274,14 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--build-text-index", metavar="DIR",
         help="maintenance mode: build the persisted BM25 inverted index over the --input documents "
-        "table at DIR (operators/bm25.write_text_index: postings/dl/df subtables + stats "
-        "sidecar)",
+        "table at DIR (operators/bm25.write_text_index: postings/dl/df subtables, stats "
+        "committed with them)",
     )
     p.add_argument(
         "--append-text-index", metavar="DIR",
-        help="maintenance mode: tokenize the --input batch with the index's sidecar params and "
-        "append — postings/dl/df are additive over disjoint doc_id batches, so growth is pure "
-        "append (no merge pass); sidecar stats accumulate",
+        help="maintenance mode: tokenize the --input batch with the index's committed params and "
+        "append — postings/dl/df are additive over disjoint doc_id batches, so growth is one "
+        "more generation (no merge pass); the committed stats accumulate",
     )
     p.add_argument(
         "--search-text", metavar="DIR",
@@ -352,7 +352,7 @@ def build_parser() -> argparse.ArgumentParser:
         help="maintenance mode (standalone): train the quality classifier "
         "(operators/quality_classifier.py — full-batch logistic regression, exact integer "
         "gradients) on the --input flat documents table and persist the model (weights + "
-        "training standardization stats) to --output as a _lr_model.json sidecar",
+        "training standardization stats) to --output as a committed model dir",
     )
     p.add_argument(
         "--score-quality", metavar="MODELDIR",
@@ -605,7 +605,7 @@ def build_parser() -> argparse.ArgumentParser:
         "--train-bpe", type=int, metavar="N_MERGES",
         help="maintenance mode (standalone): learn up to N_MERGES BPE merges over the --input "
         "documents table (operators/bpe.py, distributed Sennrich '16) and persist the model "
-        "dir to --output (merge table + params in a _bpe_model.json sidecar). On a cluster "
+        "dir to --output (merge table + params, committed as one sidecar). On a cluster "
         "set PMOCR_RELIABLE_CHECKPOINT=1 and a checkpoint dir: each merge round's lineage cut "
         "is then fault-tolerant instead of executor-local (session.reliable_checkpoint)",
     )
@@ -666,7 +666,7 @@ def build_parser() -> argparse.ArgumentParser:
         help="maintenance mode (standalone): train a unigram-LM tokenizer (Kudo ACL'18, the "
         "SentencePiece algorithm) of VOCAB_SIZE pieces over the --input documents table "
         "(operators/unigram_lm.py) and persist the model dir to --output (piece table + "
-        "params in a _unigram_model.json sidecar)",
+        "params, committed as one sidecar)",
     )
     p.add_argument(
         "--encode-unigram", metavar="MODEL_DIR",
@@ -709,8 +709,8 @@ def build_parser() -> argparse.ArgumentParser:
         "--dedup-substrings-index", metavar="DIR",
         help="service mode: cross-epoch substring dedup — each epoch's extracted txt is stripped "
         "of duplicated >= k-word spans, both within the batch and against the persisted gram "
-        "index at DIR (built up epoch by epoch, replay-idempotent; gram width recorded in its "
-        "sidecar); the epoch output gains txt_clean/words_removed columns. Per-monitor "
+        "index at DIR (built up epoch by epoch, replay-idempotent; gram width committed with "
+        "it); the epoch output gains txt_clean/words_removed columns. Per-monitor "
         "subdirs with --monitor. Batch corpora use the standalone --dedup-substrings.",
     )
     p.add_argument("--alerts", help="alert table dir (S7; service mode)")
@@ -832,6 +832,12 @@ def _within(dest: str, lo, hi, msg: str) -> tuple:
     return (lambda a: getattr(a, dest) is not None and not lo <= getattr(a, dest) <= hi, msg)
 
 
+#: options only the pipelines read (owned by --batch and --service)
+_PIPELINE_ONLY = ("engine", "span_join", "num_partitions", "targets", "job_ts", "run_id", "suffix",
+             "no_suffix", "filename_addition", "metrics")
+_BATCH_ONLY = ("partition_by", "output_format")
+_SERVICE_ONLY = ("alerts", "stream_checkpoint")
+
 #: options that only some modes read (their Mode.owns), and the error
 #: printed when one is set under any other mode — checked before any
 #: dispatch, so no mode silently drops a knob meant for another
@@ -867,7 +873,6 @@ _STRAY = (
     (("probe_broadcast",), "--probe-broadcast only applies to --probe-dedup-index"),
     (("text_col",), "--text-col only applies to --search-phrase/--fix-text/--spell-fix/"
      "--keywords/--collocations/--kwic/--eval-extraction"),
-    (("engine",), "--engine only applies to --batch/--service"),
     (("monitor",), "--monitor requires --service (pmOCR's per-dir OCR_service)"),
     (("once",), "--once is a service-mode reconciliation pass (W4); use with --service"),
     (("dedup_index",), "--dedup-index is the service-mode cross-epoch near-dup pass; "
@@ -876,6 +881,14 @@ _STRAY = (
      "substring pass; batch corpora use the standalone --dedup-substrings mode"),
     (("raw",), "--raw is batch-only (no binaryFile streaming source); "
      "service mode consumes parquet document drops"),
+) + tuple(
+    ((dest,), f"--{dest.replace('_', '-')} only applies to {owners}")
+    for dests, owners in (
+        (_PIPELINE_ONLY, "--batch/--service"),
+        (_BATCH_ONLY, "--batch"),
+        (_SERVICE_ONLY, "--service"),
+    )
+    for dest in dests
 )
 
 _PIPELINES = ("--batch", "--service")
@@ -1260,49 +1273,34 @@ def _compact_lineage(spark, args) -> None:
 def _dedup_index(spark, args, op: str) -> None:
     """Dedup-index lifecycle maintenance (round-3 verdict item #4): the
     persisted-index recipe from operators/dedup_index's module docstring
-    as CLI modes. build writes index+sidecar; probe/merge band the new
-    batch with the SIDECAR's params (never the defaults — a mismatched
+    as CLI modes. build commits index+params; probe/merge band the new
+    batch with the COMMITTED params (never the defaults — a mismatched
     banding silently finds nothing, which probe_index now rejects);
     merge is append-cheap (apply_cap=False); compact runs the periodic
-    hot-bucket cap. merge/compact rewrite the index dir via
-    checkpoint.replace_dir (write-aside + rename; atomic on
-    rename-atomic filesystems) and restore the params sidecar the swap
-    discarded.
+    hot-bucket cap. merge/compact commit the rewritten index as one new
+    generation with the same params (checkpoint.commit_artifact).
 
-    Cap discipline: the hot-bucket cap is a POLICY (recorded in the
-    sidecar), never applied to rows the index STORES — build and merge
+    Cap discipline: the hot-bucket cap is a POLICY (a committed
+    param), never applied to rows the index STORES — build and merge
     write uncapped band rows, compact enforces the cap, and probe caps
     its view of the index transiently. Capping stored rows per batch
     drops them irreversibly, so a later compaction would disagree with
     a one-shot build over the union of all batches (the parity
     tests/test_dedup_index.py and test_cli.py pin)."""
-    from . import checkpoint as ckpt
     from .operators import dedup_index as di
 
     idx_dir = getattr(args, f"{op}_dedup_index")
     if op == "build":
         docs = spark.read.parquet(args.input)
-        # uncapped rows on disk (see cap discipline above); the sidecar
-        # written by write_index records the default cap as the policy
+        # uncapped rows on disk (see cap discipline above); write_index
+        # commits the default cap as the policy
         di.write_index(di.build_index(docs, max_bucket=None), idx_dir)
         print(f"pmocr-spark: built dedup index at {idx_dir}")
         return
-    index, params = di.read_index(spark, idx_dir)
-    if op in ("merge", "compact") and params.get("source") == "defaults":
-        # refuse to LAUNDER guessed params into an authoritative sidecar:
-        # write_meta below strips the 'source' marker, so a merge/compact
-        # over a sidecar-less index would record the defaults as the
-        # build's geometry and every later probe's mismatch guard would
-        # pass vacuously (probing an 8/2-banded index with 12/3 finds
-        # nothing, silently). probe still works — its range fallback
-        # runs for defaults-sourced params.
-        raise SystemExit(
-            f"pmocr-spark: index at {idx_dir} has no params sidecar; "
-            f"--{op}-dedup-index would record the guessed defaults as its "
-            "build geometry. Restore the sidecar (dedup_index.write_meta "
-            "with the build's n_hashes/band_size/max_bucket) or rebuild "
-            "the index."
-        )
+    try:
+        index, params = di.read_index(spark, idx_dir)
+    except ValueError as e:
+        raise SystemExit(f"pmocr-spark: {e}") from e
     if op == "probe":
         docs = spark.read.parquet(args.input)
         # transient capped VIEW of the index: protects the join from
@@ -1336,8 +1334,7 @@ def _dedup_index(spark, args, op: str) -> None:
             band_size=params["band_size"],
             max_bucket=None,
         )
-        merged = di.merge_index(index, new_bands, apply_cap=False).persist()
-        n = merged.count()  # materialize before replacing the dir it reads
+        merged = di.merge_index(index, new_bands, apply_cap=False)
     else:  # compact
         merged = di.cap_index(index, params["max_bucket"])
         if "epoch" in merged.columns:
@@ -1349,18 +1346,15 @@ def _dedup_index(spark, args, op: str) -> None:
             # epoch-0 write would collide with the old subdir). Run this
             # only with the stream STOPPED — same rule as the substr twin.
             merged = merged.drop("epoch").distinct()
-        merged = merged.persist()
-        n = merged.count()
-    ckpt.replace_dir(spark, merged, idx_dir, tag=".dedup")
-    merged.unpersist()
-    di.write_meta(spark, idx_dir, params)
+    di.write_index(merged, idx_dir, **params)
+    n = di.read_index(spark, idx_dir)[0].count()
     print(f"pmocr-spark: {op} rewrote dedup index at {idx_dir} ({n} rows)")
 
 
 def _pq_index(spark, args, op: str) -> None:
     """PQ-index lifecycle maintenance, the ANN twin of _dedup_index.
-    build encodes the --input embeddings and persists codes + codebook
-    sidecar; append encodes a new batch against the SIDECAR's codebook
+    build encodes the --input embeddings and commits codes + codebook;
+    append encodes a new batch against the COMMITTED codebook
     (never a fresh one — codes from two codebooks are incomparable,
     which read_pq_index's guards enforce) and appends, no compaction
     needed (per-vector codes are independent); probe runs the ADC top-k
@@ -1454,7 +1448,7 @@ def _pq_index(spark, args, op: str) -> None:
 def _text_index(spark, args, op: str) -> None:
     """BM25 text-index lifecycle, the sparse-retrieval twin of
     _pq_index. build persists the inverted index (postings/dl/df +
-    stats sidecar) over the --input documents table; append tokenizes a
+    committed stats) over the --input documents table; append tokenizes a
     new (doc_id-disjoint) batch and appends — every component is
     additive, so there is no merge pass; search scores --query against
     the persisted index with the exact same _score_topk path the q21
@@ -1500,7 +1494,7 @@ def _bloom_index(spark, args, op: str) -> None:
     """Bloom membership pre-filter lifecycle, the cheap first tier in
     front of _dedup_index. build hashes the --input table's
     --bloom-key-col into k set-bit positions and persists them with the
-    (m, k) geometry sidecar; append is the Bloom OR (pure position
+    (m, k) geometry committed; append is the Bloom OR (pure position
     append, geometry enforced); probe answers definitely-new /
     maybe-member per input row with zero probe-side shuffle (the
     broadcast path) — route only the maybe rows to the exact index;
@@ -1552,16 +1546,15 @@ def _bloom_index(spark, args, op: str) -> None:
 
 def _compact_substr_index(spark, args) -> None:
     from . import checkpoint as ckpt
-    from .operators.substring_dedup import GRAM_META, read_gram_index
+    from .operators.substring_dedup import read_gram_index
 
     idx_dir = args.compact_substr_index
-    meta = ckpt.read_sidecar(spark, idx_dir, GRAM_META)
-    flat = read_gram_index(spark, idx_dir).select("gh").distinct().persist()
-    n = flat.count()  # materialize before replacing the dir it reads
-    ckpt.replace_dir(spark, flat, idx_dir, tag=".substr")
-    flat.unpersist()
-    if meta is not None:  # restore the sidecar the swap discarded
-        ckpt.write_sidecar(spark, idx_dir, GRAM_META, meta)
+    grams, meta = read_gram_index(spark, idx_dir)
+    ckpt.commit_artifact(
+        spark, idx_dir, "substr_index", meta, {"grams": grams.select("gh").distinct()},
+        mode="overwrite",
+    )
+    n = read_gram_index(spark, idx_dir)[0].count()
     print(f"pmocr-spark: compacted gram index at {idx_dir} to {n} rows")
 
 
@@ -2445,7 +2438,7 @@ MODES = {
              ("query", "max_df", "search_topk")),
         Mode("--search-phrase", _search_phrase, _IO, (_TOPK,), ("search_topk", *_TEXT)),
         # geometry is an index property persisted at build time —
-        # appends/probes read it from the sidecar
+        # appends/probes read the committed one
         Mode("--build-bloom-index", partial(_bloom_index, op="build"), _IN,
              (_at_least("bloom_m", 2, "--bloom-m must be >= 2"),
               _at_least("bloom_k", 1, "--bloom-k must be >= 1")),
@@ -2523,9 +2516,10 @@ MODES = {
         Mode("--compact-output", _compact_output, _IO,
              (_at_least("target_file_mb", 1, "--target-file-mb must be >= 1"),),
              ("target_file_mb",)),
-        Mode("--batch", _run_batch, owns=("engine", "raw")),
+        Mode("--batch", _run_batch, owns=("raw", *_PIPELINE_ONLY, *_BATCH_ONLY)),
         Mode("--service", _run_service,
-             owns=("engine", "once", "monitor", "dedup_index", "dedup_substrings_index")),
+             owns=("once", "monitor", "dedup_index", "dedup_substrings_index",
+                   *_PIPELINE_ONLY, *_SERVICE_ONLY)),
     )
 }
 

@@ -43,12 +43,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import checkpoint as ckpt
+
 #: default filter geometry (test-scale; size via the p ~= (1-e^(-kn/m))^k
 #: formula in production — the CLI and every function take overrides)
 BLOOM_M = 1 << 16
 BLOOM_K = 4
-
-_META_NAME = "_bloom_meta.json"
 
 
 def bloom_positions(key: Column, m: int = BLOOM_M, k: int = BLOOM_K) -> list[Column]:
@@ -140,67 +140,39 @@ def write_bloom_index(
     k: int = BLOOM_K,
     mode: str = "overwrite",
 ) -> None:
-    """Persist the set-bits table + a geometry sidecar. (m, k) are part
-    of the artifact's identity — positions computed under a different m
-    are meaningless against these bits, so append REFUSES a geometry
-    mismatch instead of silently merging garbage (the write_pq_index
-    sidecar contract). Append is the Bloom OR: just more position rows;
+    """Commit the set-bits table with its (m, k) geometry as params
+    (checkpoint.commit_artifact). (m, k) are part of the artifact's
+    identity — positions computed under a different m are meaningless
+    against these bits, so append REFUSES a geometry mismatch instead
+    of silently merging garbage (the write_pq_index contract). Append
+    is the Bloom OR: one more generation of position rows;
     compact_bloom_index rewrites them distinct."""
-    from pmocr_spark import checkpoint as _ckpt
-
     spark = bits.sparkSession
     if mode == "append":
-        meta = _ckpt.read_sidecar(spark, path, _META_NAME)
-        if meta is None:
-            raise ValueError(
-                f"Bloom index at {path} has no {_META_NAME} sidecar — append "
-                "requires an index built by write_bloom_index (the (m, k) "
-                "geometry is the append contract)."
-            )
+        meta, _paths = ckpt.open_artifact(spark, path, "bloom_index", "append to")
         if (meta["m"], meta["k"]) != (m, k):
             raise ValueError(
                 f"Bloom geometry mismatch: index at {path} was built with "
                 f"(m={meta['m']}, k={meta['k']}), this append has ({m}, {k}) "
                 "— positions from different geometries must never be merged."
             )
-        bits.write.mode("append").parquet(path)
-        return
-    bits.write.mode(mode).parquet(path)
-    _ckpt.write_sidecar(spark, path, _META_NAME, {"m": m, "k": k})
+    ckpt.commit_artifact(spark, path, "bloom_index", {"m": m, "k": k}, {"bits": bits}, mode=mode)
 
 
 def read_bloom_index(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
-    """Load (bits, meta). Appended batches may hold duplicate positions
-    (harmless for probing — the broadcast path hashes them away, the
-    join path would double-count, so we dedup here; compact to make it
-    free). Loud failure on a missing sidecar: bits without their (m, k)
-    cannot be probed."""
-    from pmocr_spark import checkpoint as _ckpt
-
-    meta = _ckpt.read_sidecar(spark, path, _META_NAME)
-    if meta is None:
-        raise ValueError(
-            f"Bloom index at {path} has no {_META_NAME} sidecar — set-bit "
-            "positions are meaningless without the (m, k) that produced "
-            "them; rebuild with write_bloom_index."
-        )
-    bits = spark.read.parquet(path).select("pos").distinct()
-    return bits, meta
+    """Load (bits, meta). Appended generations may hold duplicate
+    positions (harmless for probing — the broadcast path hashes them
+    away, the join path would double-count, so we dedup here; compact
+    to make it free)."""
+    meta, paths = ckpt.open_artifact(spark, path, "bloom_index", "read")
+    return spark.read.parquet(*paths["bits"]).select("pos").distinct(), meta
 
 
 def compact_bloom_index(spark: SparkSession, path: str) -> int:
-    """Rewrite the index distinct (drop append duplicates). Returns the
-    compacted position count. Same policy as the dedup-index compaction:
-    dedup is cheap at compaction time, free at probe time after. The
-    rewrite goes through checkpoint.replace_dir (write-aside + rename,
-    sidecar restored after the swap) — never a collect, so it holds at
-    production m."""
-    from pmocr_spark import checkpoint as _ckpt
-
+    """Rewrite the index distinct (drop append duplicates) as one
+    generation. Returns the compacted position count. Same policy as
+    the dedup-index compaction: dedup is cheap at compaction time, free
+    at probe time after — never a collect, so it holds at production m."""
     bits, meta = read_bloom_index(spark, path)
-    compacted = bits.persist()
-    n = compacted.count()  # materialize BEFORE the swap (replace_dir contract)
-    _ckpt.replace_dir(spark, compacted, path)
-    _ckpt.write_sidecar(spark, path, _META_NAME, {"m": meta["m"], "k": meta["k"]})
-    compacted.unpersist()
-    return n
+    write_bloom_index(bits, path, m=meta["m"], k=meta["k"])
+    return read_bloom_index(spark, path)[0].count()

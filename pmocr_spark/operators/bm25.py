@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from .. import checkpoint as ckpt
+
 K1 = 1.2
 B = 0.75
 
@@ -143,11 +145,8 @@ def score_pairs(
         qt = qt.filter(
             F.col("df") <= F.col("n_docs") * F.lit(max_df_frac)
         )
-    post = ix["postings"]
-    if "dl" not in post.columns:  # pre-round-6 persisted index: join dl back
-        post = post.join(ix["dl"], "doc_id")
     return (
-        post
+        ix["postings"]
         .join(F.broadcast(qt), "term")
         .select("query_id", "doc_id", score_u_col())
         .groupBy("query_id", "doc_id")
@@ -236,9 +235,6 @@ def phrase_search(
     )
 
 
-#: params sidecar inside the index dir (checkpoint.write_sidecar
-#: pattern — parameters are part of the artifact's identity)
-_META_NAME = "_TEXT_INDEX_META.json"
 #: tokenizer identity recorded in the sidecar: probing an index with a
 #: different tokenization silently misses every term
 _TOKENIZER = "ws_lower_v1"
@@ -246,55 +242,44 @@ _TOKENIZER = "ws_lower_v1"
 
 def write_text_index(docs: DataFrame, path: str, mode: str = "overwrite",
                      text_col: str = "text") -> dict:
-    """Persist the inverted index: postings/dl/df parquet subtables +
-    a stats sidecar. Everything is ADDITIVE, so growth is pure append —
-    the production property for a crawl that never stops arriving:
+    """Persist the inverted index as one committed generation of
+    postings/dl/df subtables (checkpoint.commit_artifact). Everything is
+    ADDITIVE, so growth is one more generation — the production property
+    for a crawl that never stops arriving:
       * postings and dl rows are per-doc — disjoint batches append;
       * df is persisted as per-BATCH partials and summed at read
         (additive exactly when batches hold disjoint doc_ids — same
         caller contract as the PQ index's new-vec_ids rule);
       * n_docs/sum_dl accumulate in the sidecar (driver-sized ints).
-    Returns the sidecar dict actually written."""
-    from pmocr_spark import checkpoint as _ckpt
-
+    A crash at any step leaves the previous commit; a retry lands once.
+    Returns the params committed."""
     spark = docs.sparkSession
-    ix = build_index(docs, text_col)
-    # sidecar/params check FIRST: a bad append must fail before any
-    # subtable write lands rows in the index directory
+    # params check FIRST: a bad append must fail before any corpus pass
     meta0 = None
     if mode == "append":
-        meta0 = _ckpt.read_sidecar(spark, path, _META_NAME)
-        if meta0 is None:
-            raise ValueError(
-                f"text index at {path} has no {_META_NAME} sidecar — append "
-                "requires an index built by write_text_index."
-            )
+        meta0, _paths = ckpt.open_artifact(spark, path, "text_index", "append to")
         _check_params(meta0, path)
-    # ONE corpus tokenization per invocation (round 6): write postings
-    # first (materializing the persisted frame), then derive dl/df/stats
-    # from the CACHE — `dl` rides denormalized on every postings row, so
-    # per-doc max(dl) == sum(tf) and per-term count(*) == df exactly.
-    # Before this, dl/df/stats re-derived from the unpersisted tokenize
-    # subtree: four corpus passes per build.
-    wmode = "append" if mode == "append" else "overwrite"
-    post = ix["postings"].persist()
-    post.write.mode(wmode).parquet(f"{path}/postings")
+    # ONE corpus tokenization per invocation (round 6): the stats collect
+    # materializes the persisted postings, and dl/df derive from that
+    # CACHE — `dl` rides denormalized on every postings row, so per-doc
+    # max(dl) == sum(tf) and per-term count(*) == df exactly.
+    post = build_index(docs, text_col)["postings"].persist()
     dl_w = post.groupBy("doc_id").agg(F.max("dl").alias("dl"))
-    df_w = post.groupBy("term").agg(F.count("*").alias("df"))
     st = dl_w.agg(
         F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
     ).collect()[0]
     n_docs, sum_dl = int(st["n_docs"]), int(st["sum_dl"] or 0)
-    dl_w.write.mode(wmode).parquet(f"{path}/dl")
-    df_w.write.mode(wmode).parquet(f"{path}/df")
-    post.unpersist()
-    if meta0 is not None:
-        meta = {**meta0, "n_docs": meta0["n_docs"] + n_docs,
-                "sum_dl": meta0["sum_dl"] + sum_dl}
-    else:
-        meta = {"tokenizer": _TOKENIZER, "k1": K1, "b": B,
-                "n_docs": n_docs, "sum_dl": sum_dl}
-    _ckpt.write_sidecar(spark, path, _META_NAME, meta)
+    meta = meta0 or {"tokenizer": _TOKENIZER, "k1": K1, "b": B, "n_docs": 0, "sum_dl": 0}
+    meta = {**meta, "n_docs": meta["n_docs"] + n_docs, "sum_dl": meta["sum_dl"] + sum_dl}
+    try:
+        ckpt.commit_artifact(
+            spark, path, "text_index", meta,
+            {"postings": post, "dl": dl_w,
+             "df": post.groupBy("term").agg(F.count("*").alias("df"))},
+            mode=mode,
+        )
+    finally:
+        post.unpersist()
     return meta
 
 
@@ -312,24 +297,16 @@ def _check_params(meta: dict, path: str) -> None:
 
 
 def read_text_index(spark, path: str) -> tuple[dict[str, DataFrame], dict]:
-    """Load a persisted index: (frames, params). df partials merge with
+    """Load the committed index: (frames, params). df partials merge with
     one Heaps-small agg; corpus stats come from the sidecar as exact
     integers (never re-derived — a partial re-scan would silently skew
-    idf). Loud failure without the sidecar."""
-    from pmocr_spark import checkpoint as _ckpt
-    from pyspark.sql import functions as F  # noqa: F811
-
-    meta = _ckpt.read_sidecar(spark, path, _META_NAME)
-    if meta is None:
-        raise ValueError(
-            f"text index at {path} has no {_META_NAME} sidecar — postings "
-            "are meaningless without the tokenizer/stats that built them."
-        )
+    idf)."""
+    meta, paths = ckpt.open_artifact(spark, path, "text_index", "read")
     _check_params(meta, path)
     ix = {
-        "postings": spark.read.parquet(f"{path}/postings"),
-        "dl": spark.read.parquet(f"{path}/dl"),
-        "df": spark.read.parquet(f"{path}/df")
+        "postings": spark.read.parquet(*paths["postings"]),
+        "dl": spark.read.parquet(*paths["dl"]),
+        "df": spark.read.parquet(*paths["df"])
         .groupBy("term")
         .agg(F.sum("df").alias("df")),
         "stats": spark.createDataFrame(

@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import checkpoint as ckpt
 from ..session import reliable_checkpoint
 from .graph import iter_checkpoint
 
@@ -224,40 +225,22 @@ def learn_bpe(
     return merges
 
 
-#: persisted-model sidecar name (same discipline as the dedup/PQ
-#: indexes: parameters that are part of the artifact's identity live in
-#: an underscore-prefixed JSON inside the output dir, any fs scheme)
-BPE_META = "_bpe_model.json"
-
-
 def write_model(spark, path: str, merges: list[tuple[str, str, int]], min_count: int) -> None:
-    """Persist a learned merge table as a model dir with a params
-    sidecar. The model is driver-small by construction (n_merges rows),
-    so the sidecar IS the model."""
-    from .. import checkpoint as ckpt
-
-    ckpt.write_sidecar(
-        spark,
-        path,
-        BPE_META,
-        {
-            "version": 1,
-            "end_of_word": END_OF_WORD,
-            "min_count": min_count,
-            "merges": [[l, r, c] for l, r, c in merges],
-        },
-    )
+    """Commit a learned merge table as a model dir
+    (checkpoint.commit_artifact). The model is driver-small by
+    construction (n_merges rows), so the sidecar IS the model."""
+    ckpt.commit_artifact(spark, path, "bpe_model", {
+        "end_of_word": END_OF_WORD,
+        "min_count": min_count,
+        "merges": [[l, r, c] for l, r, c in merges],
+    }, mode="overwrite")
 
 
 def read_model(spark, path: str) -> list[tuple[str, str, int]]:
     """Load a merge table written by write_model. Loud failure on a
-    missing sidecar or a convention mismatch — encoding with the wrong
-    end-of-word marker silently produces garbage tokens."""
-    from .. import checkpoint as ckpt
-
-    meta = ckpt.read_sidecar(spark, path, BPE_META)
-    if meta is None:
-        raise ValueError(f"no {BPE_META} sidecar at {path}: not a BPE model dir")
+    convention mismatch — encoding with the wrong end-of-word marker
+    silently produces garbage tokens."""
+    meta, _paths = ckpt.open_artifact(spark, path, "bpe_model", "read")
     if meta.get("end_of_word") != END_OF_WORD:
         raise ValueError(
             f"BPE model at {path} uses end-of-word marker "

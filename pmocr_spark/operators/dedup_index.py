@@ -5,16 +5,19 @@ crawl batches arrive and must be checked against EVERYTHING ingested so
 far. Recomputing signatures for the whole corpus per batch is O(corpus)
 per batch; the right shape is a persisted banded-signature index:
 
-    index = build_index(corpus_docs)            # once, O(corpus)
-    ...store index (parquet/Iceberg, ideally bucketed by (band, key))...
+    write_index(build_index(corpus_docs), path)     # once, O(corpus)
+    index, params = read_index(spark, path)
     new_bands = build_index(new_docs)           # per batch, O(batch)
-    hits = probe_index(new_docs, index, new_bands=new_bands)
+    hits = probe_index(new_docs, index, new_bands=new_bands,
+                       index_params=params)
     keep = new_bands.join(dups, "doc_id", "left_anti")
-    index = merge_index(index, keep)            # re-applies the bucket cap
+    write_index(merge_index(index, keep), path)  # re-applies the bucket cap
 
     The index's banding parameters (n_hashes/band_size) are part of its
-    identity: probe with the SAME values it was built with (probe_index
-    validates the band-id range and raises on mismatch).
+    identity: write_index commits them as the index's params
+    (checkpoint.commit_artifact: a crash at any step leaves the previous
+    commit), read_index hands them back, and probe_index(index_params=...)
+    raises on a mismatch.
 
 Scale notes (100 TB): the index has n_bands rows per doc and is joined
 on (band, key) — store it bucketed by those columns (see
@@ -39,6 +42,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .. import checkpoint as ckpt
 
 #: one-shot q18 parity: 12 hashes in 4 bands of 3, buckets capped at 100
 N_MINHASH = 12
@@ -174,14 +179,13 @@ def probe_index(
 
     The banding parameters must match the ones the index was built
     with. Pass `index_params` (the dict read_index returns) to validate
-    exactly — catches same-band-count mismatches like 12/3 vs 8/2 that
-    the range check cannot. Without it (sidecar-less index) the guard
-    falls back to comparing the two sides' band-id ranges."""
+    them exactly — a mismatch (even a same-band-count one like 12/3 vs
+    8/2) would silently find nothing."""
     effective = {
         "n_hashes": band_kwargs.get("n_hashes", N_MINHASH),
         "band_size": band_kwargs.get("band_size", BAND_SIZE),
     }
-    if index_params is not None and index_params.get("source") != "defaults":
+    if index_params is not None:
         stored = {k: index_params.get(k) for k in ("n_hashes", "band_size")}
         if stored != effective:
             raise ValueError(
@@ -191,23 +195,6 @@ def probe_index(
             )
     if new_bands is None:
         new_bands = build_index(new_docs, id_col=id_col, text_col=text_col, **band_kwargs)
-    if index_params is None or index_params.get("source") == "defaults":
-        # sidecar-less fallback: compare actual band-id ranges (one
-        # pruned single-column agg per side). Runs ALSO when read_index
-        # substituted the defaults (source='defaults') — those params
-        # are a guess, not the build's, so the exact check above was
-        # skipped and an API-built index with non-default geometry
-        # would otherwise probe silently wrong (e.g. after the crash
-        # window between replace_dir and write_meta)
-        idx_max = index.agg(F.max("band").alias("m")).collect()[0]["m"]
-        new_max = new_bands.agg(F.max("band").alias("m")).collect()[0]["m"]
-        if idx_max is not None and new_max is not None and idx_max != new_max:
-            raise ValueError(
-                f"index has band ids 0..{idx_max} but the probe side has "
-                f"0..{new_max} — the index was built with different "
-                "n_hashes/band_size; probe with the parameters it was "
-                "built with"
-            )
     idx = index.select(
         F.col(id_col).alias("dup_of"), F.col("band").alias("band"), F.col("key").alias("key")
     )
@@ -228,76 +215,33 @@ def write_index(
     max_bucket: int | None = MAX_BAND_BUCKET,
     mode: str = "overwrite",
 ) -> None:
-    """Persist an index WITH its banding parameters: the (band, key)
-    values are meaningless without n_hashes/band_size (probing with
-    different ones silently finds nothing), so they travel as a
-    `_dedup_index_meta.json` sidecar inside the table dir — Spark
-    ignores underscore-prefixed files on read, and read_index hands the
-    params back so later batch jobs probe with the right ones."""
-    index.write.mode(mode).parquet(path)
-    write_meta(
-        index.sparkSession,
-        path,
+    """Commit an index WITH its banding parameters
+    (checkpoint.commit_artifact): the (band, key) values are meaningless
+    without n_hashes/band_size (probing with different ones silently
+    finds nothing), so they are the artifact's params, and read_index
+    hands them back so later batch jobs probe with the right ones."""
+    ckpt.commit_artifact(
+        index.sparkSession, path, "dedup_index",
         {"n_hashes": n_hashes, "band_size": band_size, "max_bucket": max_bucket},
+        {"bands": index}, mode=mode,
     )
-
-
-def write_meta(spark, path: str, meta: dict) -> None:
-    """Write/refresh the `_dedup_index_meta.json` params sidecar inside
-    an index table dir (also used after in-place maintenance rewrites —
-    e.g. the CLI's merge/compact modes replace the dir and must restore
-    the sidecar the swap discarded)."""
-    from pmocr_spark import checkpoint as _ckpt
-
-    meta = {k: v for k, v in meta.items() if k != "source"}
-    _ckpt.write_sidecar(spark, path, "_dedup_index_meta.json", meta)
-
-
-def index_exists(spark, path: str) -> bool:
-    """Does a persisted index (any data beyond hidden sidecars) exist at
-    `path`? The streaming monitor uses this instead of try/except around
-    read_index: a bare except turned ANY read failure (corrupt footer,
-    transient FS error, permissions) into 'first epoch, no index yet' —
-    silently probing nothing and then overwriting the params sidecar
-    with defaults. With an explicit probe, read errors on an existing
-    index propagate loudly."""
-    from pmocr_spark import checkpoint as _ckpt
-
-    return _ckpt.dir_has_data(spark, path)
 
 
 def read_index(spark, path: str) -> tuple[DataFrame, dict]:
-    """Load a persisted index and its banding parameters. Returns
+    """Load the committed index and its banding parameters. Returns
     (index, params); pass `**params` (minus max_bucket if probing an
     uncapped build) as band_kwargs to probe_index/build_index so the
-    new batch is banded the way the index was. A pre-sidecar index
-    reads with the defaults and a params['source']='defaults' marker."""
-    from pmocr_spark import checkpoint as _ckpt
+    new batch is banded the way the index was.
 
-    # recursiveFileLookup: the streaming monitor's index accumulates one
-    # epoch-keyed subdir per trigger (replay-idempotent overwrites);
-    # flat (CLI-built / compacted) layouts read identically under it.
-    # mergeSchema: a CLI-seeded flat index (no epoch column) plus the
-    # stream's epoch-N subdirs (epoch column) is a MIXED-schema table —
-    # without the merge, single-footer inference either drops the epoch
-    # column (replay filter silently skipped) or reads flat rows with
-    # epoch=NULL under a filter that drops them (seeded corpus silently
-    # excluded from every probe). Index footers are small; the merge
-    # cost is negligible next to the probe join.
-    df = (
-        spark.read.option("recursiveFileLookup", "true")
-        .option("mergeSchema", "true")
-        .parquet(path)
-    )
-    params = _ckpt.read_sidecar(spark, path, "_dedup_index_meta.json")
-    if params is None:
-        params = {
-            "n_hashes": N_MINHASH,
-            "band_size": BAND_SIZE,
-            "max_bucket": MAX_BAND_BUCKET,
-            "source": "defaults",
-        }
-    return df, params
+    mergeSchema: a CLI-seeded flat generation (no epoch column) plus the
+    stream's epoch-N generations (epoch column) is a MIXED-schema table
+    — without the merge, single-footer inference either drops the epoch
+    column (replay filter silently skipped) or reads flat rows with
+    epoch=NULL under a filter that drops them (seeded corpus silently
+    excluded from every probe). Index footers are small; the merge cost
+    is negligible next to the probe join."""
+    params, paths = ckpt.open_artifact(spark, path, "dedup_index", "read")
+    return spark.read.option("mergeSchema", "true").parquet(*paths["bands"]), params
 
 
 def cap_index(

@@ -50,6 +50,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from .. import checkpoint as ckpt
+
 #: number of subspaces (M) — a 64-dim vector splits into 16 sub-vectors
 N_SUB = 16
 #: dims per subspace (D / M)
@@ -313,14 +315,12 @@ def pq_adc_topk(
 # search probes the code table. Codes are meaningless without the EXACT
 # codebook that produced them — same params-identity reasoning as the
 # dedup index's banding sidecar — so the codebook (16 x 64 doubles,
-# trivially bounded) travels as a `_pq_index_meta.json` sidecar inside
-# the codes dir: JSON float repr round-trips IEEE doubles exactly, and
-# Spark readers ignore underscore-prefixed files. Incremental growth is
-# append-shaped: encode the new batch against the SIDECAR's codebook and
-# write mode="append" — per-vector codes are independent, so unlike the
-# dedup index there is no cross-batch cap/compaction to run.
-
-_META_NAME = "_pq_index_meta.json"
+# trivially bounded) travels in the artifact's sidecar
+# (checkpoint.commit_artifact): JSON float repr round-trips IEEE doubles
+# exactly. Incremental growth is one more generation: encode the new
+# batch against the SIDECAR's codebook and write mode="append" —
+# per-vector codes are independent, so unlike the dedup index there is
+# no cross-batch cap/compaction to run.
 
 
 def normalize_embeddings(df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
@@ -366,6 +366,12 @@ def write_pq_index(
             "ivf_n_cent and a cluster_id column must come together: encode "
             "with pq_encode(..., ivf_n_cent=k) and pass the same k here."
         )
+    spark = codes.sparkSession
+    packed = codebook.collect()[0]["cs"]
+    meta = {"n_sub": N_SUB, "d_sub": D_SUB, "n_codes": N_CODES,
+            "centroids": [list(c["ce"]) for c in packed]}
+    if ivf_n_cent is not None:
+        meta["ivf_n_cent"] = ivf_n_cent
     if mode == "append":
         # the append contract is that the batch was encoded with the
         # ALREADY-PERSISTED codebook — enforce it instead of trusting it:
@@ -374,39 +380,27 @@ def write_pq_index(
         # garbage dist_int rows would win rank 1 silently (orderBy sorts
         # NULLs first). JSON round-trips the doubles exactly, so exact
         # equality is the right check.
-        from pmocr_spark import checkpoint as _ckpt
-
-        meta = _ckpt.read_sidecar(codes.sparkSession, path, _META_NAME)
-        if meta is None:
-            raise ValueError(
-                f"PQ index at {path} has no {_META_NAME} sidecar — append "
-                "requires an index built by write_pq_index (the codebook "
-                "identity is the append contract)."
-            )
-        packed = codebook.collect()[0]["cs"]
-        got = [list(c["ce"]) for c in packed]
-        if got != meta["centroids"]:
+        stored, _paths = ckpt.open_artifact(spark, path, "pq_index", "append to")
+        if meta["centroids"] != stored["centroids"]:
             raise ValueError(
                 f"append codebook does not match the codebook persisted at "
                 f"{path} — encode the batch against read_pq_index's codebook, "
                 "never a freshly derived one."
             )
-        if meta.get("ivf_n_cent") != ivf_n_cent:
+        if stored.get("ivf_n_cent") != ivf_n_cent:
             raise ValueError(
                 f"IVF routing mismatch: index at {path} was built with "
-                f"ivf_n_cent={meta.get('ivf_n_cent')}, this append has "
+                f"ivf_n_cent={stored.get('ivf_n_cent')}, this append has "
                 f"{ivf_n_cent} — re-encode the batch with the index's "
                 "routing config (read_pq_index's meta carries it)."
             )
-        codes.write.mode(mode).parquet(path)
-        return
-    # validate BEFORE writing any codes: pq_codebook takes the first
-    # N_CODES vec_ids, so a table whose ids don't start at 0 (or has a
-    # gap below N_CODES) yields an empty/short codebook — codes encoded
-    # against it are all-NULL or positionally misaligned with the ADC
-    # tables, and every later probe would rank garbage silently
-    packed = codebook.collect()[0]["cs"]
-    if [c["cent_id"] for c in packed] != list(range(N_CODES)):
+        meta = stored
+    elif [c["cent_id"] for c in packed] != list(range(N_CODES)):
+        # validate BEFORE writing any codes: pq_codebook takes the first
+        # N_CODES vec_ids, so a table whose ids don't start at 0 (or has
+        # a gap below N_CODES) yields an empty/short codebook — codes
+        # encoded against it are all-NULL or positionally misaligned
+        # with the ADC tables, and every later probe would rank garbage
         raise ValueError(
             f"PQ codebook must contain exactly vec_ids 0..{N_CODES - 1} "
             f"(got {len(packed)} entries {[c['cent_id'] for c in packed][:20]}); "
@@ -414,22 +408,11 @@ def write_pq_index(
             "exist in the input — re-id the table or build the codebook "
             "from a frame that has them."
         )
-    codes.write.mode(mode).parquet(path)
-    meta = {
-        "n_sub": N_SUB,
-        "d_sub": D_SUB,
-        "n_codes": N_CODES,
-        "centroids": [list(c["ce"]) for c in packed],
-    }
-    if ivf_n_cent is not None:
-        meta["ivf_n_cent"] = ivf_n_cent
-    from pmocr_spark import checkpoint as _ckpt
-
-    _ckpt.write_sidecar(codes.sparkSession, path, _META_NAME, meta)
+    ckpt.commit_artifact(spark, path, "pq_index", meta, {"codes": codes}, mode=mode)
 
 
 def read_pq_index(spark, path: str) -> tuple[DataFrame, DataFrame, dict]:
-    """Load persisted codes + rebuild the codebook frame from the
+    """Load the committed codes + rebuild the codebook frame from the
     sidecar. Returns (codes, codebook, params).
 
     Loud failures, never defaults: codes without a sidecar are
@@ -437,19 +420,8 @@ def read_pq_index(spark, path: str) -> tuple[DataFrame, DataFrame, dict]:
     freshly derived one silently returns garbage ranks), and an index
     written by a build with different PQ geometry must not be probed
     with this one's constants."""
-    from pmocr_spark import checkpoint as _ckpt
-
-    codes = (
-        spark.read.option("recursiveFileLookup", "true")
-        .option("mergeSchema", "true")
-        .parquet(path)
-    )
-    meta = _ckpt.read_sidecar(spark, path, _META_NAME)
-    if meta is None:
-        raise ValueError(
-            f"PQ index at {path} has no {_META_NAME} sidecar — codes are "
-            "meaningless without the codebook that produced them; rebuild."
-        )
+    meta, paths = ckpt.open_artifact(spark, path, "pq_index", "read")
+    codes = spark.read.option("mergeSchema", "true").parquet(*paths["codes"])
     if (meta["n_sub"], meta["d_sub"], meta["n_codes"]) != (N_SUB, D_SUB, N_CODES):
         raise ValueError(
             f"PQ geometry mismatch: index at {path} was built with "

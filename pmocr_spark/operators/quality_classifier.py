@@ -49,6 +49,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import checkpoint as ckpt
+
 #: defaults used by the q24 arm (tuned on the synthetic corpus: loss
 #: decreases monotonically, ~0.93 train accuracy after 3 steps)
 ETA = 2.0
@@ -202,27 +204,16 @@ def train_quality_classifier(
     return model, z
 
 
-#: model sidecar name (the BPE/PQ persisted-operator-state pattern:
-#: the model is driver-small, so the sidecar IS the model)
-LR_META = "_lr_model.json"
-
-
 def write_model(spark, path: str, model: dict) -> None:
-    """Persist a trained model as a params sidecar under `path`."""
-    from .. import checkpoint as ckpt
-
-    ckpt.write_sidecar(spark, path, LR_META, model)
+    """Commit a trained model (checkpoint.commit_artifact; the model is
+    driver-small, so the sidecar IS the model)."""
+    ckpt.commit_artifact(spark, path, "quality_model", model, mode="overwrite")
 
 
 def read_model(spark, path: str) -> dict:
-    """Load a model written by write_model. Loud failure on a missing
-    sidecar or an algo mismatch — scoring with foreign weights silently
-    produces garbage."""
-    from .. import checkpoint as ckpt
-
-    meta = ckpt.read_sidecar(spark, path, LR_META)
-    if meta is None:
-        raise ValueError(f"no {LR_META} sidecar at {path}: not a quality model dir")
+    """Load a model written by write_model. Loud failure on an algo
+    mismatch — scoring with foreign weights silently produces garbage."""
+    meta, _paths = ckpt.open_artifact(spark, path, "quality_model", "read")
     if meta.get("algo") != "logreg-exact-int":
         raise ValueError(f"unknown quality-model algo {meta.get('algo')!r} at {path}")
     return meta

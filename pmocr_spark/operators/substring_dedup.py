@@ -47,6 +47,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import checkpoint as ckpt
+
 #: default gram width: proportional to the Lee et al. 50-token window at
 #: the synthetic corpus's ~54-word documents; any duplicated span of >= K
 #: words is removed.
@@ -168,26 +170,14 @@ def _reassemble(
     )
 
 
-#: params sidecar name for a persisted gram index (see
-#: checkpoint.write_sidecar); records the gram width k, which is part of
-#: the index's identity — probing with a different k finds nothing.
-GRAM_META = "_substr_index_meta.json"
-
-
-def read_gram_index(spark, path: str) -> DataFrame:
-    """Load a persisted gram index dir. recursiveFileLookup: the
-    streaming monitor accumulates one epoch-N subdir per trigger;
-    mergeSchema: a maintenance-compacted flat layout (gh only, no epoch
-    column) plus the stream's epoch subdirs is a MIXED-schema table —
-    without the merge, single-footer inference either drops the epoch
-    column (replay filter silently skipped) or nulls flat rows under a
-    filter that drops them. One definition so the streaming hook and
-    the CLI compact mode cannot drift apart."""
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .option("mergeSchema", "true")
-        .parquet(path)
-    )
+def read_gram_index(spark, path: str) -> tuple[DataFrame, dict]:
+    """Load the committed gram index and its params ({'k': gram width} —
+    part of the index's identity: probing with a different k finds
+    nothing). mergeSchema: a compacted flat generation (gh only, no epoch
+    column) plus the stream's epoch-N generations is a MIXED-schema
+    table."""
+    params, paths = ckpt.open_artifact(spark, path, "substr_index", "read")
+    return spark.read.option("mergeSchema", "true").parquet(*paths["grams"]), params
 
 
 def corpus_grams(

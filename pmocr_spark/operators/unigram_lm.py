@@ -44,6 +44,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import checkpoint as ckpt
 from .bpe import _tokenize, word_freqs  # shared tokenization contract
 
 #: longest candidate piece in the seed vocabulary
@@ -156,7 +157,6 @@ def train_unigram(
     vocab_size: int,
     text_col: str = "text",
     em_iters: int = EM_ITERS,
-    reliable: bool | None = None,
     wf: DataFrame | None = None,
 ) -> list[tuple[str, int]]:
     """Learn a unigram-LM vocabulary of `vocab_size` pieces over
@@ -216,32 +216,16 @@ def train_unigram(
     return sorted(_lp_table(final_counts).items())
 
 
-#: persisted-model sidecar (the BPE_META discipline)
-UNIGRAM_META = "_unigram_model.json"
-
-
 def write_model(spark, path: str, model: list[tuple[str, int]], vocab_size: int) -> None:
-    from .. import checkpoint as ckpt
-
-    ckpt.write_sidecar(
-        spark,
-        path,
-        UNIGRAM_META,
-        {
-            "version": 1,
-            "max_piece_len": MAX_PIECE_LEN,
-            "vocab_size": vocab_size,
-            "pieces": [[p, u] for p, u in model],
-        },
-    )
+    ckpt.commit_artifact(spark, path, "unigram_model", {
+        "max_piece_len": MAX_PIECE_LEN,
+        "vocab_size": vocab_size,
+        "pieces": [[p, u] for p, u in model],
+    }, mode="overwrite")
 
 
 def read_model(spark, path: str) -> list[tuple[str, int]]:
-    from .. import checkpoint as ckpt
-
-    meta = ckpt.read_sidecar(spark, path, UNIGRAM_META)
-    if meta is None:
-        raise ValueError(f"no {UNIGRAM_META} sidecar at {path}: not a unigram model dir")
+    meta, _paths = ckpt.open_artifact(spark, path, "unigram_model", "read")
     if meta.get("max_piece_len") != MAX_PIECE_LEN:
         raise ValueError(
             f"unigram model at {path} was trained with max_piece_len="

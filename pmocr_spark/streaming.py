@@ -59,58 +59,65 @@ def _has_committed_offsets(spark: SparkSession, checkpoint_dir: str) -> bool:
     return bool(fs.exists(hp)) and len(fs.listStatus(hp)) > 0
 
 
-def _index_has_epoch_dirs(spark, path: str) -> bool:
-    """Does a persisted index dir contain epoch-N subdirs (stream-
+def _index_has_epoch_dirs(spark, path: str, kind: str) -> bool:
+    """Has the index at `path` committed epoch-N generations (stream-
     accumulated history, epoch-visibility-filtered on probe)? Flat
     layouts — CLI-built or flattened by the compact modes — return
     False: their rows read as seed rows visible to every epoch, so a
     fresh-checkpoint restart cannot hide or overwrite them."""
-    fs, hp = ckpt._fs(spark, path)
-    if not fs.exists(hp):
-        return False
-    return any(
-        st.isDirectory() and st.getPath().getName().startswith("epoch-")
-        for st in fs.listStatus(hp)
+    opened = ckpt.open_artifact(spark, path, kind)
+    return opened is not None and any(
+        _generation(p).startswith("epoch-") for ps in opened[1].values() for p in ps
+    )
+
+
+def _generation(committed_path: str) -> str:
+    return committed_path.rsplit("/", 2)[1]
+
+
+def _open_prior(spark, path: str, kind: str, epoch_id: int):
+    """(params or None, rows or None) of the index at `path` as epoch
+    `epoch_id` must see it: every committed generation but epoch-E and
+    later ones — on a replay of E its own generation is committed
+    already and is rewritten under this read. mergeSchema as in
+    dedup_index.read_index (flat and epoch generations mix)."""
+    opened = ckpt.open_artifact(spark, path, kind)
+    if opened is None:
+        return None, None
+    params, paths = opened
+    prior = [
+        p for ps in paths.values() for p in ps
+        if not (_generation(p).startswith("epoch-") and int(_generation(p)[6:]) >= epoch_id)
+    ]
+    return params, (
+        spark.read.option("mergeSchema", "true").parquet(*prior) if prior else None
     )
 
 
 def _epoch_dedup(spark, results: DataFrame, index_dir: str, epoch_id: int) -> DataFrame:
     """Cross-epoch near-dup pass for one streaming micro-batch (see the
     monitor docstring): probe this epoch's successfully extracted txt
-    against the prior-epoch band index, persist this epoch's bands, and
-    return (doc_id, dup_of) for the batch's near-dup docs.
+    against the prior-epoch band index, commit this epoch's keeper bands
+    as generation epoch-<E>, and return the PERSISTED (doc_id, dup_of)
+    verdicts of the batch's near-dup docs — the caller unpersists them
+    once the epoch output is written.
 
-    Replay idempotence: bands carry an `epoch` column and land in an
-    epoch-keyed subdir with mode=overwrite; the probe filters
-    epoch < epoch_id, so a crash-replay of epoch E neither sees E's
-    crashed bands nor duplicates them. The index accumulates one subdir
-    per epoch; the CLI's --compact-dedup-index flattens and caps it
-    (read_index uses recursiveFileLookup, so both layouts read)."""
+    Replay idempotence: the probe reads only generations committed
+    before epoch E (plus seed rows), and a crash-replay of E rewrites
+    its own generation, so dup verdicts are byte-identical on replay
+    and no band row is duplicated. The index accumulates one
+    generation per epoch; the CLI's --compact-dedup-index flattens and
+    caps it."""
     from .operators import dedup_index as di
 
     txt_docs = results.filter(F.col("status") == "done").select(
         "doc_id", F.col("txt").alias("text")
     )
-    have_index = di.index_exists(spark, index_dir)
-    if have_index:
-        # a read failure on an EXISTING index propagates loudly — it
-        # must not degrade into "first epoch" (zero dup verdicts) and
-        # overwrite the params sidecar with defaults
-        prior, params = di.read_index(spark, index_dir)
-        if "epoch" in prior.columns:  # CLI-built flat indexes have no epoch col
-            # epoch NULL = seed rows (CLI-built/merged before the stream
-            # started): visible to every epoch. epoch >= epoch_id = this
-            # epoch's own crashed bands on a replay: excluded.
-            prior = prior.filter(
-                F.col("epoch").isNull() | (F.col("epoch") < epoch_id)
-            )
-    else:
-        prior, params = None, {
-            "n_hashes": di.N_MINHASH,
-            "band_size": di.BAND_SIZE,
-            "max_bucket": di.MAX_BAND_BUCKET,
-        }
-    band_kwargs = {k: params[k] for k in ("n_hashes", "band_size") if k in params}
+    params, prior = _open_prior(spark, index_dir, "dedup_index", epoch_id)
+    params = params or {
+        "n_hashes": di.N_MINHASH, "band_size": di.BAND_SIZE, "max_bucket": di.MAX_BAND_BUCKET,
+    }
+    band_kwargs = {k: params[k] for k in ("n_hashes", "band_size")}
     # UNCAPPED band rows on disk (the cap-as-policy discipline the CLI
     # modes follow): a per-epoch cap drops a boilerplate flood's bands
     # irreversibly, so later epochs could never match those docs and a
@@ -118,63 +125,45 @@ def _epoch_dedup(spark, results: DataFrame, index_dir: str, epoch_id: int) -> Da
     # union. The cap is applied TRANSIENTLY to the probe view below.
     new_bands = di.build_index(txt_docs, max_bucket=None, **band_kwargs).persist()
     try:
-        return _epoch_dedup_body(
-            spark, di, txt_docs, new_bands, prior, params, band_kwargs,
-            have_index, index_dir, epoch_id,
-        )
+        if prior is None:
+            dup_map = spark.createDataFrame([], "doc_id string, dup_of string")
+        else:
+            if "epoch" in prior.columns:  # CLI-built flat indexes have no epoch col
+                # epoch NULL = seed rows (CLI-built/merged before the
+                # stream started): visible to every epoch
+                prior = prior.filter(F.col("epoch").isNull() | (F.col("epoch") < epoch_id))
+            hits = di.probe_index(
+                txt_docs,
+                # transient capped VIEW (same as the CLI probe mode): bounds
+                # the join fan-out of buckets that grew hot ACROSS epochs
+                # without waiting for a manual compaction
+                di.cap_index(prior, params["max_bucket"]),
+                new_bands=new_bands,
+                broadcast_probe=True,  # one micro-batch: the small regime
+                index_params=params,
+                **band_kwargs,
+            )
+            # deterministic keeper per dup doc: the smallest matched id
+            dup_map = hits.groupBy("doc_id").agg(F.min("dup_of").alias("dup_of"))
+        # persisted: the keeper commit and the epoch output both read
+        # the verdicts, and a recompute would re-run the index probe
+        dup_map = dup_map.persist()
+        keepers = new_bands.join(dup_map.select("doc_id"), "doc_id", "left_anti")
+        try:
+            ckpt.commit_artifact(
+                spark, index_dir, "dedup_index", params,
+                {"bands": keepers.withColumn("epoch", F.lit(epoch_id).cast("long"))},
+                mode="append", generation=f"epoch-{epoch_id}",
+            )
+        except BaseException:
+            dup_map.unpersist()
+            raise
+        return dup_map
     finally:
-        # unpersist on EVERY exit: a raising probe (corrupt index, the
-        # loud path) under a ProcessingTime trigger retries each 30s —
-        # without this, one cached frame leaks per attempt
+        # a raising probe (corrupt index, the loud path) under a
+        # ProcessingTime trigger retries each 30s — without this, one
+        # cached frame leaks per attempt
         new_bands.unpersist()
-
-
-def _epoch_dedup_body(
-    spark, di, txt_docs, new_bands, prior, params, band_kwargs,
-    have_index, index_dir, epoch_id,
-):
-    if have_index:
-        hits = di.probe_index(
-            txt_docs,
-            # transient capped VIEW (same as the CLI probe mode): bounds
-            # the join fan-out of buckets that grew hot ACROSS epochs
-            # without waiting for a manual compaction
-            di.cap_index(prior, params.get("max_bucket")),
-            new_bands=new_bands,
-            broadcast_probe=True,  # one micro-batch: the small regime
-            index_params=params,
-            **band_kwargs,
-        )
-        # deterministic keeper per dup doc: the smallest matched id
-        dup_map = hits.groupBy("doc_id").agg(F.min("dup_of").alias("dup_of"))
-    else:
-        dup_map = spark.createDataFrame([], "doc_id string, dup_of string")
-    # Materialize with the LINEAGE CUT, not just persist+count: a merely
-    # persisted dup_map can be re-executed after the keeper-band write
-    # below (cache eviction, executor loss), and on a flat CLI-seeded
-    # index — whose read has no epoch column, hence no epoch<E replay
-    # filter — the re-executed probe would re-list the index WITH this
-    # epoch's own bands and flag within-batch pairs nondeterministically.
-    # localCheckpoint(eager) pins the verdicts; losing the checkpointed
-    # partitions fails the epoch loudly (replay recovers) instead.
-    dup_map = dup_map.localCheckpoint(eager=True)
-    keepers = new_bands.join(dup_map.select("doc_id"), "doc_id", "left_anti")
-    (
-        keepers.withColumn("epoch", F.lit(epoch_id).cast("long"))
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/epoch-{epoch_id}")
-    )
-    # drop the session's cached file listing for the index path: a
-    # replayed epoch's overwrite replaces part files, and a stale
-    # FileStatusCache entry would make the next epoch's read fail with
-    # FILE_NOT_EXIST on the old file names
-    spark.catalog.refreshByPath(index_dir)
-    if not have_index or params.get("source") == "defaults":
-        # also heals the sidecar after an epoch-0 crash-replay (bands
-        # written, meta not yet) — read_index marks the fallback read
-        # with source='defaults'
-        di.write_meta(spark, index_dir, params)
-    return dup_map
 
 
 def _epoch_substr_dedup(
@@ -185,55 +174,36 @@ def _epoch_substr_dedup(
     spans and (b) spans whose grams were already seen by ANY earlier
     epoch (the re-crawled-boilerplate regime — nav chrome and license
     blocks that DOM-heuristic extraction misses recur across crawls),
-    then append this epoch's distinct gram hashes to the persisted index.
+    and commit this epoch's distinct gram hashes as generation
+    epoch-<E> of the persisted index.
 
-    Same replay discipline as _epoch_dedup: gram rows carry an `epoch`
-    column in epoch-keyed overwrite subdirs; the probe reads only
-    epoch NULL (CLI/maintenance-seeded flat rows) or epoch < E, so a
-    crash-replay of E produces byte-identical cleaned text. The index's
-    gram width k lives in its sidecar (GRAM_META) — probing with a
-    different k finds nothing, so a mismatch is refused loudly.
+    Same replay discipline as _epoch_dedup: the probe reads only
+    generations committed before E (compacted flat generations are
+    history), so a crash-replay of E produces byte-identical cleaned
+    text. The index's gram width k is its committed param — probing
+    with a different k finds nothing, so a mismatch is refused loudly.
 
     Non-destructive: returns (doc_id, txt_clean, words_removed) for the
     epoch output to LEFT-join — txt stays the exact extraction (the span
     equality invariant), txt_clean is the curation view."""
-    from . import checkpoint as ckpt
     from .operators import substring_dedup as sd
 
     txt_docs = results.filter(F.col("status") == "done").select(
         "doc_id", F.col("txt").alias("text")
     )
-    meta = None
-    if ckpt.dir_has_data(spark, index_dir):
-        meta = ckpt.read_sidecar(spark, index_dir, sd.GRAM_META)
-        if meta is not None and meta.get("k") != sd.DEFAULT_K:
-            raise ValueError(
-                f"gram index at {index_dir!r} was built with k={meta.get('k')}, "
-                f"this stream strips with k={sd.DEFAULT_K} — grams are "
-                "incomparable and every probe would silently find nothing"
-            )
-    # WRITE-FIRST ordering: this epoch's grams land before the probe is
-    # even planned. A materialize-then-write order is NOT safe for a
-    # lazy prior: if the cleaned frame is ever re-executed after the
-    # write (cache eviction, executor loss), the probe would re-read the
-    # index WITH this batch's own grams and strip every batch document
-    # to '' — with the write up front, the epoch<E filter below excludes
-    # them deterministically on first execution and on every re-run, and
-    # a crash-replay of E just re-overwrites the same subdir.
-    (
-        sd.corpus_grams(txt_docs, k=sd.DEFAULT_K)
-        .withColumn("epoch", F.lit(epoch_id).cast("long"))
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/epoch-{epoch_id}")
+    meta, prior = _open_prior(spark, index_dir, "substr_index", epoch_id)
+    if meta is not None and meta.get("k") != sd.DEFAULT_K:
+        raise ValueError(
+            f"gram index at {index_dir!r} was built with k={meta.get('k')}, "
+            f"this stream strips with k={sd.DEFAULT_K} — grams are "
+            "incomparable and every probe would silently find nothing"
+        )
+    ckpt.commit_artifact(
+        spark, index_dir, "substr_index", {"k": sd.DEFAULT_K},
+        {"grams": sd.corpus_grams(txt_docs, k=sd.DEFAULT_K)
+         .withColumn("epoch", F.lit(epoch_id).cast("long"))},
+        mode="append", generation=f"epoch-{epoch_id}",
     )
-    # drop any stale file listing (replays rewrite part files)
-    spark.catalog.refreshByPath(index_dir)
-    if meta is None:
-        ckpt.write_sidecar(spark, index_dir, sd.GRAM_META, {"k": sd.DEFAULT_K})
-    prior = sd.read_gram_index(spark, index_dir)
-    # the epoch column always exists here (this epoch's subdir just
-    # landed); compacted/seeded flat rows read as epoch NULL = history
-    prior = prior.filter(F.col("epoch").isNull() | (F.col("epoch") < epoch_id))
     return sd.substring_dedup_incremental(txt_docs, prior, k=sd.DEFAULT_K).select(
         "doc_id",
         F.col("new_text").alias("txt_clean"),
@@ -295,10 +265,10 @@ def monitor(
       built from ALL PRIOR epochs; near-dup docs get a non-null `dup_of`
       column in the epoch output (annotate, not drop — downstream
       filters on dup_of IS NULL), and the batch's keeper bands are added
-      to the index. Replay-idempotent: bands land in an `epoch-E`
-      subdir with mode=overwrite and carry an `epoch` column, and the
-      probe reads only rows with epoch < E — a crash-replay of E can
-      never see its own crashed attempt's bands, so dup verdicts are
+      to the index. Replay-idempotent: bands are committed as
+      generation `epoch-E` (checkpoint.commit_artifact) and the probe
+      reads only generations before E — a crash-replay of E can never
+      see its own crashed attempt's bands, so dup verdicts are
       byte-identical on replay. Within-epoch dups are deliberately NOT
       flagged here (the one-shot q18 path and the stateful exact dedup
       cover intra-batch); this index catches the re-crawl across
@@ -354,15 +324,16 @@ def monitor(
         # (CLI-seeded, or a --compact-*-index flatten) are safe — they
         # read as seed rows visible to every epoch — so the recovery
         # path is: stop, compact the index, restart.
-        for idx_dir, flag, compact_flag in (
-            (dedup_index_dir, "--dedup-index", "--compact-dedup-index"),
-            (substr_index_dir, "--dedup-substrings-index", "--compact-substr-index"),
+        for idx_dir, kind, flag, compact_flag in (
+            (dedup_index_dir, "dedup_index", "--dedup-index", "--compact-dedup-index"),
+            (substr_index_dir, "substr_index", "--dedup-substrings-index",
+             "--compact-substr-index"),
         ):
             if (
                 idx_dir
                 and not allow_lineage_takeover
                 and not same_identity_replay
-                and _index_has_epoch_dirs(spark, idx_dir)
+                and _index_has_epoch_dirs(spark, idx_dir, kind)
             ):
                 raise ValueError(
                     f"{flag} dir {idx_dir!r} holds epoch-keyed subdirs from a "
@@ -413,13 +384,18 @@ def monitor(
             lineage = lineage.filter(~F.col("run_id").rlike(f"#e{epoch_id}$"))
 
         def write_output(results: DataFrame, out: DataFrame) -> None:
-            if dedup_index_dir is not None:
-                dup_map = _epoch_dedup(spark, results, dedup_index_dir, epoch_id)
-                out = out.join(dup_map, "doc_id", "left")
-            if substr_index_dir is not None:
-                clean_map = _epoch_substr_dedup(spark, results, substr_index_dir, epoch_id)
-                out = out.join(clean_map, "doc_id", "left")
-            out.write.mode("overwrite").parquet(f"{output_dir}/epoch-{epoch_id}")
+            maps = []
+            try:
+                if dedup_index_dir is not None:
+                    maps.append(_epoch_dedup(spark, results, dedup_index_dir, epoch_id))
+                if substr_index_dir is not None:
+                    maps.append(_epoch_substr_dedup(spark, results, substr_index_dir, epoch_id))
+                for m in maps:
+                    out = out.join(m, "doc_id", "left")
+                out.write.mode("overwrite").parquet(f"{output_dir}/epoch-{epoch_id}")
+            finally:
+                for m in maps:
+                    m.unpersist()
             if alerts_dir is None:
                 return
             # the batch's TOTAL drop count (the S7 contract), not the

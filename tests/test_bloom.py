@@ -118,7 +118,7 @@ def test_index_lifecycle(spark, tmp_path):
     assert all(after[s] == 1 for s, v in before.items() if v == 1)  # monotone OR
 
     # compaction: fewer-or-equal rows, identical verdicts, sidecar intact
-    raw_rows = spark.read.parquet(path).count()
+    raw_rows = spark.read.option("recursiveFileLookup", "true").parquet(path).count()
     n = bloom.compact_bloom_index(spark, path)
     assert n <= raw_rows
     bits3, meta3 = bloom.read_bloom_index(spark, path)

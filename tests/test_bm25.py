@@ -163,8 +163,10 @@ def test_read_without_sidecar_fails_loud(spark, docs_df, tmp_path):
 
     idx = str(tmp_path / "tix3")
     bm25.write_text_index(docs_df, idx)
+    import glob
     import os
-    os.remove(os.path.join(idx, bm25._META_NAME))
+    for side in glob.glob(os.path.join(idx, "_TEXT_INDEX_META.*.json")):
+        os.remove(side)
     with _pytest.raises(ValueError, match="sidecar"):
         bm25.read_text_index(spark, idx)
 

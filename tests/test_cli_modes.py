@@ -212,6 +212,23 @@ _PHRASE = ["--search-phrase", "a b", "--input", "i", "--output", "o"]
         _BATCH + ["--probe-broadcast", "force"],
         _BATCH + ["--text-col", "txt"],
         _KEYWORDS + ["--engine", "tesseract"],
+        _KEYWORDS + ["--span-join", "shuffle"],
+        _KEYWORDS + ["--num-partitions", "4"],
+        _KEYWORDS + ["--targets", "txt,csv"],
+        _KEYWORDS + ["--job-ts", "2024-02-01T00:00:00Z"],
+        _KEYWORDS + ["--run-id", "run-1"],
+        _KEYWORDS + ["--suffix", "_X"],
+        _KEYWORDS + ["--no-suffix"],
+        _KEYWORDS + ["--filename-addition", "_a"],
+        _KEYWORDS + ["--metrics", "m"],
+        _KEYWORDS + ["--partition-by", "status"],
+        _KEYWORDS + ["--output-format", "jsonl"],
+        _KEYWORDS + ["--alerts", "a"],
+        _KEYWORDS + ["--stream-checkpoint", "c"],
+        _BATCH + ["--alerts", "a"],
+        _BATCH + ["--stream-checkpoint", "c"],
+        ["--service", "--input", "i", "--blobs", "b", "--output", "o", "--lineage", "l",
+         "--partition-by", "status"],
     ],
     ids=lambda argv: " ".join(argv[:1] + argv[-2:]),
 )

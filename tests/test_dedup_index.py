@@ -103,14 +103,6 @@ def test_merge_reapplies_bucket_cap(spark):
     assert index.count() == 0
 
 
-def test_probe_rejects_mismatched_banding(spark):
-    """Probing an index built with different n_hashes/band_size raises
-    instead of silently returning no hits."""
-    index = di.build_index(_docs(spark, BASE), n_hashes=24, band_size=4)  # 6 bands
-    with pytest.raises(ValueError, match="band ids"):
-        di.probe_index(_docs(spark, BASE[:1]), index)  # default: 4 bands
-
-
 def test_probe_accepts_precomputed_bands(spark):
     """The incremental recipe reuses one build_index result for both
     probe and merge — passing new_bands must give identical hits."""
@@ -200,11 +192,11 @@ def test_write_read_index_roundtrip_params(spark, tmp_path):
         max_bucket=params["max_bucket"],
     ).collect()
     assert [(h["doc_id"], h["dup_of"]) for h in hits] == [("n1", "corp-1")]
-    # a pre-sidecar table reads with defaults + a marker
+    # a pre-sidecar table is rejected, never read with guessed defaults
     plain = str(tmp_path / "plain")
     di.build_index(_docs(spark, BASE)).write.parquet(plain)
-    _df, p2 = di.read_index(spark, plain)
-    assert p2["source"] == "defaults" and p2["n_hashes"] == di.N_MINHASH
+    with pytest.raises(ValueError, match="sidecar"):
+        di.read_index(spark, plain)
 
 
 def test_merge_collapses_cross_epoch_duplicates(spark):
@@ -233,24 +225,6 @@ def test_merge_collapses_cross_epoch_duplicates(spark):
     assert capped.count() == dup_rows.count()  # max bucket has 2 docs <= 2
 
 
-def test_probe_range_guard_fires_for_defaults_params(spark):
-    """A sidecar-less index read (params source='defaults') must still
-    run the band-id-range fallback: the defaults are a guess, not the
-    build's geometry, and a silent mismatch probes nothing (review
-    finding, round 4 — the guard was dead for every read_index caller)."""
-    idx = di.build_index(_docs(spark, BASE), n_hashes=12, band_size=4)  # bands 0..2
-    probe_params = {
-        "n_hashes": di.N_MINHASH,
-        "band_size": di.BAND_SIZE,
-        "max_bucket": di.MAX_BAND_BUCKET,
-        "source": "defaults",
-    }
-    with pytest.raises(ValueError, match="band ids"):
-        di.probe_index(
-            _docs(spark, BASE), idx, index_params=probe_params
-        ).collect()
-
-
 def test_cli_merge_refuses_sidecarless_index(spark, tmp_path):
     """--merge/--compact-dedup-index over a sidecar-less index would
     launder the GUESSED default params into an authoritative sidecar
@@ -271,11 +245,9 @@ def test_cli_merge_refuses_sidecarless_index(spark, tmp_path):
     ):
         with pytest.raises(SystemExit, match="sidecar"):
             cli.main(argv)
-    # and the probe path still works via the range fallback: mismatched
-    # geometry is caught loudly, not silently empty
-    with pytest.raises(ValueError, match="band ids"):
-        idxdf, params = di.read_index(spark, idx)
-        di.probe_index(_docs(spark, BASE), idxdf, index_params=params).collect()
+    # and every reader rejects it too, instead of probing with guesses
+    with pytest.raises(ValueError, match="sidecar"):
+        di.read_index(spark, idx)
 
 
 def test_cli_compact_flattens_epoch_history(spark, tmp_path):
@@ -283,14 +255,19 @@ def test_cli_compact_flattens_epoch_history(spark, tmp_path):
     index must flatten rows to epoch-less SEED form — visible to every
     epoch — like its substr twin; rows keeping old epoch values would be
     hidden from a restarted stream's probes (review finding, round 4)."""
+    from pmocr_spark import checkpoint as ckpt
     from pmocr_spark import cli
 
     idx = str(tmp_path / "stream_idx")
     bands = di.build_index(_docs(spark, BASE))
-    bands.withColumn("epoch", F.lit(0).cast("long")).write.parquet(f"{idx}/epoch-0")
-    bands.withColumn("epoch", F.lit(1).cast("long")).write.parquet(f"{idx}/epoch-1")
-    di.write_meta(spark, idx, {"n_hashes": di.N_MINHASH, "band_size": di.BAND_SIZE,
-                               "max_bucket": di.MAX_BAND_BUCKET})
+    params = {"n_hashes": di.N_MINHASH, "band_size": di.BAND_SIZE,
+              "max_bucket": di.MAX_BAND_BUCKET}
+    for e in (0, 1):
+        ckpt.commit_artifact(
+            spark, idx, "dedup_index", params,
+            {"bands": bands.withColumn("epoch", F.lit(e).cast("long"))},
+            mode="append", generation=f"epoch-{e}",
+        )
     cli.main(["--compact-dedup-index", idx, "--master", "local[4]"])
     flat, params = di.read_index(spark, idx)
     assert "epoch" not in flat.columns

@@ -87,9 +87,9 @@ def test_pq_index_requires_sidecar_and_matching_geometry(spark, tmp_path):
     pq.write_pq_index(pq.pq_encode(vn.limit(20), book), book, path2)
     from pmocr_spark import checkpoint as ckpt
 
-    meta = ckpt.read_sidecar(spark, path2, "_pq_index_meta.json")
+    meta = ckpt.open_artifact(spark, path2, "pq_index")[0]
     meta["n_sub"] = 8
-    ckpt.write_sidecar(spark, path2, "_pq_index_meta.json", meta)
+    ckpt.commit_artifact(spark, path2, "pq_index", meta, mode="append")
     with pytest.raises(ValueError, match="geometry"):
         pq.read_pq_index(spark, path2)
 

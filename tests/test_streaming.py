@@ -542,9 +542,12 @@ def test_corrupt_dedup_index_fails_loud(spark, dirs, tmp_path):
     from pmocr_spark.operators import dedup_index as di
 
     idx_dir = tmp_path / "bad_idx"
-    idx_dir.mkdir()
-    (idx_dir / "part-00000.parquet").write_bytes(b"this is not a parquet file")
-    assert di.index_exists(spark, str(idx_dir))
+    di.write_index(di.build_index(spark.createDataFrame(
+        [("s", "some seed text here")], "doc_id string, text string")), str(idx_dir))
+    (bands,) = idx_dir.glob("gen-*/bands")
+    shutil.rmtree(bands)
+    bands.mkdir()
+    (bands / "part-00000.parquet").write_bytes(b"this is not a parquet file")
 
     pq.write_table(pa.Table.from_pylist([], schema=corpus.BLOBS_SCHEMA),
                    f"{tmp_path}/blobs.parquet")
@@ -562,7 +565,7 @@ def test_corrupt_dedup_index_fails_loud(spark, dirs, tmp_path):
     with pytest.raises(Exception, match="(?i)parquet|magic|footer|corrupt"):
         q.awaitTermination(120)
     # and the sidecar was NOT silently replaced with defaults
-    assert not (idx_dir / "_dedup_index_meta.json").exists()
+    assert [p.name for p in idx_dir.glob("_dedup_index_meta*")] == ["_dedup_index_meta.1.json"]
 
 
 def test_seeded_flat_index_survives_epoch_accumulation(spark, dirs, tmp_path):
@@ -707,7 +710,7 @@ def test_cross_epoch_substring_dedup_service(spark, dirs, tmp_path):
     import pyarrow as pa
 
     from pmocr_spark import checkpoint as ckpt
-    from pmocr_spark.operators.substring_dedup import DEFAULT_K, GRAM_META
+    from pmocr_spark.operators.substring_dedup import DEFAULT_K
 
     span = " ".join(f"s{i}" for i in range(DEFAULT_K))
 
@@ -745,7 +748,7 @@ def test_cross_epoch_substring_dedup_service(spark, dirs, tmp_path):
     assert e1["e1-new"]["txt_clean"] == "c0 c1 c2 c3"
     assert e1["e1-new"]["words_removed"] == 0
 
-    assert ckpt.read_sidecar(spark, idx_dir, GRAM_META) == {"k": DEFAULT_K}
+    assert ckpt.open_artifact(spark, idx_dir, "substr_index")[0] == {"k": DEFAULT_K}
     gidx = (spark.read.option("recursiveFileLookup", "true")
             .option("mergeSchema", "true").parquet(idx_dir))
     assert {r["epoch"] for r in gidx.select("epoch").distinct().collect()} == {0, 1}
@@ -770,15 +773,15 @@ def test_epoch_dedup_stores_uncapped_bands(spark, tmp_path):
     # epoch 0 seeds the index; sidecar then pins a cap SMALLER than the
     # flood (the cap is policy, recorded in the sidecar)
     st._epoch_dedup(spark, results, idx, epoch_id=0)
-    di.write_meta(spark, idx, {"n_hashes": di.N_MINHASH, "band_size": di.BAND_SIZE,
-                               "max_bucket": 3})
+    ckpt.commit_artifact(spark, idx, "dedup_index", {
+        "n_hashes": di.N_MINHASH, "band_size": di.BAND_SIZE, "max_bucket": 3}, mode="append")
     # epoch 1 re-drops the same docs. With cap 3 < flood 4 the capped
     # PROBE VIEW suppresses the flood's matches (by policy), so all 5
     # docs are keepers — and their band rows must ALL be stored: the
     # pre-fix code built new_bands WITH the cap and would have written
     # only d-x's bands to epoch-1, losing the flood irreversibly.
     st._epoch_dedup(spark, results, idx, epoch_id=1)
-    stored = spark.read.parquet(f"{idx}/epoch-1")
+    stored = spark.read.parquet(f"{idx}/epoch-1/bands")
     stored_ids = {r["doc_id"] for r in stored.select("doc_id").distinct().collect()}
     assert stored_ids == {f"d-{i:03d}" for i in range(4)} | {"d-x"}
     max_bucket_sz = (
@@ -789,8 +792,8 @@ def test_epoch_dedup_stores_uncapped_bands(spark, tmp_path):
     # raise the cap (policy change, no rebuild needed — the rows are all
     # there): the flood now flags against the stored epochs, proving
     # nothing was lost; the unique doc only ever matches itself -> clean
-    di.write_meta(spark, idx, {"n_hashes": di.N_MINHASH, "band_size": di.BAND_SIZE,
-                               "max_bucket": 10})
+    ckpt.commit_artifact(spark, idx, "dedup_index", {
+        "n_hashes": di.N_MINHASH, "band_size": di.BAND_SIZE, "max_bucket": 10}, mode="append")
     dup = st._epoch_dedup(spark, results, idx, epoch_id=2)
     flagged = {r["doc_id"] for r in dup.collect()}
     assert {f"d-{i:03d}" for i in range(4)} <= flagged and "d-x" not in flagged
@@ -1097,3 +1100,37 @@ def test_orc_drops_in_service_mode(spark, dirs, tmp_path):
            spark.read.parquet(f"{dirs['output']}/epoch-0").collect()}
     assert got["od"]["status"] == "done"
     assert got["od"]["txt"] == "orc typed line\norc filmed line"
+
+
+def test_dedup_epoch_releases_its_cached_blocks(spark, dirs, tmp_path):
+    """An availableNow epoch with --dedup-index leaves no persisted RDD
+    of its own behind: the verdicts cached for the keeper commit and the
+    epoch output are released once the output is written."""
+    import pyarrow as pa
+
+    from pmocr_spark.operators import dedup_index as di
+
+    pq.write_table(pa.Table.from_pylist([], schema=corpus.BLOBS_SCHEMA),
+                   f"{tmp_path}/blobs.parquet")
+    media = spark.read.parquet(f"{tmp_path}/blobs.parquet")
+    idx_dir = str(tmp_path / "idx")
+    A = "the quick brown fox jumps over the lazy dog near the river bank today"
+    di.write_index(di.build_index(spark.createDataFrame(
+        [("s-a", A)], "doc_id string, text string"), max_bucket=None), idx_dir)
+    pq.write_table(pa.Table.from_pylist(
+        [{"doc_id": "d1", "spans": [{"kind": "text", "text": A.replace("today", "tonight"),
+                                     "media_ref": None, "offset": 0}]}],
+        schema=corpus.DOCUMENTS_SCHEMA), f"{dirs['landing']}/drop.parquet")
+    def persisted():  # ids, not a count: the JVM's cleaner may drop older ones meanwhile
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    q = streaming.monitor(
+        spark, dirs["landing"], media, dirs["output"], dirs["stream_ckpt"],
+        dirs["lineage"], trigger={"availableNow": True}, dedup_index_dir=idx_dir,
+    )
+    q.awaitTermination(120)
+    out = {r["doc_id"]: r["dup_of"]
+           for r in spark.read.parquet(f"{dirs['output']}/epoch-0").collect()}
+    assert out == {"d1": "s-a"}
+    assert persisted() - before == set()

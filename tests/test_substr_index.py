@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from pmocr_spark.operators.substring_dedup import (
     DEFAULT_K,
-    GRAM_META,
     corpus_grams,
     substring_dedup,
     substring_dedup_incremental,
@@ -84,9 +83,9 @@ def test_epoch_hook_refuses_k_mismatch(spark, tmp_path):
 
     idx = str(tmp_path / "gidx2")
     _epoch_substr_dedup(spark, _results(spark, [("a", "w0 w1 w2")]), idx, 0)
-    meta = ckpt.read_sidecar(spark, idx, GRAM_META)
+    meta = ckpt.open_artifact(spark, idx, "substr_index")[0]
     assert meta == {"k": DEFAULT_K}
-    ckpt.write_sidecar(spark, idx, GRAM_META, {"k": DEFAULT_K + 5})
+    ckpt.commit_artifact(spark, idx, "substr_index", {"k": DEFAULT_K + 5}, mode="append")
     with pytest.raises(ValueError, match="incomparable"):
         _epoch_substr_dedup(spark, _results(spark, [("b", "v0 v1 v2")]), idx, 1)
 
@@ -113,7 +112,7 @@ def test_compact_substr_index_cli(spark, tmp_path):
     after = (spark.read.option("recursiveFileLookup", "true")
              .option("mergeSchema", "true").parquet(idx))
     assert after.count() == n_distinct and "epoch" not in after.columns
-    assert ckpt.read_sidecar(spark, idx, GRAM_META) == {"k": DEFAULT_K}
+    assert ckpt.open_artifact(spark, idx, "substr_index")[0] == {"k": DEFAULT_K}
 
     m = {r["doc_id"]: r for r in _epoch_substr_dedup(
         spark, _results(spark, [("c", f"z0 z1 {span}")]), idx, 2
