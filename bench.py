@@ -29,7 +29,7 @@ Scaling protocol (v2, round 2):
    recorded next to the wall time, so wall-vs-host-state correlation is
    visible in the output;
  - per-run Spark stage metrics (executorRunTime / executorCpuTime /
-   task counts / task-time quantiles) from the status REST API — CPU
+   task counts / task-time quantiles) from the in-process status store — CPU
    work conservation across levels is the throttle-immune signal;
  - trimmed medians (drop min+max when n>=5) per level for the headline
    wall-clock efficiency.
@@ -186,15 +186,37 @@ def _tree_cpu_s() -> float:
 
 
 def _stage_snapshot(spark) -> dict:
-    """All completed stages from the status REST API, keyed by id.attempt."""
-    import json as _json
-    import urllib.request
+    """All completed stages, keyed by id.attempt, read in-process from
+    the status store (the UI stays off) once the listener bus has
+    delivered every event."""
+    from e2ebench.harness import SparkStores
 
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/stages?status=complete") as r:
-        stages = _json.load(r)
-    return {f"{s['stageId']}.{s['attemptId']}": s for s in stages}
+    SparkStores(spark).drain()
+    jvm, gw = spark._jvm, spark.sparkContext._gateway
+    complete = jvm.java.util.ArrayList()
+    complete.add(jvm.org.apache.spark.status.api.v1.StageStatus.COMPLETE)
+    seq = spark.sparkContext._jsc.sc().statusStore().stageList(
+        complete, False, False, gw.new_array(gw.jvm.double, 0), jvm.java.util.ArrayList()
+    )
+    stages = [seq.apply(i) for i in range(seq.size())]
+    return {f"{s.stageId()}.{s.attemptId()}": s for s in stages}
+
+
+def _task_quantiles(spark, stage, quantiles: list[float]):
+    """The stage attempt's task-metric quantiles (v1 TaskMetricDistributions,
+    what the REST taskSummary returns), or None before any task ends."""
+    gw = spark.sparkContext._gateway
+    qs = gw.new_array(gw.jvm.double, len(quantiles))
+    for i, q in enumerate(quantiles):
+        qs[i] = q
+    d = spark.sparkContext._jsc.sc().statusStore().taskSummary(
+        stage.stageId(), stage.attemptId(), qs
+    )
+    return d.get() if d.isDefined() else None
+
+
+def _seq(scala_seq) -> list:
+    return [scala_seq.apply(i) for i in range(scala_seq.size())]
 
 
 def _stage_delta(spark, before: dict, after: dict) -> dict:
@@ -204,38 +226,26 @@ def _stage_delta(spark, before: dict, after: dict) -> dict:
     time); executorRunTime includes involuntary wait. Task-time quantiles
     of the top stages show per-task uniformity (no serial section/skew).
     """
-    import json as _json
-    import urllib.request
-
     new = [s for k, s in after.items() if k not in before]
     agg = {
         "stages": len(new),
-        "tasks": sum(s.get("numCompleteTasks", 0) for s in new),
-        "executor_run_s": round(sum(s.get("executorRunTime", 0) for s in new) / 1e3, 2),
-        "executor_cpu_s": round(sum(s.get("executorCpuTime", 0) for s in new) / 1e9, 2),
-        "shuffle_write_mb": round(sum(s.get("shuffleWriteBytes", 0) for s in new) / 1e6, 1),
+        "tasks": sum(s.numCompleteTasks() for s in new),
+        "executor_run_s": round(sum(s.executorRunTime() for s in new) / 1e3, 2),
+        "executor_cpu_s": round(sum(s.executorCpuTime() for s in new) / 1e9, 2),
+        "shuffle_write_mb": round(sum(s.shuffleWriteBytes() for s in new) / 1e6, 1),
     }
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
     tops = []
-    for s in sorted(new, key=lambda s: -s.get("executorRunTime", 0))[:2]:
-        q = None
-        try:
-            url = (
-                f"{ui}/api/v1/applications/{app}/stages/{s['stageId']}/"
-                f"{s['attemptId']}/taskSummary?quantiles=0.05,0.5,0.95"
-            )
-            with urllib.request.urlopen(url) as r:
-                q = [round(x) for x in _json.load(r).get("executorRunTime", [])]
-        except Exception:
-            pass
+    for s in sorted(new, key=lambda s: -s.executorRunTime())[:2]:
+        d = _task_quantiles(spark, s, [0.05, 0.5, 0.95])
         tops.append(
             {
-                "stage": s["stageId"],
-                "tasks": s.get("numCompleteTasks", 0),
-                "run_s": round(s.get("executorRunTime", 0) / 1e3, 2),
-                "cpu_s": round(s.get("executorCpuTime", 0) / 1e9, 2),
-                "task_run_ms_q05_50_95": q,
+                "stage": s.stageId(),
+                "tasks": s.numCompleteTasks(),
+                "run_s": round(s.executorRunTime() / 1e3, 2),
+                "cpu_s": round(s.executorCpuTime() / 1e9, 2),
+                "task_run_ms_q05_50_95": (
+                    None if d is None else [round(x) for x in _seq(d.executorRunTime())]
+                ),
             }
         )
     agg["top_stages"] = tops
@@ -250,13 +260,7 @@ def _scale_worker(cpus: int, corpus_dir: str, n_docs: int) -> None:
 
     from pmocr_spark import pipeline
 
-    spark = _make_spark(
-        cpus,
-        extra={
-            "spark.ui.enabled": "true",
-            "spark.ui.showConsoleProgress": "false",
-        },
-    )
+    spark = _make_spark(cpus, extra={"spark.ui.showConsoleProgress": "false"})
     docs = spark.read.parquet(f"{corpus_dir}/documents.parquet").persist(StorageLevel.MEMORY_ONLY)
     blobs = spark.read.parquet(f"{corpus_dir}/media_blobs.parquet").persist(
         StorageLevel.MEMORY_ONLY
@@ -276,7 +280,6 @@ def _scale_worker(cpus: int, corpus_dir: str, n_docs: int) -> None:
         _force(pipeline.run_batch(spark, docs, blobs))
         dt = time.time() - t0
         tree_cpu = round(_tree_cpu_s() - cpu0, 2)
-        time.sleep(0.5)  # let the status store drain listener events
         metrics = _stage_delta(spark, before, _stage_snapshot(spark))
         metrics["tree_cpu_s"] = tree_cpu  # JVM + python workers, whole run
         print(
@@ -444,9 +447,7 @@ def _run_span_regimes(tmp: str, cpus: int) -> dict:
     n_docs = _corpus.write_replicated(
         big, base_docs=OCR_BENCH_DOCS, times=REGIME_REPLICATE, seed=42
     )
-    spark = _make_spark(
-        cpus, extra={"spark.ui.enabled": "true", "spark.ui.showConsoleProgress": "false"}
-    )
+    spark = _make_spark(cpus, extra={"spark.ui.showConsoleProgress": "false"})
     _warm_python_workers(spark, big)
     docs = spark.read.parquet(f"{big}/documents.parquet")
     blobs = spark.read.parquet(f"{big}/media_blobs.parquet")
@@ -500,7 +501,6 @@ def _run_span_regimes(tmp: str, cpus: int) -> dict:
         t0 = time.time()
         decode_force(j)
         dt = time.time() - t0
-        time.sleep(0.5)
         delta = _stage_delta(spark, before, _stage_snapshot(spark))
         out[regime] = {
             "sec": round(dt, 3),
@@ -596,24 +596,12 @@ def _max_task_input_mb(spark, before: dict, after: dict) -> float:
     between the two snapshots — the 'does any one task hold too much'
     scale signal: if this stays bounded while the corpus grows 10x, the
     partitioning is doing its job."""
-    import json as _json
-    import urllib.request
-
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
     new = [s for k, s in after.items() if k not in before]
     mx = 0.0
-    for s in sorted(new, key=lambda s: -(s.get("inputBytes", 0)))[:4]:
-        try:
-            url = (
-                f"{ui}/api/v1/applications/{app}/stages/{s['stageId']}/"
-                f"{s['attemptId']}/taskSummary?quantiles=1.0"
-            )
-            with urllib.request.urlopen(url) as r:
-                im = _json.load(r).get("inputMetrics") or {}
-            mx = max(mx, (im.get("bytesRead") or [0])[-1] / 1e6)
-        except Exception:  # noqa: BLE001 - stage may have no task summary
-            pass
+    for s in sorted(new, key=lambda s: -s.inputBytes())[:4]:
+        d = _task_quantiles(spark, s, [1.0])
+        if d is not None:
+            mx = max(mx, (_seq(d.inputMetrics().bytesRead()) or [0])[-1] / 1e6)
     return round(mx, 1)
 
 
@@ -642,9 +630,7 @@ def _run_scale10x(tmp: str, cpus: int) -> dict:
     _log("scale10x: generating 10x corpus (50k docs + 3000-doc blob corpus)")
     corpus.write(corpus10x_dir, n_docs=10 * OCR_BENCH_DOCS, seed=42)
 
-    spark = _make_spark(
-        cpus, extra={"spark.ui.enabled": "true", "spark.ui.showConsoleProgress": "false"}
-    )
+    spark = _make_spark(cpus, extra={"spark.ui.showConsoleProgress": "false"})
     base = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     ten = None
     for i in range(10):

@@ -6,7 +6,7 @@ here. Modes:
 
   python bench_extra.py --queries [names...]   per-query isolation: noop
       force of each headline catalog query, repeated, with the Spark
-      status-API stage delta (executor run/cpu seconds, task counts,
+      status-store stage delta (executor run/cpu seconds, task counts,
       shuffle bytes) recorded next to the wall time — separates driver/
       planning cost from executor work (§1.1/§1.4).
   python bench_extra.py --named [names...]     the non-catalog bench
@@ -47,7 +47,6 @@ def _measured(spark, fn, repeats: int = 2) -> dict:
         built = time.time() - t0  # driver-side: query construction
         bench._force(df)
         wall = time.time() - t0
-        time.sleep(0.4)
         delta = bench._stage_delta(spark, before, bench._stage_snapshot(spark))
         runs.append(
             {
@@ -186,7 +185,6 @@ def _run_lm10x(spark, out: dict) -> None:
         t0 = time.time()
         bench._force(df)
         sec = round(time.time() - t0, 3)
-        time.sleep(0.4)
         delta = bench._stage_delta(spark, before, bench._stage_snapshot(spark))
         quant = [s["task_run_ms_q05_50_95"] for s in delta["top_stages"]]
         straggler = any(
@@ -238,10 +236,7 @@ def main() -> None:
     print(f"[extra] host probe: {out['host_probe']}", file=sys.stderr, flush=True)
 
     if mode == "--lm10x":
-        spark = bench._make_spark(
-            cpus,
-            extra={"spark.ui.enabled": "true", "spark.ui.showConsoleProgress": "false"},
-        )
+        spark = bench._make_spark(cpus, extra={"spark.ui.showConsoleProgress": "false"})
         _run_lm10x(spark, out)
         spark.stop()
         os.makedirs("BENCH", exist_ok=True)
@@ -273,9 +268,7 @@ def main() -> None:
         spark.stop()
         return
 
-    spark = bench._make_spark(
-        cpus, extra={"spark.ui.enabled": "true", "spark.ui.showConsoleProgress": "false"}
-    )
+    spark = bench._make_spark(cpus, extra={"spark.ui.showConsoleProgress": "false"})
 
     if mode == "--named":
         import tempfile
@@ -313,7 +306,6 @@ def main() -> None:
                     r = bench._bench_warc(spark, sf_dir, tmp)
                 else:
                     continue
-                time.sleep(0.4)
                 delta = bench._stage_delta(spark, before, bench._stage_snapshot(spark))
                 out[name] = {
                     **r,

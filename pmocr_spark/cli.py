@@ -175,14 +175,15 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--merge-dedup-index", metavar="DIR",
-        help="maintenance mode: band the --input batch with the index's persisted params and merge "
-        "it into DIR append-cheap (no O(index) cap pass — run --compact-dedup-index "
-        "periodically)",
+        help="maintenance mode: band the --input batch with the index's persisted params and "
+        "append the rows DIR does not hold yet as one new generation (O(batch) written, no "
+        "O(index) cap pass — run --compact-dedup-index periodically)",
     )
     p.add_argument(
         "--compact-dedup-index", metavar="DIR",
-        help="maintenance mode: re-apply the hot-bucket cap over the whole index at DIR (the "
-        "periodic compaction that keeps steady-state merges cheap) and rewrite it in place",
+        help="maintenance mode: collapse duplicate rows, re-apply the hot-bucket cap over the "
+        "whole index at DIR (the periodic compaction that keeps steady-state merges cheap) and "
+        "rewrite it as one generation every stream epoch sees",
     )
     p.add_argument(
         "--build-pq-index", metavar="DIR",
@@ -312,9 +313,9 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--compact-substr-index", metavar="DIR",
         help="maintenance mode: rewrite the cross-epoch gram index at DIR "
-        "(--dedup-substrings-index) to distinct gram hashes — epochs append their gram sets "
-        "verbatim, so periodic compaction reclaims the cross-epoch overlap. Stop the stream "
-        "first: compacted rows read as epoch-less (visible to every epoch), so compacting "
+        "(--dedup-substrings-index) to distinct gram hashes in one generation — epochs append "
+        "their gram sets verbatim, so periodic compaction reclaims the cross-epoch overlap. "
+        "Stop the stream first: every epoch sees the compacted generation, so compacting "
         "under a live stream changes a replayed epoch's verdicts.",
     )
     p.add_argument(
@@ -715,8 +716,16 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument("--alerts", help="alert table dir (S7; service mode)")
     p.add_argument("--stream-checkpoint", help="streaming offsets dir (service)")
-    p.add_argument("--master", help="override spark master (default from env)")
-    p.add_argument("--num-partitions", type=int)
+    p.add_argument(
+        "--master",
+        help="spark master (default: $PMOCR_SPARK_MASTER, else local[N] with N the CPUs this "
+        "process may run on, as nproc prints)",
+    )
+    p.add_argument(
+        "--num-partitions", type=int,
+        help="salted span repartition width under --span-join shuffle (default: "
+        "spark.sql.shuffle.partitions); the broadcast span join does not read it",
+    )
     p.add_argument(
         "--partition-by",
         help="comma-separated result columns to Hive-partition the batch results sink by (e.g. "
@@ -1276,9 +1285,11 @@ def _dedup_index(spark, args, op: str) -> None:
     as CLI modes. build commits index+params; probe/merge band the new
     batch with the COMMITTED params (never the defaults — a mismatched
     banding silently finds nothing, which probe_index now rejects);
-    merge is append-cheap (apply_cap=False); compact runs the periodic
-    hot-bucket cap. merge/compact commit the rewritten index as one new
-    generation with the same params (checkpoint.commit_artifact).
+    merge appends the batch's rows the index does not hold yet as one
+    new generation (O(batch) written, so a retried merge adds nothing);
+    compact collapses duplicate rows, runs the periodic hot-bucket cap
+    and overwrites the index with one generation — the only overwrite
+    (checkpoint.commit_artifact).
 
     Cap discipline: the hot-bucket cap is a POLICY (a committed
     param), never applied to rows the index STORES — build and merge
@@ -1321,6 +1332,9 @@ def _dedup_index(spark, args, op: str) -> None:
         hits.write.mode("overwrite").parquet(args.output)
         print(f"pmocr-spark: probe hits written to {args.output}")
         return
+    # band rows only: an index whose rows still carry the old `epoch`
+    # column never copies it into a new generation
+    rows = index.select("doc_id", "band", "key")
     if op == "merge":
         docs = spark.read.parquet(args.input)
         # no per-batch cap (max_bucket=None): capping a single batch at
@@ -1334,21 +1348,13 @@ def _dedup_index(spark, args, op: str) -> None:
             band_size=params["band_size"],
             max_bucket=None,
         )
-        merged = di.merge_index(index, new_bands, apply_cap=False)
+        di.write_index(
+            new_bands.join(rows, rows.columns, "left_anti"), idx_dir, **params, mode="append"
+        )
     else:  # compact
-        merged = di.cap_index(index, params["max_bucket"])
-        if "epoch" in merged.columns:
-            # flatten stream-accumulated history to epoch-less SEED rows
-            # (visible to every epoch), like --compact-substr-index: a
-            # stream restarted on a fresh offsets checkpoint restarts
-            # epoch ids at 0, and rows keeping their old epoch values
-            # would be hidden from every probe of the new run (and its
-            # epoch-0 write would collide with the old subdir). Run this
-            # only with the stream STOPPED — same rule as the substr twin.
-            merged = merged.drop("epoch").distinct()
-    di.write_index(merged, idx_dir, **params)
+        di.write_index(di.cap_index(rows.distinct(), params["max_bucket"]), idx_dir, **params)
     n = di.read_index(spark, idx_dir)[0].count()
-    print(f"pmocr-spark: {op} rewrote dedup index at {idx_dir} ({n} rows)")
+    print(f"pmocr-spark: {op} committed dedup index at {idx_dir} ({n} rows)")
 
 
 def _pq_index(spark, args, op: str) -> None:

@@ -173,11 +173,9 @@ def _reassemble(
 def read_gram_index(spark, path: str) -> tuple[DataFrame, dict]:
     """Load the committed gram index and its params ({'k': gram width} —
     part of the index's identity: probing with a different k finds
-    nothing). mergeSchema: a compacted flat generation (gh only, no epoch
-    column) plus the stream's epoch-N generations is a MIXED-schema
-    table."""
+    nothing)."""
     params, paths = ckpt.open_artifact(spark, path, "substr_index", "read")
-    return spark.read.option("mergeSchema", "true").parquet(*paths["grams"]), params
+    return spark.read.parquet(*paths["grams"]), params
 
 
 def corpus_grams(

@@ -18,7 +18,8 @@ def get_spark(
     skew-join splitting), UTC session TZ (duckdb-oracle parity), Arrow
     batches for pandas UDFs.
     """
-    master = master or os.environ.get("PMOCR_SPARK_MASTER", "local[32]")
+    default_master, driver_mem = host_defaults()
+    master = master or default_master
     cores = _parse_cores(master)
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     b = (
@@ -41,7 +42,7 @@ def get_spark(
         # media blobs are O(KB); large Arrow batches amortize the Python
         # boundary without blowing worker memory (SURVEY.md §4.2)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory", os.environ.get("PMOCR_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         # blob tables are wide rows (KB-scale binary): 128MB scan splits
         # give too few tasks when the span side of the blob join
         # broadcasts (the UDF stage inherits the scan partitioning) —
@@ -72,6 +73,18 @@ def get_spark(
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def host_defaults() -> tuple[str, str]:
+    """(master, driver memory) when the caller names neither:
+    PMOCR_SPARK_MASTER / PMOCR_DRIVER_MEM, else sized to this host —
+    local[<CPUs this process may run on>] (what nproc prints) and half
+    the physical memory in whole GiB, between 1g and 16g."""
+    mem_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**31
+    return (
+        os.environ.get("PMOCR_SPARK_MASTER", f"local[{len(os.sched_getaffinity(0))}]"),
+        os.environ.get("PMOCR_DRIVER_MEM", f"{min(max(mem_gib, 1), 16)}g"),
+    )
 
 
 def reliable_checkpoint() -> bool:

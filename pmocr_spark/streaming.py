@@ -61,10 +61,10 @@ def _has_committed_offsets(spark: SparkSession, checkpoint_dir: str) -> bool:
 
 def _index_has_epoch_dirs(spark, path: str, kind: str) -> bool:
     """Has the index at `path` committed epoch-N generations (stream-
-    accumulated history, epoch-visibility-filtered on probe)? Flat
-    layouts — CLI-built or flattened by the compact modes — return
-    False: their rows read as seed rows visible to every epoch, so a
-    fresh-checkpoint restart cannot hide or overwrite them."""
+    accumulated history, hidden from epoch N and earlier on probe)?
+    Only gen-N generations — CLI-built, merged or compacted — return
+    False: every epoch sees them, so a fresh-checkpoint restart cannot
+    hide or overwrite them."""
     opened = ckpt.open_artifact(spark, path, kind)
     return opened is not None and any(
         _generation(p).startswith("epoch-") for ps in opened[1].values() for p in ps
@@ -79,8 +79,8 @@ def _open_prior(spark, path: str, kind: str, epoch_id: int):
     """(params or None, rows or None) of the index at `path` as epoch
     `epoch_id` must see it: every committed generation but epoch-E and
     later ones — on a replay of E its own generation is committed
-    already and is rewritten under this read. mergeSchema as in
-    dedup_index.read_index (flat and epoch generations mix)."""
+    already and is rewritten under this read. The generation name is
+    the only record of which epoch wrote a row."""
     opened = ckpt.open_artifact(spark, path, kind)
     if opened is None:
         return None, None
@@ -89,9 +89,7 @@ def _open_prior(spark, path: str, kind: str, epoch_id: int):
         p for ps in paths.values() for p in ps
         if not (_generation(p).startswith("epoch-") and int(_generation(p)[6:]) >= epoch_id)
     ]
-    return params, (
-        spark.read.option("mergeSchema", "true").parquet(*prior) if prior else None
-    )
+    return params, spark.read.parquet(*prior) if prior else None
 
 
 def _epoch_dedup(spark, results: DataFrame, index_dir: str, epoch_id: int) -> DataFrame:
@@ -102,12 +100,12 @@ def _epoch_dedup(spark, results: DataFrame, index_dir: str, epoch_id: int) -> Da
     verdicts of the batch's near-dup docs — the caller unpersists them
     once the epoch output is written.
 
-    Replay idempotence: the probe reads only generations committed
-    before epoch E (plus seed rows), and a crash-replay of E rewrites
-    its own generation, so dup verdicts are byte-identical on replay
-    and no band row is duplicated. The index accumulates one
-    generation per epoch; the CLI's --compact-dedup-index flattens and
-    caps it."""
+    Replay idempotence: the probe reads every generation but epoch-E
+    and later ones (_open_prior) — CLI-built, merged and compacted gen-N
+    generations included — and a crash-replay of E rewrites its own
+    generation, so dup verdicts are byte-identical on replay and no
+    band row is duplicated. The index accumulates one generation per
+    epoch; the CLI's --compact-dedup-index collapses and caps it."""
     from .operators import dedup_index as di
 
     txt_docs = results.filter(F.col("status") == "done").select(
@@ -128,10 +126,6 @@ def _epoch_dedup(spark, results: DataFrame, index_dir: str, epoch_id: int) -> Da
         if prior is None:
             dup_map = spark.createDataFrame([], "doc_id string, dup_of string")
         else:
-            if "epoch" in prior.columns:  # CLI-built flat indexes have no epoch col
-                # epoch NULL = seed rows (CLI-built/merged before the
-                # stream started): visible to every epoch
-                prior = prior.filter(F.col("epoch").isNull() | (F.col("epoch") < epoch_id))
             hits = di.probe_index(
                 txt_docs,
                 # transient capped VIEW (same as the CLI probe mode): bounds
@@ -152,7 +146,7 @@ def _epoch_dedup(spark, results: DataFrame, index_dir: str, epoch_id: int) -> Da
         try:
             ckpt.commit_artifact(
                 spark, index_dir, "dedup_index", params,
-                {"bands": keepers.withColumn("epoch", F.lit(epoch_id).cast("long"))},
+                {"bands": keepers},
                 mode="append", generation=f"epoch-{epoch_id}",
             )
         except BaseException:
@@ -177,11 +171,11 @@ def _epoch_substr_dedup(
     and commit this epoch's distinct gram hashes as generation
     epoch-<E> of the persisted index.
 
-    Same replay discipline as _epoch_dedup: the probe reads only
-    generations committed before E (compacted flat generations are
-    history), so a crash-replay of E produces byte-identical cleaned
-    text. The index's gram width k is its committed param — probing
-    with a different k finds nothing, so a mismatch is refused loudly.
+    Same replay discipline as _epoch_dedup: the probe reads every
+    generation but epoch-E and later ones, so a crash-replay of E
+    produces byte-identical cleaned text. The index's gram width k is
+    its committed param — probing with a different k finds nothing, so
+    a mismatch is refused loudly.
 
     Non-destructive: returns (doc_id, txt_clean, words_removed) for the
     epoch output to LEFT-join — txt stays the exact extraction (the span
@@ -200,8 +194,7 @@ def _epoch_substr_dedup(
         )
     ckpt.commit_artifact(
         spark, index_dir, "substr_index", {"k": sd.DEFAULT_K},
-        {"grams": sd.corpus_grams(txt_docs, k=sd.DEFAULT_K)
-         .withColumn("epoch", F.lit(epoch_id).cast("long"))},
+        {"grams": sd.corpus_grams(txt_docs, k=sd.DEFAULT_K)},
         mode="append", generation=f"epoch-{epoch_id}",
     )
     return sd.substring_dedup_incremental(txt_docs, prior, k=sd.DEFAULT_K).select(
@@ -317,12 +310,11 @@ def monitor(
                     "lineage/output dirs, or pass allow_lineage_takeover=True."
                 )
         # Same collision applies to the persisted cross-epoch INDEX dirs:
-        # a fresh-checkpoint restart restarts epoch ids at 0, so the
-        # probe's epoch<E filter would hide ALL prior history (every
-        # stored row has epoch >= 0) and the epoch-0 overwrite would
-        # destroy the prior run's epoch-0 bands/grams. Epoch-less rows
-        # (CLI-seeded, or a --compact-*-index flatten) are safe — they
-        # read as seed rows visible to every epoch — so the recovery
+        # a fresh-checkpoint restart restarts epoch ids at 0, so every
+        # probe would skip the prior run's epoch-N generations (N >= E)
+        # and the epoch-0 commit would overwrite its epoch-0 bands/grams.
+        # gen-N generations (CLI-built, merged, or a --compact-*-index
+        # collapse) are safe — every epoch sees them — so the recovery
         # path is: stop, compact the index, restart.
         for idx_dir, kind, flag, compact_flag in (
             (dedup_index_dir, "dedup_index", "--dedup-index", "--compact-dedup-index"),
@@ -340,8 +332,8 @@ def monitor(
                     f"prior stream, and the offsets checkpoint {checkpoint_dir!r} "
                     "is fresh — restarted epoch ids would hide that history from "
                     "every probe and overwrite its epoch-0 rows. Run "
-                    f"{compact_flag} {idx_dir} first (flattens history to "
-                    "always-visible seed rows), reuse the prior "
+                    f"{compact_flag} {idx_dir} first (collapses history into one "
+                    "generation every epoch sees), reuse the prior "
                     "--stream-checkpoint, or pass allow_lineage_takeover=True."
                 )
 

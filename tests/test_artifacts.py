@@ -113,9 +113,8 @@ OPS = {
     ),
     "dedup_index_merge": Op(
         lambda s, p: di.write_index(di.build_index(_docs(s, 0, 4), max_bucket=None), p),
-        lambda s, p: di.write_index(di.merge_index(
-            di.read_index(s, p)[0], di.build_index(_docs(s, 4, 6), max_bucket=None),
-            apply_cap=False), p),
+        lambda s, p: di.write_index(
+            di.build_index(_docs(s, 4, 6), max_bucket=None), p, mode="append"),
         lambda s, p: (lambda i, m: (m, _rows(i)))(*di.read_index(s, p)), 2,
     ),
     "substr_index_epoch": Op(

@@ -3,6 +3,8 @@ validation (docx/xlsx graceful reject), real-PDF output target."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1091,3 +1093,20 @@ def test_word_boxes_layout_mode(spark, tmp_path, capsys):
     with pytest.raises(SystemExit):
         cli.parse_args(["--word-boxes", "--layout", "--tables",
                         "--blobs", "b", "--output", "o"])
+
+
+def test_session_defaults_fit_the_host(monkeypatch):
+    """With neither PMOCR_SPARK_MASTER nor PMOCR_DRIVER_MEM set, the
+    session runs local[<CPUs this process may use>] with half the
+    physical memory in whole GiB, clamped to 1g..16g; each variable
+    still overrides its default. Derived without starting a session."""
+    from pmocr_spark.session import host_defaults
+
+    monkeypatch.delenv("PMOCR_SPARK_MASTER", raising=False)
+    monkeypatch.delenv("PMOCR_DRIVER_MEM", raising=False)
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    gib = min(max(int(phys / 2 / 2**30), 1), 16)
+    assert host_defaults() == (f"local[{len(os.sched_getaffinity(0))}]", f"{gib}g")
+    monkeypatch.setenv("PMOCR_SPARK_MASTER", "local[3]")
+    monkeypatch.setenv("PMOCR_DRIVER_MEM", "5g")
+    assert host_defaults() == ("local[3]", "5g")

@@ -1,5 +1,5 @@
 """Incremental MinHash dedup index (operators/dedup_index.py): build,
-probe a new batch against a persisted index, merge, hot-bucket cap, and
+probe a new batch against a persisted index, append, hot-bucket cap, and
 parity with the one-shot q18 pair query."""
 
 from __future__ import annotations
@@ -43,18 +43,41 @@ def test_probe_flags_near_dup_and_ignores_fresh(spark, tmp_path):
     assert "new-fresh" not in hits
 
 
-def test_incremental_merge(spark):
-    """Batch 2 dups a BATCH-1 doc that is only in the index because of
-    merge_index — the incremental flow the one-shot q18 cannot do."""
-    index = di.build_index(_docs(spark, BASE))
+def test_incremental_merge(spark, tmp_path):
+    """Batch 2 dups a BATCH-1 doc that is only in the index because
+    --merge-dedup-index appended it — the incremental flow the one-shot
+    q18 cannot do."""
+    from pmocr_spark import cli
+
+    idx = str(tmp_path / "idx")
+    di.write_index(di.build_index(_docs(spark, BASE)), idx)
     b1 = _docs(spark, [("b1-new", "neural networks learn representations from large corpora of text data")])
-    assert di.probe_index(b1, index).count() == 0
-    index = di.merge_index(index, di.build_index(b1))
+    assert di.probe_index(b1, di.read_index(spark, idx)[0]).count() == 0
+    b1.write.parquet(str(tmp_path / "b1"))
+    cli.main(["--merge-dedup-index", idx, "--input", str(tmp_path / "b1"),
+              "--master", "local[4]"])
+    index = di.read_index(spark, idx)[0]
     b2 = _docs(spark, [("b2-dup", "neural networks learn representations from large corpora of text data")])
     hits = di.probe_index(b2, index).collect()
     assert [(h["doc_id"], h["dup_of"]) for h in hits] == [("b2-dup", "b1-new")]
     # exact duplicate -> every band collides
     assert hits[0]["n_bands"] == di.N_MINHASH // di.BAND_SIZE
+
+
+def test_cli_merge_twice_adds_no_rows(spark, tmp_path):
+    """A retried --merge-dedup-index appends only the rows the index
+    does not hold yet, so the second identical merge adds none."""
+    from pmocr_spark import cli
+
+    idx = str(tmp_path / "idx")
+    di.write_index(di.build_index(_docs(spark, BASE[:1])), idx)
+    _docs(spark, BASE[1:]).write.parquet(str(tmp_path / "b1"))
+    argv = ["--merge-dedup-index", idx, "--input", str(tmp_path / "b1"), "--master", "local[4]"]
+    cli.main(argv)
+    n = di.read_index(spark, idx)[0].count()
+    assert n == di.build_index(_docs(spark, BASE)).count()
+    cli.main(argv)
+    assert di.read_index(spark, idx)[0].count() == n
 
 
 def test_hot_bucket_cap(spark):
@@ -84,23 +107,6 @@ def test_matches_oneshot_q18(spark):
     expect = {(str(r["doc_a"]), str(r["doc_b"])) for r in q18}
     expect = {tuple(sorted(p)) for p in expect}
     assert got == expect
-
-
-def test_merge_reapplies_bucket_cap(spark):
-    """A boilerplate flood arriving in small batches (each under the
-    cap) must still be capped in the MERGED index — per-batch caps
-    cannot see cross-batch accumulation."""
-    def batch(tag, n):
-        return _docs(spark, [
-            (f"{tag}-{i}", "identical boilerplate header repeated across many pages verbatim")
-            for i in range(n)
-        ])
-
-    index = di.build_index(batch("b0", 4), max_bucket=5)
-    assert index.count() > 0  # 4 <= 5: uncapped per batch
-    index = di.merge_index(index, di.build_index(batch("b1", 4), max_bucket=5), max_bucket=5)
-    # merged bucket has 8 members > 5 -> dropped
-    assert index.count() == 0
 
 
 def test_probe_accepts_precomputed_bands(spark):
@@ -141,31 +147,36 @@ def test_probe_validates_sidecar_params(spark):
     assert [(h["doc_id"], h["dup_of"]) for h in hits] == [("n1", "corp-1")]
 
 
-def test_append_merges_plus_compaction_match_oneshot(spark):
-    """Steady-state cost fix: K-1 append-shaped merges (apply_cap=False,
-    no O(index) groupBy per merge) followed by ONE cap_index compaction
+def test_append_merges_plus_compaction_match_oneshot(spark, tmp_path):
+    """Steady-state cost fix: K-1 --merge-dedup-index appends (no
+    O(index) groupBy per merge) followed by ONE --compact-dedup-index
     must equal the ground truth — a one-shot capped build over the full
     union. (Note: always-cap-per-merge does NOT equal this ground truth:
     it irreversibly drops a bucket the moment it crosses the cap, and a
     later small batch re-enters it with only its own rows. Deferred
     compaction sees the full accumulation, i.e. it is the MORE correct
     schedule, as well as the cheaper one.)"""
+    from pmocr_spark import cli
+
     def rows(tag, n):
         return [
             (f"{tag}-{i}", "identical boilerplate header repeated across many pages verbatim")
             for i in range(n)
         ]
 
-    all_rows = []
-    cheap = None
-    for k in range(4):
+    idx = str(tmp_path / "idx")
+    all_rows = rows("b0", 2)
+    # the build stays uncapped (2 docs can never trip a cap of 5
+    # anyway); the cap of 5 is the committed policy compaction applies
+    di.write_index(di.build_index(_docs(spark, all_rows), max_bucket=None), idx, max_bucket=5)
+    for k in range(1, 4):
         r = rows(f"b{k}", 2)
         all_rows += r
-        # per-batch build stays uncapped (2 docs can never trip a cap of
-        # 5 anyway); the cap belongs to the compaction pass
-        b = di.build_index(_docs(spark, r), max_bucket=None)
-        cheap = b if cheap is None else di.merge_index(cheap, b, apply_cap=False)
-    cheap = di.cap_index(cheap, max_bucket=5)
+        _docs(spark, r).write.parquet(str(tmp_path / f"b{k}"))
+        cli.main(["--merge-dedup-index", idx, "--input", str(tmp_path / f"b{k}"),
+                  "--master", "local[4]"])
+    cli.main(["--compact-dedup-index", idx, "--master", "local[4]"])
+    cheap = di.read_index(spark, idx)[0]
 
     oneshot = di.build_index(_docs(spark, all_rows), max_bucket=5)
 
@@ -199,28 +210,13 @@ def test_write_read_index_roundtrip_params(spark, tmp_path):
         di.read_index(spark, plain)
 
 
-def test_merge_collapses_cross_epoch_duplicates(spark):
-    """Idempotence must key on (id, band, key) IGNORING epoch: a doc
-    re-banded under a later epoch collapses to ONE row with the EARLIEST
-    visibility (NULL seed beats numeric; else min(epoch)) — a plain
-    distinct() kept one row per epoch and double-counted the doc in
-    every bucket (review finding, round 4)."""
+def test_cap_index_counts_cross_epoch_duplicates_once(spark):
+    """cap_index counts DISTINCT docs, not rows: a stream-accumulated
+    index holds a re-dropped doc's (id, band, key) once per epoch
+    generation, and a bucket of 2 docs duplicated across epochs must
+    NOT read as 4 and get dropped (review finding, round 4)."""
     bands = di.build_index(_docs(spark, BASE))
-    e1 = bands.withColumn("epoch", F.lit(1).cast("long"))
-    e5 = bands.withColumn("epoch", F.lit(5).cast("long"))
-    seed = bands.withColumn("epoch", F.lit(None).cast("long"))
-
-    m = di.merge_index(e1, e5, apply_cap=False)
-    assert m.count() == bands.count()  # one row per (id, band, key)
-    assert m.filter(F.col("epoch") != 1).count() == 0  # earliest epoch wins
-
-    m2 = di.merge_index(seed, e5, apply_cap=False)
-    assert m2.count() == bands.count()
-    assert m2.filter(F.col("epoch").isNotNull()).count() == 0  # NULL (seed) wins
-
-    # and cap_index counts DISTINCT docs, not rows: a bucket of 2 docs
-    # duplicated across epochs must NOT read as 4 and get dropped
-    dup_rows = e1.unionByName(e5)  # every (id,band,key) twice
+    dup_rows = bands.unionByName(bands)  # every (id,band,key) twice
     capped = di.cap_index(dup_rows, max_bucket=2)
     assert capped.count() == dup_rows.count()  # max bucket has 2 docs <= 2
 
@@ -251,10 +247,10 @@ def test_cli_merge_refuses_sidecarless_index(spark, tmp_path):
 
 
 def test_cli_compact_flattens_epoch_history(spark, tmp_path):
-    """--compact-dedup-index over a stream-accumulated (epoch-keyed)
-    index must flatten rows to epoch-less SEED form — visible to every
-    epoch — like its substr twin; rows keeping old epoch values would be
-    hidden from a restarted stream's probes (review finding, round 4)."""
+    """--compact-dedup-index over a stream-accumulated index (one
+    epoch-N generation per epoch) must collapse it into one generation,
+    which every epoch of a restarted stream sees, like its substr twin
+    (review finding, round 4)."""
     from pmocr_spark import checkpoint as ckpt
     from pmocr_spark import cli
 
@@ -265,11 +261,13 @@ def test_cli_compact_flattens_epoch_history(spark, tmp_path):
     for e in (0, 1):
         ckpt.commit_artifact(
             spark, idx, "dedup_index", params,
-            {"bands": bands.withColumn("epoch", F.lit(e).cast("long"))},
+            {"bands": bands},
             mode="append", generation=f"epoch-{e}",
         )
     cli.main(["--compact-dedup-index", idx, "--master", "local[4]"])
     flat, params = di.read_index(spark, idx)
     assert "epoch" not in flat.columns
     assert flat.count() == bands.count()  # cross-epoch dupes collapsed
+    gens = ckpt.open_artifact(spark, idx, "dedup_index")[1]["bands"]
+    assert len(gens) == 1 and "/gen-" in gens[0]
     assert params["n_hashes"] == di.N_MINHASH  # sidecar restored

@@ -510,7 +510,8 @@ def test_cross_epoch_dedup_index(spark, dirs, tmp_path):
         "e0-a", "e0-b", "e1-new"
     }
     assert params["n_hashes"] == di.N_MINHASH  # sidecar written on first epoch
-    assert {r["epoch"] for r in idx.select("epoch").distinct().collect()} == {0, 1}
+    gens = ckpt.open_artifact(spark, idx_dir, "dedup_index")[1]["bands"]
+    assert {streaming._generation(g) for g in gens} == {"epoch-0", "epoch-1"}
     # snapshot NOW: the replay below rewrites epoch-0's part files, so
     # this pre-replay DataFrame's file listing goes stale by design
     idx_count = idx.count()
@@ -569,13 +570,12 @@ def test_corrupt_dedup_index_fails_loud(spark, dirs, tmp_path):
 
 
 def test_seeded_flat_index_survives_epoch_accumulation(spark, dirs, tmp_path):
-    """A CLI-built FLAT index (no epoch column) seeding the service-mode
-    dedup dir: once the stream adds epoch-keyed subdirs the table is
-    mixed-schema, and the seeded rows (reading epoch=NULL under the
-    merged schema) must stay visible to every later epoch's probe — a
-    near-recrawl of a seeded doc is still flagged. The maintenance merge
-    must likewise accept fresh no-epoch bands into the accumulated
-    index (strict union used to raise on exactly this layout)."""
+    """A CLI-built index (one gen-N generation) seeding the service-mode
+    dedup dir: once the stream adds its epoch-N generations, the seeded
+    rows must stay visible to every later epoch's probe — a near-recrawl
+    of a seeded doc is still flagged. The maintenance merge must
+    likewise append fresh bands to the accumulated index as one more
+    generation, leaving the epoch generations in place."""
     import pyarrow as pa
 
     from pmocr_spark.operators import dedup_index as di
@@ -621,20 +621,28 @@ def test_seeded_flat_index_survives_epoch_accumulation(spark, dirs, tmp_path):
           for r in spark.read.parquet(f"{dirs['output']}/epoch-1").collect()}
     assert e1 == {"e1-dup": "s-a"}
 
-    # the merged read sees seed rows as epoch NULL next to real epochs
-    # (epoch 1 contributed no keeper bands: its only doc was a dup)
+    # the seed generation next to one generation per epoch (epoch 1's
+    # is empty: its only doc was a dup, so it had no keeper bands)
+    def generations():
+        gens = ckpt.open_artifact(spark, idx_dir, "dedup_index")[1]["bands"]
+        return [streaming._generation(g) for g in gens]
+
+    assert generations() == ["gen-1", "epoch-0", "epoch-1"]
     idx, params = di.read_index(spark, idx_dir)
-    assert "epoch" in idx.columns
-    epochs = {r["epoch"] for r in idx.select("epoch").distinct().collect()}
-    assert epochs == {None, 0}
+    assert "epoch" not in idx.columns
     ids = {r["doc_id"] for r in idx.select("doc_id").distinct().collect()}
     assert ids == {"s-a", "s-b", "e0-x"}
 
-    # maintenance merge: fresh no-epoch bands into the mixed index
-    more = spark.createDataFrame([("m-c", D)], "doc_id string, text string")
-    merged = di.merge_index(idx, di.build_index(more, max_bucket=None), apply_cap=False)
+    # maintenance merge: fresh bands appended as one more generation
+    from pmocr_spark import cli
+
+    spark.createDataFrame([("m-c", D)], "doc_id string, text string").write.parquet(
+        str(tmp_path / "more"))
+    cli.main(["--merge-dedup-index", idx_dir, "--input", str(tmp_path / "more"),
+              "--master", "local[4]"])
+    assert generations() == ["gen-1", "epoch-0", "epoch-1", "gen-4"]
+    merged = di.read_index(spark, idx_dir)[0]
     assert merged.filter(merged.doc_id == "m-c").count() > 0
-    assert "epoch" in merged.columns
 
 
 def test_dedup_index_per_monitor_namespacing(spark, dirs, tmp_path):
@@ -748,10 +756,9 @@ def test_cross_epoch_substring_dedup_service(spark, dirs, tmp_path):
     assert e1["e1-new"]["txt_clean"] == "c0 c1 c2 c3"
     assert e1["e1-new"]["words_removed"] == 0
 
-    assert ckpt.open_artifact(spark, idx_dir, "substr_index")[0] == {"k": DEFAULT_K}
-    gidx = (spark.read.option("recursiveFileLookup", "true")
-            .option("mergeSchema", "true").parquet(idx_dir))
-    assert {r["epoch"] for r in gidx.select("epoch").distinct().collect()} == {0, 1}
+    meta, paths = ckpt.open_artifact(spark, idx_dir, "substr_index")
+    assert meta == {"k": DEFAULT_K}
+    assert [streaming._generation(g) for g in paths["grams"]] == ["epoch-0", "epoch-1"]
 
 
 def test_epoch_dedup_stores_uncapped_bands(spark, tmp_path):
@@ -850,6 +857,115 @@ def test_index_dir_guard_on_fresh_checkpoint_restart(spark, dirs, tmp_path):
     out = {r["doc_id"]: r["dup_of"]
            for r in spark.read.parquet(f"{dirs['output']}/epoch-0").collect()}
     assert out == {"a": None} or out["a"] is None  # self-match excluded -> clean
+
+
+def test_merged_stream_index_still_guards_fresh_checkpoint_restart(spark, dirs, tmp_path):
+    """--merge-dedup-index over a stream-accumulated index appends one
+    generation and leaves the epoch-N generations in place, so a restart
+    on a fresh offsets checkpoint is still refused until
+    --compact-dedup-index, after which the restarted epoch 0 sees the
+    whole history. A merge that folded the history into one generation
+    whose rows kept their epoch values let that restart through, and the
+    restarted epoch 0 then hid every merged row: dup_of came out None."""
+    import pyarrow as pa
+
+    from pmocr_spark import cli
+
+    A = "the quick brown fox jumps over the lazy dog near the river bank today"
+    A2 = "the quick brown fox jumps over the lazy dog near the river bank tonight"
+    C = "telescopes gather photons from distant galaxies revealing ancient light"
+
+    def doc(doc_id, text):
+        return {"doc_id": doc_id,
+                "spans": [{"kind": "text", "text": text, "media_ref": None, "offset": 0}]}
+
+    def run():
+        q = streaming.monitor(
+            spark, dirs["landing"], media, dirs["output"], dirs["stream_ckpt"],
+            dirs["lineage"], trigger={"availableNow": True}, dedup_index_dir=idx_dir,
+        )
+        q.awaitTermination(120)
+
+    pq.write_table(pa.Table.from_pylist([], schema=corpus.BLOBS_SCHEMA),
+                   f"{tmp_path}/blobs.parquet")
+    media = spark.read.parquet(f"{tmp_path}/blobs.parquet")
+    idx_dir = str(tmp_path / "idx")
+    pq.write_table(pa.Table.from_pylist([doc("a", A)], schema=corpus.DOCUMENTS_SCHEMA),
+                   f"{dirs['landing']}/d0.parquet")
+    run()
+
+    spark.createDataFrame([("m", C)], "doc_id string, text string").write.parquet(
+        str(tmp_path / "more"))
+    cli.main(["--merge-dedup-index", idx_dir, "--input", str(tmp_path / "more"),
+              "--master", "local[4]"])
+
+    for k in ("stream_ckpt", "lineage", "output"):
+        shutil.rmtree(dirs[k], ignore_errors=True)
+    with pytest.raises(ValueError, match="epoch-keyed subdirs"):
+        run()
+
+    cli.main(["--compact-dedup-index", idx_dir, "--master", "local[4]"])
+    pq.write_table(pa.Table.from_pylist([doc("a2", A2)], schema=corpus.DOCUMENTS_SCHEMA),
+                   f"{dirs['landing']}/d1.parquet")
+    run()
+    out = {r["doc_id"]: r["dup_of"]
+           for r in spark.read.parquet(f"{dirs['output']}/epoch-0").collect()}
+    assert out == {"a": None, "a2": "a"}
+
+
+def test_epoch_column_index_stays_visible_to_a_fresh_stream(spark, dirs, tmp_path):
+    """An index written while rows still carried an `epoch` column — one
+    flat generation with numeric epochs, as --merge-dedup-index wrote
+    it — reads like any gen-N generation: the column is ignored, so a
+    fresh stream's epoch 0 flags a near-copy of an indexed doc, and no
+    generation written since (the epoch's own, a compaction) carries
+    the column."""
+    import pyarrow as pa
+
+    from pmocr_spark import cli
+    from pmocr_spark.operators import dedup_index as di
+
+    A = "the quick brown fox jumps over the lazy dog near the river bank today"
+    A2 = "the quick brown fox jumps over the lazy dog near the river bank tonight"
+    B = "completely unrelated text about cooking pasta with garlic and olive oil"
+    C = "telescopes gather photons from distant galaxies revealing ancient light"
+
+    def doc(doc_id, text):
+        return {"doc_id": doc_id,
+                "spans": [{"kind": "text", "text": text, "media_ref": None, "offset": 0}]}
+
+    idx_dir = str(tmp_path / "idx")
+    seed = spark.createDataFrame([("s-a", A), ("s-b", B)], "doc_id string, text string")
+    bands = di.build_index(seed, max_bucket=None).withColumn(
+        "epoch", F.when(F.col("doc_id") == "s-a", 0).otherwise(1).cast("long"))
+    params = {"n_hashes": di.N_MINHASH, "band_size": di.BAND_SIZE,
+              "max_bucket": di.MAX_BAND_BUCKET}
+    ckpt.commit_artifact(spark, idx_dir, "dedup_index", params, {"bands": bands},
+                         mode="overwrite")
+
+    pq.write_table(pa.Table.from_pylist([], schema=corpus.BLOBS_SCHEMA),
+                   f"{tmp_path}/blobs.parquet")
+    pq.write_table(
+        pa.Table.from_pylist([doc("e0-dup", A2), doc("e0-new", C)],
+                             schema=corpus.DOCUMENTS_SCHEMA),
+        f"{dirs['landing']}/d0.parquet")
+    q = streaming.monitor(
+        spark, dirs["landing"], spark.read.parquet(f"{tmp_path}/blobs.parquet"),
+        dirs["output"], dirs["stream_ckpt"], dirs["lineage"],
+        trigger={"availableNow": True}, dedup_index_dir=idx_dir,
+    )
+    q.awaitTermination(120)
+    out = {r["doc_id"]: r["dup_of"]
+           for r in spark.read.parquet(f"{dirs['output']}/epoch-0").collect()}
+    assert out == {"e0-dup": "s-a", "e0-new": None}
+    assert "epoch" not in spark.read.parquet(f"{idx_dir}/epoch-0/bands").columns
+
+    cli.main(["--compact-dedup-index", idx_dir, "--master", "local[4]"])
+    (gen,) = ckpt.open_artifact(spark, idx_dir, "dedup_index")[1]["bands"]
+    compacted = spark.read.parquet(gen)
+    assert "epoch" not in compacted.columns
+    assert {r["doc_id"] for r in compacted.select("doc_id").distinct().collect()} == {
+        "s-a", "s-b", "e0-new"}
 
 
 @pytest.mark.parametrize("compact", [False, True])
