@@ -1,12 +1,11 @@
-"""Checkpoint / lineage table IO (resume + metrics contract, FIXTURES.md §3),
-and the one commit protocol of every persisted index and model
-(commit_artifact / open_artifact, below).
+"""Lineage table IO (resume + metrics contract, FIXTURES.md §3), and
+the one commit protocol of every persisted table — the lineage, each
+index and model (commit_artifact / open_artifact, below).
 
 pmOCR encodes row state in filenames (`*_OCR.*` done, `*_OCR_ERR.*`
-failed, /root/reference/pmocr.sh:2088-2096, 2002-2010); here state lives
-in an append-only parquet table (Iceberg-shaped — swap `.write.parquet`
-for `.writeTo(...).append()` when an Iceberg catalog is on the
-classpath; the v1 image has no Iceberg jars, see pyspark_guide.md).
+failed, pmocr.sh:2088-2096, 2002-2010); here state lives in a parquet
+lineage table that each job commits one generation of, and a batch
+job's output is published by that same commit.
 
 Schema: (partition_id, doc_id, status, span_count, error_count, error,
 retry_count, run_id, ts) — ts is a JOB-SUPPLIED timestamp, never wall
@@ -19,6 +18,7 @@ from __future__ import annotations
 
 import json
 import re
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,15 +44,11 @@ def checkpoint_rows(
 ) -> DataFrame:
     """Derive lineage rows from a batch result frame (S5/S6 sinks).
 
-    `prior` is the checkpoint table as of this run's resume read; a doc's
+    `prior` is the lineage as of this run's resume read; a doc's
     retry_count = prior failed attempts + 1 if this attempt failed too.
     The prior table is SEMI-JOINED down to this batch's doc_ids before
-    the groupBy: lineage grows without bound (streaming re-reads it every
-    epoch), so aggregating the whole history per batch would invert the
-    'tiny lookup map' assumption over time — after the semi-join the
-    aggregate is bounded by the batch size regardless of lineage age.
-    (Periodic compaction to latest-row-per-doc is the complementary
-    100 TB hygiene; the semi-join keeps each epoch correct without it.)
+    the groupBy, so the aggregate is bounded by the batch size however
+    long the lineage grows (compaction is the complementary hygiene).
     """
     rows = results.select(
         F.spark_partition_id().alias("partition_id"),
@@ -65,33 +61,19 @@ def checkpoint_rows(
         F.lit(job_ts).cast("timestamp").alias("ts"),
     )
     if prior is None:
-        prior_rc = None
+        rows = rows.withColumn("_prior_rc", F.lit(0))
     else:
-        prior_rc = (
+        rows = rows.join(
             prior.join(results.select("doc_id"), "doc_id", "left_semi")
             .groupBy("doc_id")
-            .agg(F.coalesce(F.max("retry_count"), F.lit(0)).alias("_prior_rc"))
+            .agg(F.coalesce(F.max("retry_count"), F.lit(0)).alias("_prior_rc")),
+            "doc_id",
+            "left",
         )
-    if prior_rc is not None:
-        rows = rows.join(prior_rc, "doc_id", "left")
-    else:
-        rows = rows.withColumn("_prior_rc", F.lit(0))
-    return rows.select(
-        "partition_id",
-        "doc_id",
-        "status",
-        "span_count",
-        "error_count",
-        "error",
-        (
-            F.coalesce(F.col("_prior_rc"), F.lit(0))
-            + F.when(F.col("status") == "failed", 1).otherwise(0)
-        )
-        .cast("int")
-        .alias("retry_count"),
-        "run_id",
-        "ts",
-    )
+    retries = F.coalesce(F.col("_prior_rc"), F.lit(0)) + F.when(
+        F.col("status") == "failed", 1
+    ).otherwise(0)
+    return rows.withColumn("retry_count", retries.cast("int")).select(*CHECKPOINT_SCHEMA.names)
 
 
 def _fs(spark: SparkSession, path: str, *more: str) -> tuple:
@@ -103,54 +85,77 @@ def _fs(spark: SparkSession, path: str, *more: str) -> tuple:
     return (hps[0].getFileSystem(spark._jsc.hadoopConfiguration()), *hps)  # noqa: SLF001
 
 
-def read_checkpoint(spark: SparkSession, path: str) -> DataFrame | None:
-    """Load the checkpoint table, or None on first run.
+def read_checkpoint(
+    spark: SparkSession, path: str, *, epoch: int | None = None
+) -> DataFrame | None:
+    """The committed lineage rows at `path`, or None when there are none;
+    with `epoch`, the view that service epoch reads (epoch_visible)."""
+    fs, hp = _fs(spark, path)
+    paths = [
+        p for g, ps in _lineage(spark, fs, path, _scan(fs, hp)).items()
+        if epoch_visible(g, epoch) for p in ps
+    ]
+    return spark.read.schema(CHECKPOINT_SCHEMA).parquet(*paths) if paths else None
 
-    Probes via spark.read (works on hdfs://, s3a://, ... — an os.path
-    probe would silently disable resume off the driver-local FS).
-    recursiveFileLookup picks up both flat batch appends and the
-    streaming sink's per-epoch subdirectories.
-    """
-    try:
-        # path resolution (file listing) happens inside .parquet(), so a
-        # missing dir raises here, not at first downstream use
-        return (
-            spark.read.schema(CHECKPOINT_SCHEMA)
-            .option("recursiveFileLookup", "true")
-            .parquet(path)
+
+def epoch_visible(generation: str, epoch: int | None, *, hide_later: bool = False) -> bool:
+    """Whether a job at service epoch `epoch` reads the committed
+    `generation`. Never epoch-<E> itself, which a replay of E rewrites
+    under the read; a batch job (None) reads every one. With hide_later
+    (an index probe) it skips later epochs' generations too, so a
+    fresh-checkpoint replay finds what the first run found; the lineage
+    read keeps them, so their docs stay done. The generation name is
+    the only record of which epoch wrote a row."""
+    e = int(generation[6:]) if generation.startswith("epoch-") else None
+    return epoch is None or e is None or e < epoch or (e > epoch and not hide_later)
+
+
+def _lineage(spark, fs, path: str, scan) -> dict[str, list[str]]:
+    """{generation: parquet paths} of the lineage at `path`. A lineage
+    written before the lineage kind has no sidecar: its rows are the
+    top-level part files, read as generation gen-0 (batch appends), and
+    the part files directly in epoch-<E>/ (stream epochs). Frames of
+    the new shape sit in <gen>/rows/, so with no sidecar they are an
+    interrupted first commit and read as nothing."""
+    doc = _committed(spark, fs, path, "lineage", scan, "read")
+    if doc is not None:
+        return {g: [f"{path}/{g}/rows"] for g in doc["generations"]}
+    old = {"gen-0": [f"{path}/{n}" for n in scan[2]]}
+    for g in sorted(n for n in scan[3] if _GENERATION.match(n) and n.startswith("epoch-")):
+        old[g] = [
+            f"{path}/{g}/{st.getPath().getName()}"
+            for st in fs.listStatus(_fs(spark, f"{path}/{g}")[1])
+            if st.isFile() and not st.getPath().getName().startswith(("_", "."))
+        ]
+    return {g: ps for g, ps in old.items() if ps}
+
+
+def append_checkpoint(rows: DataFrame, path: str, generation: str | None = None) -> None:
+    """Commit lineage `rows` as one new generation of the lineage at
+    `path`: gen-<n>, or `generation` (a service epoch's epoch-<E>,
+    which its replay rewrites)."""
+    _commit_lineage(rows.sparkSession, path, rows, "append", generation)
+
+
+def _commit_lineage(spark, path: str, rows: DataFrame, mode: str, generation=None) -> None:
+    """commit_artifact for the lineage. The first append over a lineage
+    written before the lineage kind rewrites its generations into
+    <gen>/rows for the sidecar to list; the old files go only after the
+    rename, so a crash at any step loses no row."""
+    fs, hp = _fs(spark, path)
+    scan = _scan(fs, hp)
+    old = {} if "lineage" in scan[0] else _lineage(spark, fs, path, scan)
+    adopted = [g for g in old if mode == "append" and g != generation]
+    for g in adopted:
+        spark.read.schema(CHECKPOINT_SCHEMA).parquet(*old[g]).write.mode("overwrite").parquet(
+            f"{path}/{g}/rows"
         )
-    except Exception as e:  # AnalysisException: PATH_NOT_FOUND on first run
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            # a missing table is only a first run if no interrupted
-            # compaction left the real table parked at .compact.bak —
-            # treating that as 'first run' would silently reprocess the
-            # whole corpus and drop all retry/quarantine history
-            bak = f"{path}.compact.bak"
-            fs, hp = _fs(spark, bak)
-            if fs.exists(hp):
-                raise RuntimeError(
-                    f"lineage table {path!r} is missing but {bak!r} exists — "
-                    "a compaction was interrupted between its two renames. "
-                    f"Restore it (rename {bak!r} back to {path!r}) before "
-                    "running; proceeding would reprocess every doc and lose "
-                    "retry/quarantine history."
-                ) from e
-            return None
-        raise
-
-
-def append_checkpoint(rows: DataFrame, path: str) -> None:
-    """Append lineage rows.
-
-    ORDERING HAZARD: if `rows` derives from a plan that itself reads
-    `path` (the resume anti-join), materialize/write all other outputs
-    of that plan BEFORE calling this — Spark re-reads the directory on
-    any cache-miss recompute, and the freshly appended rows would
-    anti-join the batch's own docs away. pipeline.run_job enforces this
-    order for the batch CLI and every service epoch: its sinks and the
-    --metrics report are written before the lineage.
-    """
-    rows.write.mode("append").parquet(path)
+    commit_artifact(
+        spark, path, "lineage", {}, {"rows": rows},
+        mode=mode, generation=generation, adopted=adopted,
+    )
+    for f in (f for files in old.values() for f in files):
+        fs.delete(_fs(spark, f)[1], False)
 
 
 def latest_row_order():
@@ -168,22 +173,15 @@ def latest_row_order():
 def compact_rows(checkpoint: DataFrame) -> DataFrame:
     """Latest-row-per-doc view of the lineage table (same schema).
 
-    Keeps each doc's winning row (latest_row_order) verbatim — so the
-    winning status/ts/run_id survive, including the streaming '#eN'
-    epoch tag the replay filter keys on — with retry_count lifted to the
-    doc's GLOBAL max, which is exactly what resume_filter and
-    checkpoint_rows aggregate. Resume/retry/backoff behavior over the
-    compacted table is therefore identical to the full history.
-
-    One groupBy(doc_id) — the same shuffle resume_filter already pays
-    per run, paid once to make every FUTURE run's lineage scan O(docs)
-    instead of O(runs x docs)."""
-    # latest_row_order alone can tie (same ts AND same status — e.g. a
-    # batch run and a stream epoch stamped with one job_ts); rows tied
-    # there have identical status, so resume_filter is already
-    # deterministic, but the WHOLE-ROW winner here must be too — extend
-    # the ordering with run_id (then partition_id) so compaction keeps
-    # the same row on every run over the same multiset
+    Keeps each doc's winning row (latest_row_order) verbatim — status,
+    ts and run_id with a stream's '#eN' tag — with retry_count lifted to
+    the doc's GLOBAL max, exactly what resume_filter and checkpoint_rows
+    aggregate, so resume/retry/backoff over the compacted table equals
+    the full history. One groupBy(doc_id), paid once so every later
+    lineage scan is O(docs) instead of O(runs x docs)."""
+    # latest_row_order alone can tie (same ts and status, e.g. a batch
+    # run and a stream epoch on one job_ts): run_id, then partition_id,
+    # make the WHOLE-ROW winner deterministic too
     full_order = F.struct(
         latest_row_order().alias("o"),
         F.col("run_id").alias("r"),
@@ -196,105 +194,48 @@ def compact_rows(checkpoint: DataFrame) -> DataFrame:
         ).alias("w"),
         F.coalesce(F.max("retry_count"), F.lit(0)).alias("_rc"),
     )
-    return win.select(
-        F.col("w.partition_id").alias("partition_id"),
-        "doc_id",
-        F.col("w.status").alias("status"),
-        F.col("w.span_count").alias("span_count"),
-        F.col("w.error_count").alias("error_count"),
-        F.col("w.error").alias("error"),
-        F.col("_rc").cast("int").alias("retry_count"),
-        F.col("w.run_id").alias("run_id"),
-        F.col("w.ts").alias("ts"),
-    )
+    own = {"doc_id": F.col("doc_id"), "retry_count": F.col("_rc").cast("int")}
+    return win.select(*[own.get(c, F.col(f"w.{c}")).alias(c) for c in CHECKPOINT_SCHEMA.names])
 
 
 def compact_checkpoint(spark: SparkSession, path: str) -> int:
-    """Rewrite the lineage table at `path` to latest-row-per-doc.
+    """Rewrite the lineage at `path` to latest-row-per-doc (one row per
+    doc, where every job adds one) as one overwrite commit; returns the
+    committed row count. A crash at any step leaves the previous commit
+    readable.
 
-    The 100 TB hygiene pass the per-epoch semi-join defers (see
-    checkpoint_rows): an append-only lineage grows one row per doc per
-    run forever; every resume re-scans it. Compaction bounds the table
-    at one row per doc. Returns the compacted row count.
-
-    Swap protocol (replace_dir): write to <path>.compact.tmp, rename
-    the old dir to <path>.compact.bak, rename tmp into place, delete
-    bak. A crash between the renames leaves the .bak to restore by
-    hand — never a half-written table at `path` ON RENAME-ATOMIC
-    FILESYSTEMS (HDFS, local). On object stores (s3a://) dir 'rename'
-    is a non-atomic copy, so the guarantee degrades to
-    eventually-consistent-with-bak — prefer an Iceberg table commit
-    there.
-
-    Run this with no concurrent writer (batch: between runs; streaming:
-    stream stopped, last epoch committed). Compacting UNDER a stream
-    that later crash-replays an old epoch would re-derive that epoch's
-    retry counts from the compacted row only.
-    """
+    Run it with no stream committing to `path`, after the stream's last
+    epoch committed its offsets too: every epoch reads the compacted
+    generation, so a replay of a compacted epoch would see its own rows,
+    and a commit landing mid-compaction makes it raise."""
     full = read_checkpoint(spark, path)
     if full is None:
         return 0
-    compacted = compact_rows(full).persist()
-    n = compacted.count()  # materialize BEFORE touching `path` (read is lazy)
-    replace_dir(spark, compacted, path)
-    compacted.unpersist()
-    return n
-
-
-def replace_dir(spark: SparkSession, df: DataFrame, path: str) -> None:
-    """Replace the lineage table dir at `path` with `df` via write-aside +
-    rename (scheme-agnostic through the Hadoop FS API; ATOMIC only where
-    dir rename is — HDFS/local, not object stores, see
-    compact_checkpoint).
-
-    IMPORTANT: `df` must already be materialized (persisted + counted,
-    or read from elsewhere) — it is written BEFORE `path` is touched,
-    but a lazy plan still scanning `path` would race its own rename.
-
-    Orphan hygiene (round-3 ADVICE): a stale <path>.compact.tmp from a
-    crashed earlier run is deleted up front, the bak-exists refusal
-    happens BEFORE the (expensive) tmp write, and the tmp is removed on
-    every failure path so no run leaves both artifacts behind."""
-    tmp, bak = f"{path}.compact.tmp", f"{path}.compact.bak"
-    fs, hp, htmp, hbak = _fs(spark, path, tmp, bak)
-    if fs.exists(hbak):
-        raise RuntimeError(
-            f"{bak} exists — a previous swap did not finish; "
-            "restore or remove it before retrying"
-        )
-    if fs.exists(htmp):
-        fs.delete(htmp, True)  # orphan from a crashed run
-    df.write.mode("overwrite").parquet(tmp)
-    if not fs.rename(hp, hbak):
-        fs.delete(htmp, True)
-        raise RuntimeError(f"could not move {path} aside to {bak}")
-    if not fs.rename(htmp, hp):
-        fs.rename(hbak, hp)  # roll back
-        fs.delete(htmp, True)
-        raise RuntimeError(f"could not move new table into {path}")
-    fs.delete(hbak, True)
+    _commit_lineage(spark, path, compact_rows(full), "overwrite")
+    return read_checkpoint(spark, path).count()
 
 
 # ------------------------------------------------- persisted artifacts
 #
-# Every persisted index and model commits the same way (pmOCR's
-# rename-as-commit, pmocr.sh:2067-2096): its frames go to a new
-# generation dir <path>/<gen>/<name>, then its sidecar — kind,
-# format_version, the committed generations, the kind's params — is
-# written to a hidden temp file and renamed to the next unused
-# <path>/<stem>.<n>.json. The newest sidecar wins and readers open only
-# the generations it lists, so a crash at any step leaves the previous
-# commit readable and a retry lands exactly once. What the new sidecar
-# does not list is deleted after the rename. The lineage table above is
-# not such an artifact: Spark's job commit appends it, the stream
-# replays it.
+# Every persisted table — the lineage, each index and model — commits
+# the same way (pmOCR's rename-as-commit, pmocr.sh:2067-2096): its
+# frames go to a new generation dir <path>/<gen>/<name>, then its
+# sidecar — kind, format_version, the committed generations, the kind's
+# params — is written to a hidden temp file and renamed to
+# <path>/<stem>.<n>.json, n one past the commit it extends. The newest
+# sidecar wins and readers open only the generations it lists, so a
+# crash at any step leaves the previous commit readable and a retry
+# lands exactly once. What the new sidecar replaced is deleted after
+# the rename.
 
 #: the artifact format this build writes and reads
 FORMAT_VERSION = 1
 
 #: kind -> (sidecar stem, what it is, the mode that rebuilds it). The
-#: format before format_version kept one unversioned <stem>.json.
+#: format before format_version kept one unversioned <stem>.json; the
+#: lineage before it kept no sidecar (_lineage reads that layout).
 ARTIFACT_KINDS = {
+    "lineage": ("_lineage", "lineage", "--batch"),
     "text_index": ("_TEXT_INDEX_META", "text index", "--build-text-index"),
     "bloom_index": ("_bloom_meta", "Bloom index", "--build-bloom-index"),
     "pq_index": ("_pq_index_meta", "PQ index", "--build-pq-index"),
@@ -306,16 +247,19 @@ ARTIFACT_KINDS = {
 }
 _KIND_OF_STEM = {stem: kind for kind, (stem, _l, _m) in ARTIFACT_KINDS.items()}
 _SIDECAR = re.compile(r"(_\w+?)(?:\.(\d+))?\.json\Z")
-#: generation dir names: gen-<commit> for builds, epoch-<E> for stream epochs
+#: generation dir names: gen-<n> for builds and batch jobs, epoch-<E>
+#: for stream epochs — the two generation families
 _GENERATION = re.compile(r"(gen|epoch)-\d+\Z")
 
 
 def _scan(fs, hp):
     """One listing of an artifact dir: ({kind: newest commit n}, {kinds
-    with an unversioned sidecar}, [top-level data entries])."""
-    newest, unversioned, data = {}, set(), []
+    with an unversioned sidecar}, [top-level data entries], {every name
+    listed})."""
+    newest, unversioned, data, names = {}, set(), [], set()
     for st in fs.listStatus(hp) if fs.exists(hp) else []:
         name = st.getPath().getName()
+        names.add(name)
         m = _SIDECAR.match(name)
         if m and m[1] in _KIND_OF_STEM:
             kind = _KIND_OF_STEM[m[1]]
@@ -325,18 +269,18 @@ def _scan(fs, hp):
                 newest[kind] = max(newest.get(kind, 0), int(m[2]))
         elif not name.startswith(("_", ".")) and not _GENERATION.match(name):
             data.append(name)
-    return newest, unversioned, data
+    return newest, unversioned, data, names
 
 
 def _committed(spark, fs, path: str, kind: str, scan, op: str) -> dict | None:
     """The newest sidecar of `kind` at `path`, None when nothing was
     committed there; raises on any layout this build cannot read."""
-    newest, unversioned, data = scan
+    newest, unversioned, data, _names = scan
     stem, label, rebuild = ARTIFACT_KINDS[kind]
     other = next((k for k in (*newest, *unversioned) if k != kind), None)
     if kind not in newest and other is not None:
         raise ValueError(f"cannot {op} {path}: it holds a {ARTIFACT_KINDS[other][1]}")
-    if kind not in newest and (kind in unversioned or data):
+    if kind not in newest and kind != "lineage" and (kind in unversioned or data):
         raise ValueError(
             f"cannot {op} {path}: no {stem} sidecar with a format_version, so it is "
             f"not a {label} dir this build reads; rebuild it with {rebuild}"
@@ -367,9 +311,9 @@ def open_artifact(
     operation, e.g. 'read' or 'append to') an absent artifact raises.
 
     Always raises on a layout this build cannot read: top-level data
-    with no sidecar, another kind's sidecar, and any format_version but
-    FORMAT_VERSION — which includes every unversioned sidecar written
-    before it; the message names the mode that rebuilds the artifact."""
+    with no sidecar, another kind's sidecar, any format_version but
+    FORMAT_VERSION (so every unversioned sidecar); the message names the
+    mode that rebuilds the artifact."""
     fs, hp = _fs(spark, path)
     doc = _committed(spark, fs, path, kind, _scan(fs, hp), required or "open")
     if doc is None and required:
@@ -385,8 +329,8 @@ def open_artifact(
 
 
 def _publish(fs, src, dst) -> None:
-    """The commit point: rename the fully written sidecar temp file to
-    its not-yet-taken final name."""
+    """A commit point: rename the fully written `src` to `dst`, a name
+    not yet taken — the rename refuses a taken one, and so does this."""
     if not fs.rename(src, dst):
         raise RuntimeError(f"could not commit {dst}")
 
@@ -400,50 +344,118 @@ def commit_artifact(
     *,
     mode: str,
     generation: str | None = None,
+    adopted: list[str] = (),
 ) -> None:
     """Commit `frames` (name -> DataFrame) as one new generation of the
     artifact at `path`, with `meta` as its params, sidecar last.
 
-    mode='overwrite' (build, merge, compact) commits a generation list
-    holding only the new generation; mode='append' adds it to the
-    committed list, and refuses what open_artifact refuses. `generation`
-    names it (default gen-<commit>); the stream commits epoch-<E>, so a
-    replay rewrites its own generation. With no frames only the params
-    change. The replaced generations are deleted after the commit, so
-    the frames must not still read them lazily."""
+    mode='overwrite' (build, compact) commits a generation list holding
+    only the new generation; mode='append' adds it to the committed
+    list, and refuses what open_artifact refuses. `generation` names it
+    (default gen-<n>); the stream commits epoch-<E>, so a replay
+    rewrites its own generation. With no frames only the params change.
+    `adopted`: generations already written that an append to an
+    uncommitted dir lists first (a lineage older than its sidecar).
+
+    One writer per generation family — gen-<n> and epoch-<E> — may
+    commit at once: the sidecar takes the number after the commit it
+    extends, which the rename refuses once taken, so an append that
+    loses it extends the newer commit and an overwrite raises. The sweep
+    deletes what this commit replaced and the uncommitted generations of
+    its own family its first listing saw — so the frames must not still
+    read them lazily — never the other family's in flight."""
     if mode not in ("overwrite", "append"):
         raise ValueError(f"unknown commit mode {mode!r}")
     fs, hp = _fs(spark, path)
     scan = _scan(fs, hp)
-    n = scan[0].get(kind, 0) + 1
-    doc = _committed(spark, fs, path, kind, scan, "append to") if mode == "append" else None
-    gens, names = (doc["generations"], doc["frames"]) if doc else ([], [])
+    seen, stem = scan[3], ARTIFACT_KINDS[kind][0]
+    try:
+        doc = _committed(spark, fs, path, kind, scan, "append to")
+    except ValueError:
+        if mode == "append":
+            raise
+        doc = None  # an overwrite rebuilds what this build cannot read
+    base = set(doc["generations"] if doc else ())
+    gen = None
     if frames:
-        gen = generation or f"gen-{n}"
+        gen = generation or f"gen-{scan[0].get(kind, 0) + 1}"
         for name, df in frames.items():
             df.write.mode("overwrite").parquet(f"{path}/{gen}/{name}")
-        gens, names = (gens if gen in gens else [*gens, gen]), sorted(frames)
-    side = f"{ARTIFACT_KINDS[kind][0]}.{n}.json"
-    _fs_, htmp, hside = _fs(spark, f"{path}/.{side}.tmp", f"{path}/{side}")
-    out = fs.create(htmp, True)
-    try:
-        out.write(bytearray(json.dumps({
-            "kind": kind, "format_version": FORMAT_VERSION,
-            "generations": gens, "frames": names, "params": meta,
-        }).encode()))
-    finally:
-        out.close()
-    _publish(fs, htmp, hside)
-    # sweep the sidecars and generations this commit does not list;
-    # files the format does not own are left alone
+    htmp = _fs(spark, f"{path}/.{stem}.{uuid.uuid4().hex}.tmp")[1]
+    for attempt in range(5):
+        n = scan[0].get(kind, 0) + 1
+        gens, names = ([], [])
+        if mode == "append":
+            gens, names = (doc["generations"], doc["frames"]) if doc else (list(adopted), [])
+        if frames:
+            gens, names = (gens if gen in gens else [*gens, gen]), sorted(frames)
+        out = fs.create(htmp, True)
+        try:
+            out.write(bytearray(json.dumps({
+                "kind": kind, "format_version": FORMAT_VERSION,
+                "generations": gens, "frames": names, "params": meta,
+            }).encode()))
+        finally:
+            out.close()
+        side = f"{stem}.{n}.json"
+        try:
+            _publish(fs, htmp, _fs(spark, f"{path}/{side}")[1])
+            break
+        except RuntimeError:
+            fs.delete(htmp, False)
+            if mode == "overwrite" or attempt == 4:
+                raise
+        # another writer committed n first: extend its commit instead
+        scan = _scan(fs, hp)
+        doc = _committed(spark, fs, path, kind, scan, "append to")
+        if gen in doc["generations"] and gen not in base:
+            raise RuntimeError(f"another writer committed {gen} to {path}")
+    family = gen and gen.split("-")[0]
     for st in fs.listStatus(hp):
         name = st.getPath().getName()
-        m = _SIDECAR.match(name.lstrip(".").removesuffix(".tmp"))
-        owned = _GENERATION.match(name) or (m and m[1] in _KIND_OF_STEM)
-        if owned and name not in (*gens, side):
+        m = _SIDECAR.match(name)
+        if m and m[1] in _KIND_OF_STEM:
+            stale = name != side and (m[1] != stem or m[2] is None or int(m[2]) < n)
+        elif _GENERATION.match(name):
+            stale = name not in gens and (
+                name in base or (name in seen and name.split("-")[0] == family)
+            )
+        else:  # a temp sidecar some crashed commit left
+            stale = name in seen and name.startswith(".") and name.endswith(".tmp")
+        if stale:
             fs.delete(st.getPath(), True)
     # a replayed generation rewrites part files some cached listing may hold
     spark.catalog.refreshByPath(path)
+
+
+def settle_output(spark: SparkSession, output: str, lineage: str) -> str:
+    """Publish each batch output staged at `<output>/_pending-<gen>` whose
+    generation the lineage at `lineage` lists — every file moves to its
+    relative path under `output`, never over an existing file — and
+    delete the others (jobs that died before their commit). Returns the
+    generation the next batch job commits and stages under."""
+    lfs, hlin = _fs(spark, lineage)
+    scan = _scan(lfs, hlin)
+    doc = _committed(spark, lfs, lineage, "lineage", scan, "read")
+    fs, hout = _fs(spark, output)
+    path_of = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
+
+    def move(src, dst):
+        for st in fs.listStatus(src):
+            name = st.getPath().getName()
+            if st.isDirectory():  # a --partition-by column=value dir
+                fs.mkdirs(path_of(dst, name))
+                move(st.getPath(), path_of(dst, name))
+            elif not name.startswith(("_", ".")):
+                _publish(fs, st.getPath(), path_of(dst, name))
+
+    for st in fs.listStatus(hout) if fs.exists(hout) else []:
+        name = st.getPath().getName()
+        if name.startswith("_pending-"):
+            if doc and name[len("_pending-"):] in doc["generations"]:
+                move(st.getPath(), hout)
+            fs.delete(st.getPath(), True)
+    return f"gen-{scan[0].get('lineage', 0) + 1}"
 
 
 def partition_metrics(checkpoint: DataFrame) -> DataFrame:

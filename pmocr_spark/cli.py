@@ -157,10 +157,10 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--compact-lineage", action="store_true",
-        help="batch mode: after the run, rewrite the lineage table to latest-row-per-doc "
-        "(checkpoint.compact_checkpoint). Append-only lineage grows one row per doc per run; "
-        "every resume re-scans it — compaction bounds it at one row per doc with identical "
-        "resume/retry semantics. Run with no concurrent writer.",
+        help="batch mode: after the run, commit the lineage table rewritten to "
+        "latest-row-per-doc as one generation (checkpoint.compact_checkpoint). Lineage grows "
+        "one row per doc per run; every resume re-scans it — compaction bounds it at one row "
+        "per doc with identical resume/retry semantics. Run with no stream committing to it.",
     )
     p.add_argument(
         "--build-dedup-index", metavar="DIR",
@@ -1146,6 +1146,8 @@ def _run_batch(spark, args) -> None:
 
     job_ts = args.job_ts.replace("T", " ").replace("Z", "")
     docs, blobs = _read_tables(spark, args)
+    gen = ckpt.settle_output(spark, args.output, args.lineage)
+    staged = f"{args.output}/_pending-{gen}"  # published by gen's lineage commit
     lineage = ckpt.read_checkpoint(spark, args.lineage)
     if lineage is not None:
         # one scan for the warning + resume filter + retry-count lookup
@@ -1193,28 +1195,29 @@ def _run_batch(spark, args) -> None:
             # WET is the extracted-text artifact: done docs only (failures
             # and skips live in lineage, exactly like CommonCrawl's WET
             # files carry successful conversions only)
-            write_wet(out.filter(F.col("status") == "done"), args.output, job_ts=job_ts)
+            write_wet(out.filter(F.col("status") == "done"), staged, job_ts=job_ts)
         elif args.output_format == "jsonl":
             from .sources.jsonl import write_jsonl
 
-            write_jsonl(out, args.output, partition_by=pcols or None)
+            write_jsonl(out, staged, mode="overwrite", partition_by=pcols or None)
         else:
-            writer = out.write.mode("append")
+            writer = out.write.mode("overwrite")
             if pcols:
                 writer = writer.partitionBy(*pcols)
             if args.output_format == "orc":
-                writer.orc(args.output)
+                writer.orc(staged)
             else:
-                writer.parquet(args.output)
+                writer.parquet(staged)
 
     pipeline.run_job(
         spark, docs, blobs, lineage, run_id=args.run_id, job_ts=job_ts,
         targets=args.target_list, write_output=write_output,
-        write_lineage=lambda rows: ckpt.append_checkpoint(rows, args.lineage),
+        write_lineage=lambda rows: ckpt.append_checkpoint(rows, args.lineage, gen),
         suffix="" if args.no_suffix else args.suffix, addition=args.filename_addition,
         metrics_dir=args.metrics, num_partitions=args.num_partitions,
         broadcast_spans=(args.span_join != "shuffle"), ocr_udf=args.ocr_udf,
     )
+    ckpt.settle_output(spark, args.output, args.lineage)
     if args.compact_lineage:
         # after metrics: the per-run partition report needs the full
         # history; compaction keeps only each doc's winning row
@@ -1348,9 +1351,9 @@ def _dedup_index(spark, args, op: str) -> None:
             band_size=params["band_size"],
             max_bucket=None,
         )
-        di.write_index(
-            new_bands.join(rows, rows.columns, "left_anti"), idx_dir, **params, mode="append"
-        )
+        new_rows = new_bands.join(rows, rows.columns, "left_anti")
+        if new_rows.limit(1).count():  # a retried merge commits no empty generation
+            di.write_index(new_rows, idx_dir, **params, mode="append")
     else:  # compact
         di.write_index(di.cap_index(rows.distinct(), params["max_bucket"]), idx_dir, **params)
     n = di.read_index(spark, idx_dir)[0].count()

@@ -378,8 +378,8 @@ def run_job(
     write_output(results, out), the caller's sinks -> checkpoint_rows ->
     with metrics_dir, partition_metrics of prior ∪ rows (the whole
     lineage after this job), overwritten -> write_lineage(rows), last:
-    every other output of the plan is written before the lineage commit
-    (the ORDERING HAZARD of checkpoint.append_checkpoint).
+    the job's commit point (checkpoint.append_checkpoint), a generation
+    no read of this job lists, so no recompute sees the job's rows.
 
     `prior` is the lineage as of the resume read (None on a first run),
     persisted here unless the caller already has, so resume, retry

@@ -334,11 +334,13 @@ def write_wet(
     Determinism (the X10 fixed-timestamp discipline): rows hash-
     repartition on `id_col` and sort within shards, and WARC-Date comes
     from the caller's job clock — two runs over the same table produce
-    byte-identical shards. Executors stream their own shard via
+    byte-identical shards, named by a hash of their bytes — so jobs
+    sharing `path` never clobber each other's. Executors stream their own shard via
     foreachPartition (no driver collect); the destination must be a
     task-visible filesystem path (local/NFS — the same contract as any
     posix sink; object stores take the parquet/jsonl sinks).
     """
+    import hashlib
     import os
 
     from pyspark import TaskContext
@@ -379,8 +381,10 @@ def write_wet(
                 }
             )
         if len(recs) > 1:  # empty partitions write nothing
-            with open(os.path.join(path, f"wet-{pid:05d}.warc.gz"), "wb") as f:
-                f.write(build_warc(recs, gz=True))
+            data = build_warc(recs, gz=True)
+            name = f"wet-{pid:05d}-{hashlib.sha1(data).hexdigest()[:16]}.warc.gz"
+            with open(os.path.join(path, name), "wb") as f:
+                f.write(data)
 
     rows.foreachPartition(_write)
 

@@ -18,8 +18,8 @@ subsumed by Structured Streaming micro-batches:
 Each micro-batch runs pipeline.run_job inside foreachBatch, the same job
 body the batch CLI runs — identical semantics, one code path, per pmOCR
 where service mode calls the same OCR_Dispatch (pmocr.sh:2195-2224). An
-epoch adds only its clock, the replay filter, the dedup annotations and
-its epoch-N overwrites.
+epoch adds only its clock, its replay view, the dedup annotations and
+its epoch-N commits.
 """
 
 from __future__ import annotations
@@ -78,16 +78,14 @@ def _generation(committed_path: str) -> str:
 def _open_prior(spark, path: str, kind: str, epoch_id: int):
     """(params or None, rows or None) of the index at `path` as epoch
     `epoch_id` must see it: every committed generation but epoch-E and
-    later ones — on a replay of E its own generation is committed
-    already and is rewritten under this read. The generation name is
-    the only record of which epoch wrote a row."""
+    later ones (checkpoint.epoch_visible)."""
     opened = ckpt.open_artifact(spark, path, kind)
     if opened is None:
         return None, None
     params, paths = opened
     prior = [
         p for ps in paths.values() for p in ps
-        if not (_generation(p).startswith("epoch-") and int(_generation(p)[6:]) >= epoch_id)
+        if ckpt.epoch_visible(_generation(p), epoch_id, hide_later=True)
     ]
     return params, spark.read.parquet(*prior) if prior else None
 
@@ -171,11 +169,9 @@ def _epoch_substr_dedup(
     and commit this epoch's distinct gram hashes as generation
     epoch-<E> of the persisted index.
 
-    Same replay discipline as _epoch_dedup: the probe reads every
-    generation but epoch-E and later ones, so a crash-replay of E
-    produces byte-identical cleaned text. The index's gram width k is
-    its committed param — probing with a different k finds nothing, so
-    a mismatch is refused loudly.
+    Replay-idempotent like _epoch_dedup. The index's gram width k is its
+    committed param — probing with a different k finds nothing, so a
+    mismatch is refused loudly.
 
     Non-destructive: returns (doc_id, txt_clean, words_removed) for the
     epoch output to LEFT-join — txt stays the exact extraction (the span
@@ -234,11 +230,11 @@ def monitor(
     - effectively exactly-once per doc: Spark's file-source seen-map (the
       W2 poller snapshot diff, pmocr.sh:1626) + the lineage anti-join
       (resume semantics identical to batch mode) + IDEMPOTENT epoch
-      writes: both the results and the lineage rows of epoch E land in an
-      `epoch-E` subdirectory with mode=overwrite, and the anti-join
-      excludes epoch E's own prior rows, so a crash-replay of E rewrites
-      byte-identical output instead of appending duplicates. Read the
-      output with spark.read.option("recursiveFileLookup", "true").
+      commits: the results of epoch E overwrite `epoch-E`, its lineage
+      rows commit generation `epoch-E`, and its resume read skips that
+      generation, so a crash-replay of E rewrites byte-identical output
+      instead of appending duplicates. Read the output with
+      spark.read.option("recursiveFileLookup", "true").
     - failure quarantine + retry: failed docs land in lineage with
       status='failed'; a RE-DROPPED doc (the file source never re-presents
       old files, so retry requires new input — pmOCR's rescan analog) is
@@ -258,11 +254,8 @@ def monitor(
       built from ALL PRIOR epochs; near-dup docs get a non-null `dup_of`
       column in the epoch output (annotate, not drop — downstream
       filters on dup_of IS NULL), and the batch's keeper bands are added
-      to the index. Replay-idempotent: bands are committed as
-      generation `epoch-E` (checkpoint.commit_artifact) and the probe
-      reads only generations before E — a crash-replay of E can never
-      see its own crashed attempt's bands, so dup verdicts are
-      byte-identical on replay. Within-epoch dups are deliberately NOT
+      to the index as generation `epoch-E`, replay-idempotent as the
+      lineage is (_epoch_dedup). Within-epoch dups are deliberately NOT
       flagged here (the one-shot q18 path and the stateful exact dedup
       cover intra-batch); this index catches the re-crawl across
       triggers/days. Maintain the index with the CLI's
@@ -273,17 +266,13 @@ def monitor(
       (_epoch_substr_dedup) — and the epoch output gains txt_clean /
       words_removed columns (txt itself stays the exact extraction).
     """
-    # Epoch-collision guard: run_id is the STREAM IDENTITY. A stream
-    # restarted on a FRESH offsets checkpoint restarts epoch ids at 0;
-    # if the lineage dir already holds another identity's epoch rows,
-    # the per-epoch replay filter would hide them from the resume
-    # anti-join and the epoch-N overwrite would destroy that run's
-    # results for every colliding epoch. Refuse that combination —
-    # only a true replay of the SAME stream (same run_id, e.g. wiped
-    # offsets over unchanged input) or a checkpoint-continuing restart
-    # (offsets present, epoch ids keep advancing — crash recovery may
-    # legitimately change run_id there) proceeds; pass
-    # allow_lineage_takeover=True to override deliberately.
+    # Epoch-collision guard: run_id is the STREAM IDENTITY. A stream on
+    # a FRESH offsets checkpoint restarts epoch ids at 0; if the lineage
+    # holds another identity's epoch rows, the epoch-N commits would
+    # replace that run's results for every colliding epoch. Only a true
+    # replay of the SAME stream (same run_id, wiped offsets) or a
+    # checkpoint-continuing restart proceeds, or an explicit
+    # allow_lineage_takeover=True.
     if not _has_committed_offsets(spark, checkpoint_dir):
         prior = ckpt.read_checkpoint(spark, lineage_dir)
         same_identity_replay = False
@@ -309,13 +298,10 @@ def monitor(
                     "prior --run-id for a true replay), point at fresh "
                     "lineage/output dirs, or pass allow_lineage_takeover=True."
                 )
-        # Same collision applies to the persisted cross-epoch INDEX dirs:
-        # a fresh-checkpoint restart restarts epoch ids at 0, so every
-        # probe would skip the prior run's epoch-N generations (N >= E)
-        # and the epoch-0 commit would overwrite its epoch-0 bands/grams.
-        # gen-N generations (CLI-built, merged, or a --compact-*-index
-        # collapse) are safe — every epoch sees them — so the recovery
-        # path is: stop, compact the index, restart.
+        # Same collision for the cross-epoch INDEX dirs: every probe
+        # would skip the prior run's epoch-N generations (N >= E) and
+        # epoch 0 would overwrite its epoch-0 bands/grams. gen-N
+        # generations are safe (every epoch sees them): compact, restart.
         for idx_dir, kind, flag, compact_flag in (
             (dedup_index_dir, "dedup_index", "--dedup-index", "--compact-dedup-index"),
             (substr_index_dir, "substr_index", "--dedup-substrings-index",
@@ -355,7 +341,7 @@ def monitor(
     base_ts = datetime.fromisoformat(job_ts.replace("T", " ").replace("Z", ""))
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # '#e<N>' epoch tag: unambiguous suffix for the replay filter (a
+        # '#e<N>' epoch tag: the stream-identity guard above reads it (a
         # plain '-<N>' could false-match a batch run_id like 'run-0'
         # sharing the lineage dir)
         epoch_run = f"{run_id}#e{epoch_id}"
@@ -365,15 +351,9 @@ def monitor(
         epoch_ts = (base_ts + timedelta(seconds=epoch_id * epoch_ts_step_s)).strftime(
             "%Y-%m-%d %H:%M:%S"
         )
-        lineage = ckpt.read_checkpoint(spark, lineage_dir)
-        if lineage is not None:
-            # replay safety: epoch E's own rows must not anti-join E's
-            # docs away (the replay would overwrite output with nothing).
-            # Match the EPOCH SUFFIX, not the exact run_id: a restart
-            # with a different --run-id while epoch E sat uncommitted
-            # would otherwise keep the crashed attempt's rows, exclude
-            # every doc, and overwrite epoch E with empty tables.
-            lineage = lineage.filter(~F.col("run_id").rlike(f"#e{epoch_id}$"))
+        # replay safety: epoch E's own rows must not anti-join E's docs
+        # away, whatever run_id wrote them
+        lineage = ckpt.read_checkpoint(spark, lineage_dir, epoch=epoch_id)
 
         def write_output(results: DataFrame, out: DataFrame) -> None:
             maps = []
@@ -413,8 +393,8 @@ def monitor(
             spark, batch_df, media_blobs, lineage, run_id=epoch_run,
             job_ts=epoch_ts, targets=list(targets) if targets else ["txt", "csv"],
             write_output=write_output,
-            write_lineage=lambda rows: rows.write.mode("overwrite").parquet(
-                f"{lineage_dir}/epoch-{epoch_id}"
+            write_lineage=lambda rows: ckpt.append_checkpoint(
+                rows, lineage_dir, f"epoch-{epoch_id}"
             ),
             suffix=suffix, addition=filename_addition, metrics_dir=metrics_dir,
             num_partitions=num_partitions, broadcast_spans=broadcast_spans, ocr_udf=ocr_udf,

@@ -1,8 +1,11 @@
-"""Crash safety of every persisted index and model (checkpoint.
-commit_artifact): a write that dies at any step — any parquet write or
-the sidecar rename that commits it — leaves the previous commit
-readable, and a retry lands exactly once. Also: artifacts written
-before format_version are rejected, never read with silent nulls."""
+"""Crash safety of every persisted table — the lineage, each index and
+model (checkpoint.commit_artifact): a write that dies at any step — any
+parquet write or the sidecar rename that commits it — leaves the
+previous commit readable, and a retry lands exactly once; a --batch job
+publishes its output with its lineage commit, so its retry lands every
+output row once too. Also: artifacts written before format_version are
+rejected, never read with silent nulls, and a lineage written before
+the lineage kind stays readable."""
 
 from __future__ import annotations
 
@@ -10,6 +13,7 @@ import json
 import os
 import shutil
 from dataclasses import dataclass
+from datetime import datetime
 from typing import Callable
 
 import pyarrow as pa
@@ -19,7 +23,7 @@ from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
 from pmocr_spark import checkpoint as ckpt
-from pmocr_spark import corpus, streaming
+from pmocr_spark import cli, codecs, corpus, streaming
 from pmocr_spark.operators import bloom, bm25, bpe, pq, quality_classifier, unigram_lm
 from pmocr_spark.operators import dedup_index as di
 from pmocr_spark.operators import substring_dedup as sd
@@ -87,6 +91,30 @@ def _bm25_state(spark, path):
     return meta, _rows(bm25.score_pairs(ix, queries))  # n_docs + every scored hit
 
 
+def _lin(spark, docs, run_id, hour=0):
+    """lineage rows: one 'done' row per doc id"""
+    ts = datetime(2024, 1, 1, hour)
+    return spark.createDataFrame(
+        [(0, d, "done", 1, 0, None, 0, run_id, ts) for d in docs], ckpt.CHECKPOINT_SCHEMA
+    ).coalesce(1)
+
+
+def _parent_lineage(spark, path, flat=True, epochs=True):
+    """A lineage as written before the lineage kind: batch appends as
+    top-level part files, stream epochs as part files in epoch-<E>/"""
+    if flat:
+        _lin(spark, ["p1", "p2"], "run-0").write.mode("append").parquet(path)
+    if epochs:
+        for e, docs in ((4, ["q1"]), (9, ["q2", "q3"])):
+            _lin(spark, docs, f"s#e{e}", e).write.mode("overwrite").parquet(f"{path}/epoch-{e}")
+
+
+def _lineage_state(spark, path):
+    """the whole lineage, and the view a replay of epoch 9 reads"""
+    views = [ckpt.read_checkpoint(spark, path), ckpt.read_checkpoint(spark, path, epoch=9)]
+    return tuple(None if v is None else _rows(v) for v in views)
+
+
 @dataclass
 class Op:
     setup: Callable | None  # builds the previous commit, if any
@@ -121,6 +149,24 @@ OPS = {
         lambda s, p: streaming._epoch_substr_dedup(s, _results(s, 0, 4), p, 0),
         lambda s, p: streaming._epoch_substr_dedup(s, _results(s, 4, 6), p, 1),
         lambda s, p: (lambda g, m: (m, _rows(g)))(*sd.read_gram_index(s, p)), 2,
+    ),
+    "lineage_epoch": Op(
+        lambda s, p: ckpt.append_checkpoint(_lin(s, ["a", "b"], "run-0"), p),
+        lambda s, p: ckpt.append_checkpoint(_lin(s, ["c"], "s#e9", 1), p, "epoch-9"),
+        _lineage_state, 2,
+    ),
+    "lineage_compact": Op(
+        lambda s, p: [ckpt.append_checkpoint(_lin(s, ["a", "b"], r, h), p, g)
+                      for r, h, g in (("run-0", 0, None), ("s#e3", 1, "epoch-3"))],
+        ckpt.compact_checkpoint,
+        _lineage_state, 2,
+    ),
+    # the first commit over a parent lineage rewrites its two
+    # generations (gen-0, epoch-4) beside its own, then publishes
+    "lineage_first_commit_over_parent": Op(
+        _parent_lineage,
+        lambda s, p: ckpt.append_checkpoint(_lin(s, ["q2", "q3"], "s#e9", 9), p, "epoch-9"),
+        _lineage_state, 4,
     ),
     "bpe_model": Op(
         lambda s, p: bpe.write_model(s, p, [("t", "h", 3)], min_count=2),
@@ -284,3 +330,130 @@ def test_pre_version_text_index_rejected(spark, tmp_path):
         bm25.read_text_index(spark, idx)
     with pytest.raises(ValueError, match="format_version"):
         bm25.write_text_index(_docs(spark, 4, 6), idx, mode="append")
+
+
+# ------------------------------------------- the batch job's one commit
+
+BATCH_STEPS = 5  # staged output, lineage rows, sidecar rename, 2 file moves
+
+
+@pytest.fixture(scope="module")
+def mini_corpus(tmp_path_factory):
+    """four text docs and one poison media doc: --partition-by status
+    stages two files, so a crash can split the publish between them"""
+    d = tmp_path_factory.mktemp("mini")
+    docs = [{"doc_id": doc_id, "spans": [{"kind": "text", "text": text, "media_ref": None,
+                                          "offset": 0}]} for doc_id, text in TEXTS[:4]]
+    docs.append({"doc_id": "poison", "spans": [{"kind": "tif", "text": None,
+                                                "media_ref": "m:1", "offset": 0}]})
+    blobs = [{"media_ref": "m:1", "kind": "tif", "content": codecs.encode_corrupt("m:1")}]
+    pq_io.write_table(pa.Table.from_pylist(docs, schema=corpus.DOCUMENTS_SCHEMA),
+                      f"{d}/documents.parquet")
+    pq_io.write_table(pa.Table.from_pylist(blobs, schema=corpus.BLOBS_SCHEMA),
+                      f"{d}/media_blobs.parquet")
+    return str(d)
+
+
+def _batch(corpus_dir, base):
+    cli.main(["--batch", "--input", f"{corpus_dir}/documents.parquet",
+              "--blobs", f"{corpus_dir}/media_blobs.parquet", "--output", f"{base}/out",
+              "--lineage", f"{base}/lin", "--targets", "txt", "--partition-by", "status",
+              "--master", "local[2]"])
+
+
+def _batch_state(spark, base):
+    """(doc_id, status) of every published output row and lineage row"""
+    out = [os.path.join(d, f) for d, _, fs in os.walk(f"{base}/out")
+           if "/_" not in d[len(str(base)):] for f in fs if f.endswith(".parquet")]
+    rows = sorted(
+        (r["doc_id"], os.path.basename(os.path.dirname(f)))
+        for f in out for r in pq_io.read_table(f, columns=["doc_id"]).to_pylist()
+    )
+    lin = ckpt.read_checkpoint(spark, f"{base}/lin")
+    return rows, sorted((r["doc_id"], r["status"]) for r in lin.collect())
+
+
+@pytest.mark.parametrize("k", range(1, BATCH_STEPS + 1))
+def test_batch_job_crash_at_any_step(spark, tmp_path, mini_corpus, monkeypatch, k):
+    """A --batch job that dies at any write step — its staged output,
+    its lineage rows, the sidecar rename that commits both, or either
+    staged-file move — lands every output row and lineage row exactly
+    once on its retry."""
+    if "batch" not in _CLEAN:
+        _batch(mini_corpus, tmp_path / "clean")
+        _CLEAN["batch"] = _batch_state(spark, tmp_path / "clean")
+    out, lin = _CLEAN["batch"]
+    assert [d for d, _ in out] == sorted(d for d, _ in TEXTS[:4]) + ["poison"]
+    assert {s for _, s in out} == {"status=done", "status=failed"}
+    with monkeypatch.context() as m:
+        _crash_at(m, k)
+        with pytest.raises(Crash):
+            _batch(mini_corpus, tmp_path)
+    _batch(mini_corpus, tmp_path)  # the retry
+    assert _batch_state(spark, tmp_path) == (out, lin)
+    assert not [n for n in os.listdir(tmp_path / "out") if n.startswith("_pending-")]
+
+
+def test_batch_retry_after_crash_before_lineage_commit(spark, tmp_path, mini_corpus, monkeypatch):
+    """A job that dies after writing its output and before its lineage
+    commit publishes no output, so the retry writes each doc once
+    (appended output and lineage used to give 2 output rows per doc)."""
+    def crash(*_a, **_kw):
+        raise Crash("crash before the lineage commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(ckpt, "append_checkpoint", crash)
+        with pytest.raises(Crash):
+            _batch(mini_corpus, tmp_path)
+    _batch(mini_corpus, tmp_path)
+    out, lin = _batch_state(spark, tmp_path)
+    assert len(out) == len(lin) == 5 and len({d for d, _ in out}) == 5
+
+
+@pytest.mark.parametrize("first", ["epoch", "batch"])
+def test_batch_and_epoch_commits_interleave(spark, tmp_path, monkeypatch, first):
+    """The second-writer rule: a batch commit (gen-<n>) and a stream
+    epoch commit (epoch-<E>) may race on one lineage. Whichever renames
+    its sidecar second finds the number taken, extends the other's
+    commit, and neither sweep deletes the other's generation in flight:
+    every row lands once, under its own generation."""
+    path = str(tmp_path / "lin")
+    ckpt.append_checkpoint(_lin(spark, ["a"], "run-0"), path)
+    epoch = lambda: ckpt.append_checkpoint(_lin(spark, ["e"], "s#e3", 3), path, "epoch-3")
+    batch = lambda: ckpt.append_checkpoint(_lin(spark, ["b"], "run-1", 4), path)
+    outer, inner = (batch, epoch) if first == "epoch" else (epoch, batch)
+    publish = ckpt._publish
+
+    def racing(fs, src, dst):  # the other writer commits first, whole
+        m.setattr(ckpt, "_publish", publish)
+        inner()
+        publish(fs, src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(ckpt, "_publish", racing)
+        outer()
+    got = {r["doc_id"]: r["run_id"] for r in ckpt.read_checkpoint(spark, path).collect()}
+    assert got == {"a": "run-0", "e": "s#e3", "b": "run-1"}
+    assert ckpt.read_checkpoint(spark, path).count() == 3
+    assert sorted(r["doc_id"] for r in ckpt.read_checkpoint(spark, path, epoch=3).collect()) == ["a", "b"]
+    assert sorted(n for n in os.listdir(path) if not n.startswith(".")) == [
+        "_lineage.3.json", "epoch-3", "gen-1", "gen-2"]
+
+
+@pytest.mark.parametrize("flat,epochs", [(True, False), (False, True)])
+def test_parent_lineage_reads_and_survives_first_commit(spark, tmp_path, flat, epochs):
+    """A lineage written before the lineage kind — flat batch appends or
+    epoch-<E> dirs (lineage_first_commit_over_parent has both) — reads
+    as it did: every row, and an epoch's replay view without its own
+    rows. Its first commit keeps every row visible and leaves only the
+    new layout."""
+    path = str(tmp_path / "lin")
+    _parent_lineage(spark, path, flat, epochs)
+    everything = _rows(spark.read.option("recursiveFileLookup", "true").parquet(path))
+    old = [r for r in everything if "s#e9" not in r]
+    assert _lineage_state(spark, path) == (everything, old)
+    ckpt.append_checkpoint(_lin(spark, ["n1"], "run-1", 12), path)
+    full, view = _lineage_state(spark, path)
+    assert full == sorted(everything + _rows(_lin(spark, ["n1"], "run-1", 12)))
+    assert view == [r for r in full if "s#e9" not in r]
+    assert not [n for n in os.listdir(path) if n.endswith(".parquet")]

@@ -274,18 +274,6 @@ def test_compact_checkpoint_on_disk(spark, tmp_path):
     assert ckpt.compact_checkpoint(spark, str(tmp_path / "absent")) == 0
 
 
-def test_read_checkpoint_detects_interrupted_compaction(spark, tmp_path):
-    """A missing lineage dir with a leftover .compact.bak is an
-    INTERRUPTED compaction, not a first run — read_checkpoint must
-    refuse loudly instead of silently reprocessing the whole corpus."""
-    import os
-
-    path = str(tmp_path / "lin")
-    os.makedirs(path + ".compact.bak")
-    with pytest.raises(RuntimeError, match="compaction was interrupted"):
-        ckpt.read_checkpoint(spark, path)
-
-
 @pytest.mark.parametrize("seed", [11, 22, 33])
 def test_compact_resume_equivalence_random(spark, seed):
     """Property (seeded-random): for ANY lineage history, resume over

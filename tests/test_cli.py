@@ -347,7 +347,7 @@ def test_compact_lineage_modes(spark, tmp_path):
     cli.main(["--compact-lineage", "--lineage", lineage, "--master", "local[2]"])
     import duckdb
 
-    got = duckdb.sql(f"select status, retry_count from read_parquet('{lineage}/*.parquet')").fetchall()
+    got = duckdb.sql(f"select status, retry_count from read_parquet('{lineage}/*/rows/*.parquet')").fetchall()
     assert got == [("done", 1)]
     with pytest.raises(SystemExit):
         cli.parse_args(["--service", "--compact-lineage", "--input", "/i",

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from pmocr_spark import checkpoint as ckpt
 from pmocr_spark.operators import dedup_index as di
 
 
@@ -76,8 +77,11 @@ def test_cli_merge_twice_adds_no_rows(spark, tmp_path):
     cli.main(argv)
     n = di.read_index(spark, idx)[0].count()
     assert n == di.build_index(_docs(spark, BASE)).count()
+    generations = ckpt.open_artifact(spark, idx, "dedup_index")[1]
     cli.main(argv)
     assert di.read_index(spark, idx)[0].count() == n
+    # and commits no empty generation
+    assert ckpt.open_artifact(spark, idx, "dedup_index")[1] == generations
 
 
 def test_hot_bucket_cap(spark):

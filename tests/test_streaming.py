@@ -1091,7 +1091,7 @@ def test_audio_span_in_service_mode(spark, dirs, tmp_path):
     # the error detail rides the lineage rows (the output projection
     # carries status + targets; errors are checkpoint state)
     lin = {r["doc_id"]: r for r in
-           spark.read.parquet(f"{dirs['lineage']}/epoch-0").collect()}
+           spark.read.parquet(f"{dirs['lineage']}/epoch-0/rows").collect()}
     assert "magic" in lin["poison"]["error"]
 
 
@@ -1139,7 +1139,7 @@ def test_video_span_in_service_mode(spark, dirs, tmp_path):
     assert got["ok"]["txt"] == "written part\nnarrated part\nfilmed part"
     assert got["poison"]["status"] == "failed"
     lin = {r["doc_id"]: r for r in
-           spark.read.parquet(f"{dirs['lineage']}/epoch-0").collect()}
+           spark.read.parquet(f"{dirs['lineage']}/epoch-0/rows").collect()}
     assert "magic" in lin["poison"]["error"]
 
 

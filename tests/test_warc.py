@@ -344,3 +344,32 @@ def test_cli_warc_cdx(spark, tmp_path):
     rows = spark.read.parquet(out).collect()
     assert len(rows) == 3
     assert all(r["length"] > 0 and r["digest"] for r in rows)
+
+
+def test_cli_two_wet_jobs_share_one_output(tmp_path, spark):
+    """Two --batch --output-format wet jobs into one --output (the
+    second resumes over the first's lineage and converts only its new
+    docs): every record lands once — neither job's shards take the
+    other's names."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pmocr_spark import cli, corpus
+
+    def docs(n):
+        rows = [{"doc_id": f"d{i:02d}", "spans": [
+            {"kind": "text", "text": f"text of doc {i}", "media_ref": None, "offset": 0}]}
+            for i in range(n)]
+        pq.write_table(pa.Table.from_pylist(rows, schema=corpus.DOCUMENTS_SCHEMA),
+                       f"{tmp_path}/docs{n}.parquet")
+        return f"{tmp_path}/docs{n}.parquet"
+
+    pq.write_table(pa.Table.from_pylist([], schema=corpus.BLOBS_SCHEMA), f"{tmp_path}/b.parquet")
+    outp = str(tmp_path / "wet_out")
+    for n in (20, 25):
+        cli.main(["--batch", "--input", docs(n), "--blobs", f"{tmp_path}/b.parquet",
+                  "--output-format", "wet", "--output", outp,
+                  "--lineage", str(tmp_path / "lin"), "--targets", "txt", "--master", "local[2]"])
+    ids = [r["record_id"] for r in warc.read_warc_records(spark, outp).collect()
+           if r["warc_type"] == "conversion"]
+    assert sorted(ids) == [f"d{i:02d}" for i in range(25)]
