@@ -311,9 +311,9 @@ def open_artifact(
     operation, e.g. 'read' or 'append to') an absent artifact raises.
 
     Always raises on a layout this build cannot read: top-level data
-    with no sidecar, another kind's sidecar, any format_version but
-    FORMAT_VERSION (so every unversioned sidecar); the message names the
-    mode that rebuilds the artifact."""
+    with no sidecar, another kind's sidecar, and any format_version but
+    FORMAT_VERSION — which includes every unversioned sidecar written
+    before it; the message names the mode that rebuilds the artifact."""
     fs, hp = _fs(spark, path)
     doc = _committed(spark, fs, path, kind, _scan(fs, hp), required or "open")
     if doc is None and required:
