@@ -6,11 +6,15 @@ declarative DataFrame plan:
 
   read documents
     -> anti-join checkpoint (F2 already-processed exclusion, pmocr.sh:2126-2144)
-    -> explode(spans) (span granularity dissolves media-heavy-doc skew)
-    -> kind allow-list filter (F1, default.conf:14) — cheap, BEFORE any UDF
-    -> route: text spans (F5 searchable-text bypass, pmocr.sh:2162-2165)
-              | media spans -> join media_blobs -> salted repartition
-                            -> fused pandas-UDF OCR (M1-M3)
+    -> explode(spans) once (span granularity dissolves media-heavy-doc skew)
+    -> two routes from that one span frame:
+       decoded: media/html/audio/video spans -> inner join media_blobs
+                (broadcast spans, or salted repartition + shuffle join)
+                -> fused pandas-UDF OCR (M1-M3)
+       plain:   one JVM projection — text spans normalized (F5
+                searchable-text bypass, pmocr.sh:2162-2165), disallowed
+                kinds skipped (F1, default.conf:14), decodable spans with
+                no blob row stamped as missing-blob errors
     -> union -> groupBy(doc_id) ordered reassembly by offset
     -> per-target projections txt / csv (X1) / pdf  (Q1 fan-out, one OCR pass)
     -> results + checkpoint/lineage rows (S4-S6)
@@ -32,9 +36,14 @@ from pyspark.sql import functions as F
 from . import functions as fx
 from .codecs import AUDIO_KINDS, MEDIA_KINDS, VIDEO_KINDS
 from .operators.html_extract import HTML_KINDS
-from .udfs import ocr_extract
+from .partitioning import spread
+from .udfs import MISSING_BLOB_ERROR, ocr_extract
 
-#: Spark-side mirror of codecs.normalize_text (JVM regex, no UDF).
+#: span kinds the decode UDF handles; html, audio and video blobs are
+#: magic-dispatched to their extractors inside the same fused UDF
+DECODABLE_KINDS = MEDIA_KINDS + HTML_KINDS + AUDIO_KINDS + VIDEO_KINDS
+
+
 def normalize_text_col(col):
     """Text-span passthrough normalization, JVM-side (pmocr.sh:2162-2165).
 
@@ -134,27 +143,24 @@ def extract_spans(
 ) -> DataFrame:
     """Core extraction: per-span OCR/passthrough, NOT yet reassembled.
 
-    ocr_udf overrides the decode UDF (udfs.make_ocr_extract — explicit
-    P3 time-budget policy); default is the env-driven instance.
-
-    Returns span-level frame (doc_id, offset, kind, text, media_ref, error):
-    kind='text' rows with error IS NULL are successful extractions;
-    kind='skipped' rows are disallowed-kind spans (F1) retained so the
-    document still checkpoints (pmOCR never picks up a disallowed
-    extension — the table analog keeps the span, minus its content).
+    Returns (doc_id, offset, kind, text, media_ref, error) from one
+    pending span frame by two routes:
+      - decoded: decodable spans joined to their blob row, then the decode
+        UDF (ocr_udf overrides it: udfs.make_ocr_extract, an explicit P3
+        time-budget policy); kind 'text', or 'error' with the error;
+      - plain: one JVM projection, no Python — text spans normalized,
+        disallowed kinds as kind='skipped' (F1; kept, minus content, so
+        the doc still checkpoints), decodable spans with no blob row as
+        kind='error' with MISSING_BLOB_ERROR.
     """
-    spark = documents.sparkSession
-    num_partitions = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-
     pending = resume_filter(documents, checkpoint, job_ts=job_ts)
 
     # explode_outer, not explode: a doc with spans=[] must still flow
     # through (as one 'skipped' pseudo-span at offset 0) — plain explode
     # drops it from BOTH output and lineage, so resume would reprocess it
     # forever. normalize kind ONCE (lower-case, NULL -> '') so the F1
-    # allow-list and the text/media routing can never disagree on case,
-    # and a null kind lands in the skipped route instead of vanishing
-    # from both isin() branches (filter(NULL) is false on each side).
+    # allow-list and the routing can never disagree on case, and a null
+    # kind lands in the skipped route instead of vanishing.
     spans = pending.select("doc_id", F.explode_outer("spans").alias("s")).select(
         "doc_id",
         F.lower(F.coalesce(F.col("s.kind"), F.lit(""))).alias("kind"),
@@ -162,87 +168,39 @@ def extract_spans(
         F.col("s.media_ref").alias("media_ref"),
         F.coalesce(F.col("s.offset"), F.lit(0)).alias("offset"),
     )
-    # F1 allow-list (case-insensitive, default.conf:14) — pushed upstream of
-    # the blob join and the UDF so disallowed kinds never cost a decode.
-    # Disallowed spans become kind='skipped' rows (no text, no error): the
-    # doc still reassembles and checkpoints instead of vanishing from both
-    # output and lineage (which would make resume reprocess it forever).
-    # html spans ride the media route (blob join -> fused UDF, which
-    # magic-dispatches them to the boilerplate-strip extractor) — same
-    # plan, zero extra scans (operators/html_extract.py). audio spans
-    # (round 5) ride it too: decode_blob magic-dispatches PMAU blobs to
-    # the audio codec, so interleaved text+image+html+audio documents
-    # reassemble through ONE decode path. video spans (round 5, third
-    # pass) complete the set: PMVI blobs magic-dispatch to
-    # transcribe_video inside the same fused UDF.
-    allowed = (
-        list(MEDIA_KINDS) + list(HTML_KINDS) + list(AUDIO_KINDS)
-        + list(VIDEO_KINDS) + ["text"]
-    )
-    skipped = spans.filter(~F.col("kind").isin(allowed)).select(
-        "doc_id",
-        "offset",
-        F.lit("skipped").alias("kind"),
-        F.lit(None).cast("string").alias("text"),
-        "media_ref",
-        F.lit(None).cast("string").alias("error"),
-    )
-    spans = spans.filter(F.col("kind").isin(allowed))
+    is_text = F.col("kind") == "text"
+    decodable = F.col("kind").isin(*DECODABLE_KINDS)
+    blob_cols = media_blobs.select("media_ref", "content")
 
-    # F5 route: text spans bypass OCR entirely (cheap JVM normalization)
-    text_spans = spans.filter(F.col("kind") == "text").select(
-        "doc_id",
-        "offset",
-        F.lit("text").alias("kind"),
-        normalize_text_col(F.col("text")).alias("text"),
-        F.lit(None).cast("string").alias("media_ref"),
-        F.lit(None).cast("string").alias("error"),
-    )
-
-    # media route. Rule #1 at scale: NEVER move the blob bytes. A naive
+    # Rule #1 at scale: NEVER move the blob bytes. A naive
     # `spans LEFT JOIN blobs` lets the planner shuffle the multi-GB blob
     # side once the span side outgrows the broadcast threshold (measured:
     # 2.1GB shuffle write + 9x run time + GC storms at 300k docs). So:
     #   - broadcast_spans=True (default; right for any per-batch span set
     #     that fits a broadcast, i.e. micro-batches and bench scale):
     #     blobs INNER JOIN broadcast(spans) — the join runs in-place over
-    #     the blob scan partitions (maxPartitionBytes-sized, so every
-    #     core stays busy) and blob bytes never shuffle. Spans without a
-    #     blob are recovered by a cheap anti-join on the pruned ref
-    #     column (error-struct rows, quarantine path preserved).
+    #     the blob scan partitions and blob bytes never shuffle.
     #   - broadcast_spans=False (the 10^12-doc full-batch path, where
     #     even the span side is too big to broadcast): salted span
     #     repartition + shuffle join on media_ref — span-unique keys
     #     make the blob shuffle uniform; pair with media_ref-bucketed
     #     tables to eliminate that shuffle entirely (bucketing DDL in
     #     sources/binary.py docstring).
-    media_spans = spans.filter(F.col("kind") != "text").select("doc_id", "offset", "kind", "media_ref")
-    blob_cols = media_blobs.select("media_ref", "content")
+    media = spans.filter(decodable).select("doc_id", "offset", "media_ref")
     if broadcast_spans:
-        matched = blob_cols.join(F.broadcast(media_spans), "media_ref", "inner")
         # guide §2.5 input-skew repair: a single-row-group blob file
-        # scans as ONE task and the fused decode UDF (which inherits the
-        # scan partitioning through the broadcast join) then runs on one
-        # core. spread() repartitions ONLY when the frame is narrower
-        # than the core count — at real scale (many row groups) it is a
-        # no-op, so "blob bytes never shuffle" still holds exactly where
-        # it matters; on a narrow input moving the (small) blob set once
-        # buys the whole cluster for the decode stage.
-        from .partitioning import spread
-
-        matched = spread(matched, heavy=True)
-        # anti-join against the PRUNED ref column (scan never reads
-        # content here); no broadcast hint — AQE picks broadcast while
-        # the ref set fits, shuffle of just the refs when it doesn't
-        missing = media_spans.join(
-            blob_cols.select("media_ref"), "media_ref", "left_anti"
-        ).withColumn("content", F.lit(None).cast("binary"))
-        with_blobs = matched.unionByName(missing)
+        # scans as ONE task and the decode UDF inherits that
+        # partitioning; spread() repartitions only a frame narrower than
+        # the core count, so at real scale blob bytes still never shuffle
+        matched = spread(blob_cols.join(F.broadcast(media), "media_ref"), heavy=True)
     else:
-        media_spans = salted_repartition(media_spans, num_partitions, "doc_id", "offset")
-        with_blobs = media_spans.join(blob_cols, "media_ref", "left")
-
-    ocr = with_blobs.withColumn("ocr", (ocr_udf or ocr_extract)(F.col("content"))).select(
+        num_partitions = num_partitions or int(
+            documents.sparkSession.conf.get("spark.sql.shuffle.partitions")
+        )
+        matched = salted_repartition(media, num_partitions, "doc_id", "offset").join(
+            blob_cols, "media_ref"
+        )
+    decoded = matched.withColumn("ocr", (ocr_udf or ocr_extract)(F.col("content"))).select(
         "doc_id",
         "offset",
         F.when(F.col("ocr.error").isNotNull(), F.lit("error")).otherwise(F.lit("text")).alias("kind"),
@@ -250,7 +208,24 @@ def extract_spans(
         "media_ref",
         F.col("ocr.error").alias("error"),
     )
-    return text_spans.unionByName(ocr).unionByName(skipped)
+
+    # a null key never matches, so text and skipped spans always pass the
+    # anti-join; it reads only the pruned ref column, never content
+    refs = blob_cols.select(F.col("media_ref").alias("_blob_ref"))
+    plain = spans.join(
+        refs, F.when(decodable, F.col("media_ref")) == F.col("_blob_ref"), "left_anti"
+    ).select(
+        "doc_id",
+        "offset",
+        F.when(is_text, F.lit("text"))
+        .when(decodable, F.lit("error"))
+        .otherwise(F.lit("skipped"))
+        .alias("kind"),
+        F.when(is_text, normalize_text_col(F.col("text"))).alias("text"),
+        F.when(~is_text, F.col("media_ref")).alias("media_ref"),
+        F.when(decodable, F.lit(MISSING_BLOB_ERROR)).alias("error"),
+    )
+    return decoded.unionByName(plain)
 
 
 def reassemble(span_results: DataFrame) -> DataFrame:

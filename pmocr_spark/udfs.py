@@ -36,6 +36,10 @@ OCR_RESULT_TYPE = T.StructType(
     ]
 )
 
+#: error of a decodable span with no blob content; it lands in the
+#: lineage `error` column, so it must stay byte-identical
+MISSING_BLOB_ERROR = "CodecError: null media content (missing blob)"
+
 
 def _decode_budget_s() -> float:
     """P3 per-blob time budget (pmOCR kills a runaway conversion after
@@ -127,7 +131,7 @@ def make_ocr_extract(
         for blob in content:
             if blob is None:
                 texts.append(None)
-                errors.append("CodecError: null media content (missing blob)")
+                errors.append(MISSING_BLOB_ERROR)
                 continue
 
             def work(blob=blob):

@@ -211,6 +211,67 @@ def test_two_corrupt_spans_first_error(spark):
     assert "truncated" in got["m1"]["error"]
 
 
+@pytest.mark.parametrize("broadcast_spans", [True, False])
+def test_span_routes_match_oracle(spark, broadcast_spans):
+    """Every route of extract_spans, in both span-join regimes: a blob
+    row that is absent, a null media_ref and a null-content blob row all
+    give the missing-blob error; a text span keeps no media_ref even when
+    it names an existing blob; a disallowed kind is skipped. Per span
+    (kind, text, media_ref, error) and per doc status/error == oracle."""
+    import pyarrow as pa
+
+    from pmocr_spark import codecs, corpus
+
+    missing = "CodecError: null media content (missing blob)"
+    docs_t = pa.Table.from_pylist(
+        [
+            {"doc_id": "r1", "spans": [
+                {"kind": "png", "text": None, "media_ref": "absent", "offset": 0},
+                {"kind": "TIF", "text": None, "media_ref": None, "offset": 1},
+                {"kind": "tif", "text": None, "media_ref": "nullc", "offset": 2},
+                {"kind": "text", "text": "kept  \r\n", "media_ref": "img", "offset": 3},
+                {"kind": "exe", "text": "x", "media_ref": "img", "offset": 4},
+                {"kind": "png", "text": None, "media_ref": "img", "offset": 5},
+            ]},
+            {"doc_id": "r2", "spans": [
+                {"kind": "text", "text": "t", "media_ref": "img", "offset": 0},
+                {"kind": "zip", "text": None, "media_ref": "img", "offset": 1},
+            ]},
+            {"doc_id": "r3", "spans": [{"kind": "zip", "text": None, "media_ref": "absent", "offset": 0}]},
+        ],
+        schema=corpus.DOCUMENTS_SCHEMA,
+    )
+    blobs_t = pa.Table.from_pylist(
+        [
+            {"media_ref": "img", "kind": "png", "content": codecs.encode_image("seen", "png", salt="img")},
+            {"media_ref": "nullc", "kind": "tif", "content": None},
+        ],
+        schema=corpus.BLOBS_SCHEMA,
+    )
+    docs = spark.createDataFrame(docs_t.to_pylist(), schema="doc_id string, "
+        "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>")
+    blobs = spark.createDataFrame(blobs_t.to_pylist(),
+        schema="media_ref string, kind string, content binary")
+    plan = dict(broadcast_spans=broadcast_spans, num_partitions=3)
+    exp = corpus.reference_convert(docs_t, blobs_t)
+
+    spans = {}
+    for r in pipeline.extract_spans(docs, blobs, **plan).collect():
+        spans.setdefault(r["doc_id"], []).append(
+            (r["offset"], r["kind"], r["text"], r["media_ref"], r["error"])
+        )
+    for doc_id, e in exp.items():
+        want = [(o, k, t, m, missing if k == "error" else None) for (o, k, t, m) in e["spans"]]
+        assert sorted(spans[doc_id]) == want, doc_id
+    assert [s[1] for s in exp["r1"]["spans"]] == ["error"] * 3 + ["text", "skipped", "text"]
+
+    docs_out = {r["doc_id"]: r for r in pipeline.run_batch(spark, docs, blobs, **plan).collect()}
+    assert {d: (r["status"], r["error"]) for d, r in docs_out.items()} == {
+        d: (e["status"], e["error"]) for d, e in exp.items()
+    }
+    assert [docs_out[d]["status"] for d in ("r1", "r2", "r3")] == ["failed", "done", "skipped"]
+
+
 def test_doc_with_only_text_spans(spark, corpus_dir):
     """Docs with zero media spans skip the blob join entirely and still
     reassemble correctly (searchable-PDF-only corpus)."""

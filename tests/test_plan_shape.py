@@ -52,6 +52,35 @@ def test_pipeline_udf_plan(spark, corpus_dir):
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan, "no row-at-a-time Python UDFs in the plan"
 
+    # with a lineage (persisted, as run_job holds it), every span leaves
+    # one resume-filtered span frame by one of two routes: ONE decode
+    # node (no UDF call for missing blobs), one pdf-encode node on top,
+    # and the documents table scanned once per route
+    import datetime
+    import re
+
+    from pmocr_spark.checkpoint import CHECKPOINT_SCHEMA
+
+    def node_ids(df, op):
+        return set(re.findall(rf"\((\d+)\) {op}", shape.formatted_plan(df)))
+
+    def documents_scans(df):
+        headers = re.finditer(r"\((\d+)\) Scan parquet[^\n]*\n(?:[^\n]+\n)*", shape.formatted_plan(df))
+        return {m.group(1) for m in headers if "documents.parquet" in m.group(0)}
+
+    prior = spark.createDataFrame(
+        [{"doc_id": "gone", "status": "done", "retry_count": 0, "ts": datetime.datetime(2026, 1, 1)}],
+        CHECKPOINT_SCHEMA,
+    ).persist()
+    try:
+        out = pipeline.run_batch(spark, docs, blobs, checkpoint=prior)
+        targets = pipeline.project_targets(out, ["txt", "csv", "pdf"], "2026-01-02 00:00:00")
+        assert len(node_ids(out, "ArrowEvalPython")) == 1, shape.formatted_plan(out)
+        assert len(node_ids(targets, "ArrowEvalPython")) == 2, shape.formatted_plan(targets)
+        assert 1 <= len(documents_scans(targets)) <= 2, shape.formatted_plan(targets)
+    finally:
+        prior.unpersist()
+
 
 def test_anti_join_resume_not_cartesian(spark):
     df = QUERY_FNS["q03_anti_join_resume"](spark, SF)
