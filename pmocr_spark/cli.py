@@ -48,7 +48,7 @@ def load_config(path: str) -> dict:
     stripped = raw.lstrip()
     if stripped.startswith("{"):
         # JSON keys get the SAME normalization as key=value files
-        # ('span-join' -> 'span_join'); a JSON list value (natural for
+        # ('job-ts' -> 'job_ts'); a JSON list value (natural for
         # e.g. targets) is joined to the comma form the CLI parses —
         # EXCEPT 'monitor', whose specs may themselves contain commas
         # (DIR=txt,csv): its list structure is preserved end-to-end so
@@ -722,24 +722,12 @@ def build_parser() -> argparse.ArgumentParser:
         "process may run on, as nproc prints)",
     )
     p.add_argument(
-        "--num-partitions", type=int,
-        help="salted span repartition width under --span-join shuffle (default: "
-        "spark.sql.shuffle.partitions); the broadcast span join does not read it",
-    )
-    p.add_argument(
         "--partition-by",
         help="comma-separated result columns to Hive-partition the batch results sink by (e.g. "
         "--partition-by status): failed docs land in their own status=failed/ subdirectory "
         "(the S6 quarantine layout as a physical sink layout) and downstream scans prune "
         "whole partitions instead of filtering rows — the layout knob a 10^12-doc results "
         "table needs",
-    )
-    p.add_argument(
-        "--span-join", choices=('broadcast', 'shuffle'),
-        help="media-span/blob join strategy: 'broadcast' (default) keeps blob bytes in place and "
-        "broadcasts the span side — right while the per-batch span set fits a broadcast; "
-        "'shuffle' is the full-corpus path (salted span repartition + shuffle join, pair with "
-        "media_ref-bucketed tables to remove even that exchange)",
     )
     return p
 
@@ -751,7 +739,6 @@ _DEFAULTS = {
     "targets": "txt",
     "run_id": "run-0",
     "job_ts": "2024-01-01T00:00:00Z",
-    "span_join": "broadcast",
     "suffix": "_OCR",
     "engine": "codec",
 }
@@ -760,8 +747,8 @@ _DEFAULTS = {
 def _coerce_config_types(parser: argparse.ArgumentParser, cfg: dict) -> dict:
     """Config files carry strings; coerce each value to its flag's type —
     store_true flags get bool parsing ('no_suffix=false' must NOT become
-    the truthy string 'false'), typed options (e.g. --num-partitions
-    int) get their argparse `type` applied."""
+    the truthy string 'false'), typed options (e.g. --kwic-window int)
+    get their argparse `type` applied."""
     by_dest = {a.dest: a for a in parser._actions}
     out = {}
     for k, v in cfg.items():
@@ -842,8 +829,8 @@ def _within(dest: str, lo, hi, msg: str) -> tuple:
 
 
 #: options only the pipelines read (owned by --batch and --service)
-_PIPELINE_ONLY = ("engine", "span_join", "num_partitions", "targets", "job_ts", "run_id", "suffix",
-             "no_suffix", "filename_addition", "metrics")
+_PIPELINE_ONLY = ("engine", "targets", "job_ts", "run_id", "suffix", "no_suffix",
+                  "filename_addition", "metrics")
 _BATCH_ONLY = ("partition_by", "output_format")
 _SERVICE_ONLY = ("alerts", "stream_checkpoint")
 
@@ -935,8 +922,8 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
         layered.update(_coerce_config_types(parser, cfg))
     # an option is "unset on the CLI" when it is None — except store_true
     # flags, whose unset state is False. Testing `in (None, False)` for
-    # everything would treat an EXPLICIT falsy value (--num-partitions 0)
-    # as unset because 0 == False.
+    # everything would treat an EXPLICIT falsy value (--kwic-window 0) as
+    # unset because 0 == False.
     flag_dests = {
         a.dest for a in parser._actions if isinstance(a.const, bool) or isinstance(a.default, bool)
     }
@@ -1068,8 +1055,6 @@ def launch_monitors(spark, args, blobs, job_ts: str, suffix: str, trigger: dict,
             targets=tgts,
             suffix=suffix,
             filename_addition=args.filename_addition,
-            broadcast_spans=(args.span_join != "shuffle"),
-            num_partitions=args.num_partitions,
             ocr_udf=ocr_udf,
             input_format=args.input_format,
             dedup_index_dir=sub(args.dedup_index) if args.dedup_index else None,
@@ -1214,8 +1199,7 @@ def _run_batch(spark, args) -> None:
         targets=args.target_list, write_output=write_output,
         write_lineage=lambda rows: ckpt.append_checkpoint(rows, args.lineage, gen),
         suffix="" if args.no_suffix else args.suffix, addition=args.filename_addition,
-        metrics_dir=args.metrics, num_partitions=args.num_partitions,
-        broadcast_spans=(args.span_join != "shuffle"), ocr_udf=args.ocr_udf,
+        metrics_dir=args.metrics, ocr_udf=args.ocr_udf,
     )
     ckpt.settle_output(spark, args.output, args.lineage)
     if args.compact_lineage:

@@ -9,8 +9,8 @@ declarative DataFrame plan:
     -> explode(spans) once (span granularity dissolves media-heavy-doc skew)
     -> two routes from that one span frame:
        decoded: media/html/audio/video spans -> inner join media_blobs
-                (broadcast spans, or salted repartition + shuffle join)
-                -> fused pandas-UDF OCR (M1-M3)
+                (one join; Catalyst broadcasts the span side or plans a
+                sort-merge join) -> fused pandas-UDF OCR (M1-M3)
        plain:   one JVM projection — text spans normalized (F5
                 searchable-text bypass, pmocr.sh:2162-2165), disallowed
                 kinds skipped (F1, default.conf:14), decodable spans with
@@ -24,7 +24,7 @@ the service once per epoch.
 
 Catalyst gives predicate pushdown / column pruning / AQE for free; the
 only hand-enforced plan shapes are (a) cheap filters upstream of the
-pandas UDF, (b) the salted span-level repartition, (c) error-as-data
+pandas UDF, (b) spread() before the decode UDF, (c) error-as-data
 structs (SURVEY.md §4).
 """
 
@@ -136,8 +136,6 @@ def extract_spans(
     documents: DataFrame,
     media_blobs: DataFrame,
     checkpoint: DataFrame | None = None,
-    num_partitions: int | None = None,
-    broadcast_spans: bool = True,
     job_ts: str | None = None,
     ocr_udf=None,
 ) -> DataFrame:
@@ -172,34 +170,17 @@ def extract_spans(
     decodable = F.col("kind").isin(*DECODABLE_KINDS)
     blob_cols = media_blobs.select("media_ref", "content")
 
-    # Rule #1 at scale: NEVER move the blob bytes. A naive
-    # `spans LEFT JOIN blobs` lets the planner shuffle the multi-GB blob
-    # side once the span side outgrows the broadcast threshold (measured:
-    # 2.1GB shuffle write + 9x run time + GC storms at 300k docs). So:
-    #   - broadcast_spans=True (default; right for any per-batch span set
-    #     that fits a broadcast, i.e. micro-batches and bench scale):
-    #     blobs INNER JOIN broadcast(spans) — the join runs in-place over
-    #     the blob scan partitions and blob bytes never shuffle.
-    #   - broadcast_spans=False (the 10^12-doc full-batch path, where
-    #     even the span side is too big to broadcast): salted span
-    #     repartition + shuffle join on media_ref — span-unique keys
-    #     make the blob shuffle uniform; pair with media_ref-bucketed
-    #     tables to eliminate that shuffle entirely (bucketing DDL in
-    #     sources/binary.py docstring).
+    # never move the blob bytes while a broadcast can avoid it (a blob
+    # shuffle measured 2.1GB written and 9x the run time at 300k docs).
+    # No join hint: Catalyst picks from the sizes it sees. Below
+    # spark.sql.autoBroadcastJoinThreshold it broadcasts the span side and
+    # the join runs in place over the blob scan; above it, a sort-merge
+    # join on media_ref shuffles both sides. spread() is guide §2.5's
+    # input-skew repair: a single-row-group blob file scans as ONE task
+    # and the decode UDF inherits that partitioning; it repartitions only
+    # a frame narrower than the core count.
     media = spans.filter(decodable).select("doc_id", "offset", "media_ref")
-    if broadcast_spans:
-        # guide §2.5 input-skew repair: a single-row-group blob file
-        # scans as ONE task and the decode UDF inherits that
-        # partitioning; spread() repartitions only a frame narrower than
-        # the core count, so at real scale blob bytes still never shuffle
-        matched = spread(blob_cols.join(F.broadcast(media), "media_ref"), heavy=True)
-    else:
-        num_partitions = num_partitions or int(
-            documents.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-        matched = salted_repartition(media, num_partitions, "doc_id", "offset").join(
-            blob_cols, "media_ref"
-        )
+    matched = spread(blob_cols.join(media, "media_ref"), heavy=True)
     decoded = matched.withColumn("ocr", (ocr_udf or ocr_extract)(F.col("content"))).select(
         "doc_id",
         "offset",
@@ -313,8 +294,6 @@ def run_batch(
     documents: DataFrame,
     media_blobs: DataFrame,
     checkpoint: DataFrame | None = None,
-    num_partitions: int | None = None,
-    broadcast_spans: bool = True,
     job_ts: str | None = None,
     ocr_udf=None,
 ) -> DataFrame:
@@ -323,11 +302,9 @@ def run_batch(
     job_ts (the run's fixed timestamp) enables the P2 retry-backoff check
     against the checkpoint's last-attempt timestamps; None skips it.
     """
-    span_results = extract_spans(
-        documents, media_blobs, checkpoint, num_partitions, broadcast_spans,
-        job_ts=job_ts, ocr_udf=ocr_udf,
+    return reassemble(
+        extract_spans(documents, media_blobs, checkpoint, job_ts=job_ts, ocr_udf=ocr_udf)
     )
-    return reassemble(span_results)
 
 
 def run_job(
@@ -344,7 +321,7 @@ def run_job(
     suffix: str,
     addition: str | None,
     metrics_dir: str | None,
-    **plan,
+    ocr_udf=None,
 ) -> None:
     """One OCR job: the batch CLI's run and every service epoch (pmOCR's
     OCR_Dispatch, pmocr.sh:2111, which both modes call).
@@ -358,10 +335,9 @@ def run_job(
 
     `prior` is the lineage as of the resume read (None on a first run),
     persisted here unless the caller already has, so resume, retry
-    counts and metrics share one scan. `plan` (num_partitions,
-    broadcast_spans, ocr_udf) goes to run_batch. The results and `prior`
-    are unpersisted on every exit, so a job that raises leaves no cache
-    behind."""
+    counts and metrics share one scan. `ocr_udf` goes to run_batch. The
+    results and `prior` are unpersisted on every exit, so a job that
+    raises leaves no cache behind."""
     from . import checkpoint as ckpt
 
     if prior is not None and not prior.is_cached:
@@ -369,7 +345,7 @@ def run_job(
     results = None
     try:
         results = run_batch(
-            spark, documents, media_blobs, checkpoint=prior, job_ts=job_ts, **plan
+            spark, documents, media_blobs, checkpoint=prior, job_ts=job_ts, ocr_udf=ocr_udf
         ).persist()
         write_output(
             results, project_targets(results, targets, job_ts, suffix=suffix, addition=addition)

@@ -1815,11 +1815,10 @@ _ANN_ORACLE_COMMON = """
 
 #: ivfpq multi-probe width: queries probe their _NPROBE nearest IVF
 #: clusters — THE recall/cost knob (recall@5 at nprobe 1/2/4 is benched
-#: per round, BENCH/BASELINE.md). Env-overridable so a run can buy
-#: recall without a code edit; read at import so the Spark arm and the
-#: oracle's iq2 CTE (the <<NPROBE>> substitution below) always agree.
-#: Programmatic callers use ivfpq_search(..., n_probe=k) instead.
-_NPROBE = int(__import__("os").environ.get("PMOCR_IVFPQ_NPROBE", "2"))
+#: per round, BENCH/BASELINE.md). One constant, so the Spark arm and the
+#: oracle's iq2 CTE (the <<NPROBE>> substitution below) always agree;
+#: other widths go through ivfpq_search(..., n_probe=k).
+_NPROBE = 2
 
 #: RRF fusion constants (Cormack, Clarke & Buettcher, SIGIR 2009): the
 #: paper's k=60 damping plus a fusion depth of 50 candidates per system
@@ -2445,8 +2444,8 @@ def ivfpq_search(spark, sf_dir, n_probe: int | None = None):
     nearest clusters (candidates whose cluster narrowly beat the query's
     own stay in scope). A (query, neighbor) pair matches at most one
     probe row (the neighbor's cluster is unique), so no dedup is
-    needed. n_probe=None uses the catalog default _NPROBE (env
-    PMOCR_IVFPQ_NPROBE) so the gate arm and the oracle stay in lockstep;
+    needed. n_probe=None uses the catalog default _NPROBE so the gate
+    arm and the oracle stay in lockstep;
     bench.py sweeps {1,2,4} through this parameter and reports the
     recall@5/cost curve per round."""
     from pmocr_spark.operators.pq import SHORTLIST, pq_adc_topk

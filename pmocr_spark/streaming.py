@@ -215,8 +215,6 @@ def monitor(
     targets: list[str] | None = None,
     suffix: str = "_OCR",
     filename_addition: str | None = None,
-    broadcast_spans: bool = True,
-    num_partitions: int | None = None,
     allow_lineage_takeover: bool = False,
     metrics_dir: str | None = None,
     ocr_udf=None,
@@ -397,7 +395,7 @@ def monitor(
                 rows, lineage_dir, f"epoch-{epoch_id}"
             ),
             suffix=suffix, addition=filename_addition, metrics_dir=metrics_dir,
-            num_partitions=num_partitions, broadcast_spans=broadcast_spans, ocr_udf=ocr_udf,
+            ocr_udf=ocr_udf,
         )
 
     writer = stream.writeStream.foreachBatch(process_batch).option(

@@ -55,19 +55,22 @@ def test_config_typed_coercion(tmp_path):
     """Config values are strings; they must coerce to each flag's type:
     truthy-default options stay overridable (suffix), store_true flags
     parse booleans ('false' must not be a truthy string), typed options
-    (num_partitions int) apply their argparse type."""
+    (kwic_window int) apply their argparse type."""
     conf = tmp_path / "typed.conf"
     conf.write_text(
         "batch=true\ninput=i\nblobs=b\noutput=o\nlineage=l\n"
-        "suffix=_CONVERTED\nno_suffix=false\nnum_partitions=8\ndelete_input=true\n"
+        "suffix=_CONVERTED\nno_suffix=false\ndelete_input=true\n"
     )
     a = cli.parse_args(["--config", str(conf)])
     assert a.suffix == "_CONVERTED"
     assert a.no_suffix is False
-    assert a.num_partitions == 8 and isinstance(a.num_partitions, int)
     assert a.delete_input is True
     # explicit CLI still beats the config value
     assert cli.parse_args(["--config", str(conf), "--suffix", "_X"]).suffix == "_X"
+    kconf = tmp_path / "kwic.conf"
+    kconf.write_text("kwic=term\ninput=i\noutput=o\nkwic_window=8\n")
+    k = cli.parse_args(["--config", str(kconf)])
+    assert k.kwic_window == 8 and isinstance(k.kwic_window, int)
 
 
 def test_config_revision_gate(tmp_path):
@@ -142,29 +145,35 @@ def test_naming_flags_and_delete_input(spark, corpus_dir, tmp_path):
     assert row["output_name"] == f"{row['doc_id']}.txt"
 
 
-def test_span_join_flag(tmp_path):
-    a = cli.parse_args(["--batch", "--input", "i", "--blobs", "b", "--output", "o",
-                        "--lineage", "l"])
-    assert a.span_join == "broadcast"
-    conf = tmp_path / "c.conf"
-    conf.write_text("batch=true\ninput=i\nblobs=b\noutput=o\nlineage=l\nspan_join=shuffle\n")
-    assert cli.parse_args(["--config", str(conf)]).span_join == "shuffle"
+def test_batch_shuffle_join_matches_oracle(spark, corpus_dir, expected, tmp_path, monkeypatch):
+    """With the broadcast threshold off (the full-corpus regime, where no
+    span side fits a broadcast) the span join is a sort-merge join; the
+    batch CLI's results still match the oracle."""
+    from pmocr_spark import session
 
+    get_spark = session.get_spark
 
-def test_batch_shuffle_join_matches_oracle(spark, corpus_dir, expected, tmp_path):
-    """--span-join shuffle (the full-corpus path: salted repartition +
-    shuffle join) produces identical results to the broadcast path."""
+    def no_broadcast(*a, **kw):
+        # cli.main's get_spark re-applies the session defaults
+        s = get_spark(*a, **kw)
+        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        return s
+
+    monkeypatch.setattr(session, "get_spark", no_broadcast)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     out = str(tmp_path / "out")
-    cli.main(
-        [
-            "--batch",
-            "--input", f"{corpus_dir}/documents.parquet",
-            "--blobs", f"{corpus_dir}/media_blobs.parquet",
-            "--output", out,
-            "--lineage", str(tmp_path / "lineage"),
-            "--span-join", "shuffle",
-        ]
-    )
+    try:
+        cli.main(
+            [
+                "--batch",
+                "--input", f"{corpus_dir}/documents.parquet",
+                "--blobs", f"{corpus_dir}/media_blobs.parquet",
+                "--output", out,
+                "--lineage", str(tmp_path / "lineage"),
+            ]
+        )
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     rows = {r["doc_id"]: r for r in spark.read.parquet(out).collect()}
     assert len(rows) == len(expected)
     for doc_id, exp in expected.items():
@@ -198,25 +207,25 @@ def test_batch_pdf_target_roundtrip(spark, corpus_dir, expected, tmp_path):
 
 
 def test_explicit_falsy_cli_value_beats_config(tmp_path):
-    """An EXPLICIT falsy CLI value (--num-partitions 0) is not 'unset':
+    """An EXPLICIT falsy CLI value (--kwic-window 0) is not 'unset':
     the layered-precedence check must test `is None` for valued options
     (0 == False would otherwise hand the win back to the config)."""
     conf = tmp_path / "c.conf"
-    conf.write_text("batch=true\ninput=i\nblobs=b\noutput=o\nlineage=l\nnum_partitions=16\n")
-    assert cli.parse_args(["--config", str(conf)]).num_partitions == 16
-    assert cli.parse_args(["--config", str(conf), "--num-partitions", "0"]).num_partitions == 0
+    conf.write_text("kwic=term\ninput=i\noutput=o\nkwic_window=16\n")
+    assert cli.parse_args(["--config", str(conf)]).kwic_window == 16
+    assert cli.parse_args(["--config", str(conf), "--kwic-window", "0"]).kwic_window == 0
 
 
 def test_json_config_key_normalization_and_list_targets(tmp_path):
     """JSON configs get the same key normalization as key=value files
-    ('span-join' -> span_join) and accept natural list-valued targets."""
+    ('job-ts' -> job_ts) and accept natural list-valued targets."""
     conf = tmp_path / "j.json"
     conf.write_text(
         '{"batch": true, "input": "i", "blobs": "b", "output": "o", '
-        '"lineage": "l", "span-join": "shuffle", "targets": ["txt", "pdf"]}'
+        '"lineage": "l", "job-ts": "2024-02-01T00:00:00Z", "targets": ["txt", "pdf"]}'
     )
     a = cli.parse_args(["--config", str(conf)])
-    assert a.span_join == "shuffle"
+    assert a.job_ts == "2024-02-01T00:00:00Z"
     assert a.target_list == ["txt", "pdf"]
 
 
@@ -229,6 +238,34 @@ def test_skip_txt_pdf_parity_flag():
     a = cli.parse_args(["--batch", "--skip-txt-pdf", "--input", "i", "--blobs", "b",
                         "--output", "o", "--lineage", "l"])
     assert a.skip_txt_pdf is True
+
+
+def test_job_ts_advisory(spark, tmp_path, capsys):
+    """P2 retry runs on the --job-ts clock: a re-run whose --job-ts does
+    not advance past the lineage's last ts is warned that failed docs stay
+    postponed; once --job-ts advances, no warning."""
+    from pmocr_spark import corpus
+
+    src = str(tmp_path / "corpus")
+    corpus.write(src, n_docs=4, seed=3)
+
+    def run(job_ts):
+        cli.main(
+            [
+                "--batch",
+                "--input", f"{src}/documents.parquet",
+                "--blobs", f"{src}/media_blobs.parquet",
+                "--output", str(tmp_path / "out"),
+                "--lineage", str(tmp_path / "lineage"),
+                "--job-ts", job_ts,
+            ]
+        )
+        return capsys.readouterr().err
+
+    assert "does not advance" not in run("2024-01-01T00:00:00Z")
+    err = run("2024-01-01T00:00:00Z")
+    assert "warning: --job-ts '2024-01-01 00:00:00' does not advance" in err, err
+    assert "does not advance" not in run("2024-01-01T00:10:00Z")
 
 
 def test_metrics_flag_writes_partition_report(spark, corpus_dir, tmp_path):

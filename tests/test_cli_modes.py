@@ -29,13 +29,13 @@ OPTION_STRINGS = frozenset(
     --input --input-format --ivf-nprobe --job-ts --keyword-method --keywords
     --kwic --kwic-window --layout --layout-files --lineage --lsh-plan --master
     --max-df --merge-dedup-index --metrics --monitor --no-suffix
-    --num-partitions --once --optimize-layout --output --output-format
+    --once --optimize-layout --output --output-format
     --pagerank --partition-by --phash-dedup --phash-max-hamming --pq-topk
     --pr-iters --probe-bloom-index --probe-broadcast --probe-dedup-index
     --probe-pq-index --query --raw --rerank-vectors --robots-agent
     --robots-filter --run-id --score-quality --search-phrase --search-text
     --search-topk --service --skip-txt-pdf --snm-dedup --snm-min-jaccard
-    --snm-passes --snm-window --span-join --spell-fix --srp-dedup
+    --snm-passes --snm-window --spell-fix --srp-dedup
     --stream-checkpoint --substr-k --suffix --summarize --summary-k --tables
     --target-file-mb --targets --text-col --train-bpe --train-codebook
     --train-quality --train-unigram --transcribe-audio --transcribe-video
@@ -109,7 +109,7 @@ def _error_line(capsys, argv) -> str:
 
 def test_option_strings():
     actions = [a for a in cli.build_parser()._actions if a.dest != "help"]
-    assert len(actions) == 110
+    assert len(actions) == 108
     assert {s for a in actions for s in a.option_strings} == OPTION_STRINGS
 
 
@@ -212,8 +212,6 @@ _PHRASE = ["--search-phrase", "a b", "--input", "i", "--output", "o"]
         _BATCH + ["--probe-broadcast", "force"],
         _BATCH + ["--text-col", "txt"],
         _KEYWORDS + ["--engine", "tesseract"],
-        _KEYWORDS + ["--span-join", "shuffle"],
-        _KEYWORDS + ["--num-partitions", "4"],
         _KEYWORDS + ["--targets", "txt,csv"],
         _KEYWORDS + ["--job-ts", "2024-02-01T00:00:00Z"],
         _KEYWORDS + ["--run-id", "run-1"],

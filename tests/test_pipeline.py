@@ -59,9 +59,7 @@ def test_partition_invariance(spark, corpus_dir, expected):
     """Byte-identical output under a different partitioning of the input
     (SURVEY.md §7.4.1: ordering must come from data, not partition order)."""
     docs, blobs = load(spark, corpus_dir)
-    out = pipeline.run_batch(
-        spark, docs.repartition(17), blobs.repartition(5), num_partitions=13
-    )
+    out = pipeline.run_batch(spark, docs.repartition(17), blobs.repartition(5))
     rows = {r["doc_id"]: r.asDict(recursive=True) for r in out.collect()}
     for doc_id, exp in expected.items():
         got_spans = [
@@ -211,9 +209,10 @@ def test_two_corrupt_spans_first_error(spark):
     assert "truncated" in got["m1"]["error"]
 
 
-@pytest.mark.parametrize("broadcast_spans", [True, False])
-def test_span_routes_match_oracle(spark, broadcast_spans):
-    """Every route of extract_spans, in both span-join regimes: a blob
+@pytest.mark.parametrize("threshold", ["64MB", "-1"])
+def test_span_routes_match_oracle(spark, threshold):
+    """Every route of extract_spans, under both joins Catalyst plans for
+    it (64MB: the span side broadcasts; -1: sort-merge join): a blob
     row that is absent, a null media_ref and a null-content blob row all
     give the missing-blob error; a text span keeps no media_ref even when
     it names an existing blob; a disallowed kind is skipped. Per span
@@ -252,11 +251,17 @@ def test_span_routes_match_oracle(spark, broadcast_spans):
         "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>")
     blobs = spark.createDataFrame(blobs_t.to_pylist(),
         schema="media_ref string, kind string, content binary")
-    plan = dict(broadcast_spans=broadcast_spans, num_partitions=3)
     exp = corpus.reference_convert(docs_t, blobs_t)
 
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    try:
+        span_rows = pipeline.extract_spans(docs, blobs).collect()
+        doc_rows = pipeline.run_batch(spark, docs, blobs).collect()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     spans = {}
-    for r in pipeline.extract_spans(docs, blobs, **plan).collect():
+    for r in span_rows:
         spans.setdefault(r["doc_id"], []).append(
             (r["offset"], r["kind"], r["text"], r["media_ref"], r["error"])
         )
@@ -265,7 +270,7 @@ def test_span_routes_match_oracle(spark, broadcast_spans):
         assert sorted(spans[doc_id]) == want, doc_id
     assert [s[1] for s in exp["r1"]["spans"]] == ["error"] * 3 + ["text", "skipped", "text"]
 
-    docs_out = {r["doc_id"]: r for r in pipeline.run_batch(spark, docs, blobs, **plan).collect()}
+    docs_out = {r["doc_id"]: r for r in doc_rows}
     assert {d: (r["status"], r["error"]) for d, r in docs_out.items()} == {
         d: (e["status"], e["error"]) for d, e in exp.items()
     }

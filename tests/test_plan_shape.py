@@ -82,6 +82,74 @@ def test_pipeline_udf_plan(spark, corpus_dir):
         prior.unpersist()
 
 
+def _span_join_sides(spark, docs, blobs) -> tuple[list[str], list[str]]:
+    """run_batch with the broadcast threshold off: the node names under
+    each side of its one inner sort-merge join on media_ref, as
+    (span side, blob side)."""
+    import re
+
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plan = shape.formatted_plan(pipeline.run_batch(spark, docs, blobs))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    tree, details = plan.split("\n\n", 1)
+    # (depth, node name, node id) per line of the tree section
+    nodes = [
+        ((len(ln) - len(ln.lstrip(" :+-"))) // 3, m.group(1), m.group(2))
+        for ln in tree.splitlines()
+        if (m := re.search(r"([A-Za-z][\w ]*?)\s+\((\d+)\)", ln))
+    ]
+    joins = [i for i, (_, name, _) in enumerate(nodes) if name == "SortMergeJoin Inner"]
+    assert len(joins) == 1, plan
+    depth, _, join_id = nodes[joins[0]]
+    assert re.search(
+        rf"\({join_id}\) SortMergeJoin[^\n]*\nLeft keys \[1\]: \[media_ref#\d+\]\n"
+        r"Right keys \[1\]: \[media_ref#\d+\]", details
+    ), plan
+    sides: list[list[tuple]] = []
+    for d, name, nid in nodes[joins[0] + 1:]:
+        if d <= depth:
+            break
+        if d == depth + 1:
+            sides.append([])
+        sides[-1].append((name, nid))
+    documents = {
+        nid for nid in re.findall(r"\((\d+)\) Scan parquet", details)
+        if re.search(rf"\({nid}\) Scan parquet[^\n]*\n(?:[^\n]+\n)*?Location: [^\n]*documents\.parquet", details)
+    }
+    span_side = [s for s in sides if documents & {nid for _, nid in s}]
+    assert len(sides) == 2 and len(span_side) == 1, plan
+    blob_side = sides[1 - sides.index(span_side[0])]
+    return [name for name, _ in span_side[0]], [name for name, _ in blob_side]
+
+
+def test_span_join_sort_merge_above_broadcast_threshold(spark, corpus_dir):
+    """With no span side small enough to broadcast, the one span join is
+    a sort-merge join on media_ref, and the spans cross exactly one
+    exchange between the documents scan and it."""
+    docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
+    blobs = spark.read.parquet(f"{corpus_dir}/media_blobs.parquet")
+    span_side, blob_side = _span_join_sides(spark, docs, blobs)
+    assert span_side.count("Exchange") == 1, span_side
+    assert blob_side.count("Exchange") == 1, blob_side
+
+
+def test_span_join_bucketed_blobs_keep_blob_bytes(spark, corpus_dir):
+    """A blob table bucketed by media_ref (read as a catalog table, which
+    carries the bucket spec) spares the sort-merge join's blob-side
+    exchange: only the spans shuffle."""
+    from pmocr_spark.operators import bucketed
+
+    docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
+    blobs = spark.read.parquet(f"{corpus_dir}/media_blobs.parquet")
+    _, blobs_tbl = bucketed.write_bucketed(spark, docs, blobs, n_buckets=4, prefix="pmocr_smj")
+    span_side, blob_side = _span_join_sides(spark, docs, spark.table(blobs_tbl))
+    assert span_side.count("Exchange") == 1, span_side
+    assert "Exchange" not in blob_side, blob_side
+
+
 def test_anti_join_resume_not_cartesian(spark):
     df = QUERY_FNS["q03_anti_join_resume"](spark, SF)
     assert not shape.has_cartesian(df)
