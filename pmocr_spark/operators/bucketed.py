@@ -1,17 +1,14 @@
 """Bucketed (co-located) blob join — the zero-shuffle path at 10^12 docs.
 
-While the span side fits a broadcast, Catalyst broadcasts it in the
-engine's blob join (pipeline.extract_spans) and blob bytes never move.
-At full 10^12-doc scale neither side broadcasts, and the join becomes a
-sort-merge join on media_ref that shuffles both sides. The answer is
-storage-level co-location:
-  - a blob table bucketed by media_ref and read as a catalog table
-    (spark.table) spares that join's blob-side exchange: only the spans
-    shuffle (tests/test_plan_shape.py pins it);
-  - with BOTH the exploded media-span table and the blob table bucketed,
-    bucketed_join is Exchange-free (each bucket pair joins in place),
-    which is how the 100TB batch avoids shuffling the blob corpus every
-    run.
+The engine's blob join (pipeline.extract_spans) broadcasts the span
+side, so blob bytes never move while a batch's spans fit a broadcast.
+At full 10^12-doc scale they do not, and neither side broadcasts. The
+answer is storage-level co-location: write BOTH the exploded
+media-span table and the blob table bucketed by media_ref — every
+subsequent join on media_ref is then Exchange-free (each bucket pair
+joins in place; bucketed_join, pinned in tests/test_plan_shape.py),
+which is how the 100TB batch avoids shuffling the blob corpus every
+run.
 
 pmOCR has no analog (one process per file never joins anything); this
 is the Spark-native realization of "data lives pre-partitioned by its

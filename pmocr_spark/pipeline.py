@@ -9,8 +9,8 @@ declarative DataFrame plan:
     -> explode(spans) once (span granularity dissolves media-heavy-doc skew)
     -> two routes from that one span frame:
        decoded: media/html/audio/video spans -> inner join media_blobs
-                (one join; Catalyst broadcasts the span side or plans a
-                sort-merge join) -> fused pandas-UDF OCR (M1-M3)
+                (one join, span side broadcast: blob bytes never move)
+                -> fused pandas-UDF OCR (M1-M3)
        plain:   one JVM projection — text spans normalized (F5
                 searchable-text bypass, pmocr.sh:2162-2165), disallowed
                 kinds skipped (F1, default.conf:14), decodable spans with
@@ -63,7 +63,9 @@ def salted_repartition(df: DataFrame, num_partitions: int, *key_cols: str) -> Da
     At 10^12-doc scale a media-heavy document (archetype A5) would pin
     one task if partitioning were by doc_id; hashing the span-level key
     (doc_id, offset) spreads its spans across all partitions
-    (BASELINE.json north_rule; SURVEY.md §7.4.4).
+    (BASELINE.json north_rule; SURVEY.md §7.4.4). extract_spans does not
+    call it (its span join broadcasts the spans); bench.py's span-regime
+    run and tests/test_skew.py do.
     """
     # repartition on the raw 64-bit hash: pre-modding to [0, n) and
     # letting Spark hash AGAIN would map n values onto n partitions with
@@ -170,17 +172,21 @@ def extract_spans(
     decodable = F.col("kind").isin(*DECODABLE_KINDS)
     blob_cols = media_blobs.select("media_ref", "content")
 
-    # never move the blob bytes while a broadcast can avoid it (a blob
-    # shuffle measured 2.1GB written and 9x the run time at 300k docs).
-    # No join hint: Catalyst picks from the sizes it sees. Below
-    # spark.sql.autoBroadcastJoinThreshold it broadcasts the span side and
-    # the join runs in place over the blob scan; above it, a sort-merge
-    # join on media_ref shuffles both sides. spread() is guide §2.5's
-    # input-skew repair: a single-row-group blob file scans as ONE task
-    # and the decode UDF inherits that partitioning; it repartitions only
-    # a frame narrower than the core count.
+    # never move the blob bytes: the span side is broadcast by hint and
+    # the join runs in place over the blob scan. Unhinted, Catalyst
+    # broadcasts whichever side it estimates smaller (the blob table, for
+    # a text-heavy corpus), or plans a sort-merge join that shuffles every
+    # blob byte once the span estimate passes autoBroadcastJoinThreshold.
+    # That estimate scales from the whole documents file, so a resume
+    # with few pending spans crosses it too (a blob shuffle measured 2.1GB
+    # written and 9x the run time at 300k docs). A span set too big to
+    # broadcast needs the media_ref-bucketed layout (operators/bucketed.py).
+    # spread() is guide §2.5's input-skew repair: a single-row-group blob
+    # file scans as ONE task and the decode UDF inherits that
+    # partitioning; it repartitions only a frame narrower than the core
+    # count.
     media = spans.filter(decodable).select("doc_id", "offset", "media_ref")
-    matched = spread(blob_cols.join(media, "media_ref"), heavy=True)
+    matched = spread(blob_cols.join(F.broadcast(media), "media_ref"), heavy=True)
     decoded = matched.withColumn("ocr", (ocr_udf or ocr_extract)(F.col("content"))).select(
         "doc_id",
         "offset",

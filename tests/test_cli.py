@@ -146,8 +146,9 @@ def test_naming_flags_and_delete_input(spark, corpus_dir, tmp_path):
 
 
 def test_batch_shuffle_join_matches_oracle(spark, corpus_dir, expected, tmp_path, monkeypatch):
-    """With the broadcast threshold off (the full-corpus regime, where no
-    span side fits a broadcast) the span join is a sort-merge join; the
+    """With the broadcast threshold off (the full-corpus setting, where
+    only a hinted join broadcasts) the plain route's anti-join becomes a
+    sort-merge join and the span join still broadcasts its span side; the
     batch CLI's results still match the oracle."""
     from pmocr_spark import session
 

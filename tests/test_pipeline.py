@@ -211,8 +211,9 @@ def test_two_corrupt_spans_first_error(spark):
 
 @pytest.mark.parametrize("threshold", ["64MB", "-1"])
 def test_span_routes_match_oracle(spark, threshold):
-    """Every route of extract_spans, under both joins Catalyst plans for
-    it (64MB: the span side broadcasts; -1: sort-merge join): a blob
+    """Every route of extract_spans, under both broadcast thresholds
+    (64MB: every join broadcasts; -1: the plain route's anti-join is a
+    sort-merge join, the hinted span join still broadcasts): a blob
     row that is absent, a null media_ref and a null-content blob row all
     give the missing-blob error; a text span keeps no media_ref even when
     it names an existing blob; a disallowed kind is skipped. Per span

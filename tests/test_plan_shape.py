@@ -3,6 +3,7 @@ we'd want at 100TB — pushdown, pruning, broadcasts, no cartesians."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pmocr_spark import pipeline
@@ -82,14 +83,14 @@ def test_pipeline_udf_plan(spark, corpus_dir):
         prior.unpersist()
 
 
-def _span_join_sides(spark, docs, blobs) -> tuple[list[str], list[str]]:
-    """run_batch with the broadcast threshold off: the node names under
-    each side of its one inner sort-merge join on media_ref, as
-    (span side, blob side)."""
+def _span_join_sides(spark, docs, blobs, threshold: str) -> tuple[str, list[str], list[str]]:
+    """run_batch under the given broadcast threshold: the one inner join
+    on media_ref, as (join node name, node names under its span side,
+    node names under its blob side)."""
     import re
 
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
     try:
         plan = shape.formatted_plan(pipeline.run_batch(spark, docs, blobs))
     finally:
@@ -101,11 +102,13 @@ def _span_join_sides(spark, docs, blobs) -> tuple[list[str], list[str]]:
         for ln in tree.splitlines()
         if (m := re.search(r"([A-Za-z][\w ]*?)\s+\((\d+)\)", ln))
     ]
-    joins = [i for i, (_, name, _) in enumerate(nodes) if name == "SortMergeJoin Inner"]
+    joins = [
+        i for i, (_, name, _) in enumerate(nodes) if re.fullmatch(r"\w+Join Inner( Build\w+)?", name)
+    ]
     assert len(joins) == 1, plan
-    depth, _, join_id = nodes[joins[0]]
+    depth, join_name, join_id = nodes[joins[0]]
     assert re.search(
-        rf"\({join_id}\) SortMergeJoin[^\n]*\nLeft keys \[1\]: \[media_ref#\d+\]\n"
+        rf"\({join_id}\) \w+Join[^\n]*\nLeft keys \[1\]: \[media_ref#\d+\]\n"
         r"Right keys \[1\]: \[media_ref#\d+\]", details
     ), plan
     sides: list[list[tuple]] = []
@@ -122,32 +125,47 @@ def _span_join_sides(spark, docs, blobs) -> tuple[list[str], list[str]]:
     span_side = [s for s in sides if documents & {nid for _, nid in s}]
     assert len(sides) == 2 and len(span_side) == 1, plan
     blob_side = sides[1 - sides.index(span_side[0])]
-    return [name for name, _ in span_side[0]], [name for name, _ in blob_side]
+    return join_name, [name for name, _ in span_side[0]], [name for name, _ in blob_side]
 
 
-def test_span_join_sort_merge_above_broadcast_threshold(spark, corpus_dir):
-    """With no span side small enough to broadcast, the one span join is
-    a sort-merge join on media_ref, and the spans cross exactly one
-    exchange between the documents scan and it."""
-    docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
-    blobs = spark.read.parquet(f"{corpus_dir}/media_blobs.parquet")
-    span_side, blob_side = _span_join_sides(spark, docs, blobs)
-    assert span_side.count("Exchange") == 1, span_side
-    assert blob_side.count("Exchange") == 1, blob_side
+@pytest.mark.parametrize("threshold", ["64MB", "-1"])
+def test_span_join_broadcasts_spans(spark, corpus_dir, tmp_path, threshold):
+    """The span join broadcasts the span side and nothing moves the blob
+    side, for a text-heavy documents table whose size estimate outweighs
+    the blob table's: at 64MB (both under it) the smaller blob table is
+    not the one broadcast, and at -1 the join is no sort-merge join that
+    shuffles blob bytes."""
+    import os
+    import random
 
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-def test_span_join_bucketed_blobs_keep_blob_bytes(spark, corpus_dir):
-    """A blob table bucketed by media_ref (read as a catalog table, which
-    carries the bucket spec) spares the sort-merge join's blob-side
-    exchange: only the spans shuffle."""
-    from pmocr_spark.operators import bucketed
+    from pmocr_spark import corpus
 
-    docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
-    blobs = spark.read.parquet(f"{corpus_dir}/media_blobs.parquet")
-    _, blobs_tbl = bucketed.write_bucketed(spark, docs, blobs, n_buckets=4, prefix="pmocr_smj")
-    span_side, blob_side = _span_join_sides(spark, docs, spark.table(blobs_tbl))
-    assert span_side.count("Exchange") == 1, span_side
-    assert "Exchange" not in blob_side, blob_side
+    rng = random.Random(0)
+    text_docs = pa.Table.from_pylist(
+        [
+            {"doc_id": f"t{i}", "spans": [{
+                "kind": "text", "media_ref": None, "offset": 0,
+                "text": "".join(rng.choice("abcdefgh \n") for _ in range(4096)),
+            }]}
+            for i in range(40)
+        ],
+        schema=corpus.DOCUMENTS_SCHEMA,
+    )
+    base = pq.read_table(f"{corpus_dir}/documents.parquet").cast(corpus.DOCUMENTS_SCHEMA)
+    pq.write_table(pa.concat_tables([base, text_docs]), tmp_path / "documents.parquet")
+    pq.write_table(pq.read_table(f"{corpus_dir}/media_blobs.parquet").slice(0, 20),
+                   tmp_path / "media_blobs.parquet")
+    docs_bytes = os.path.getsize(tmp_path / "documents.parquet")
+    assert docs_bytes > 2 * os.path.getsize(tmp_path / "media_blobs.parquet"), docs_bytes
+    docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
+    blobs = spark.read.parquet(str(tmp_path / "media_blobs.parquet"))
+    join_name, span_side, blob_side = _span_join_sides(spark, docs, blobs, threshold)
+    assert join_name.startswith("BroadcastHashJoin"), join_name
+    assert "BroadcastExchange" in span_side, span_side
+    assert not [n for n in blob_side if "Exchange" in n], blob_side
 
 
 def test_anti_join_resume_not_cartesian(spark):
